@@ -235,8 +235,8 @@ object ScaleProbe {
                    idBuckets: Int): String = {
       val p = java.nio.file.Files
         .createTempDirectory("graft_scale_ndstore").toString
-      graft.operators.Dedup.writeNearDupIndexStore(idx, p, bands = 32,
-        bandBuckets = bandBuckets, idBuckets = idBuckets)
+      graft.operators.IndexStore.write(graft.operators.IndexStore.Lexical,
+        idx, p, width = 32, bandBuckets = bandBuckets, idBuckets = idBuckets)
       p
     }
     // each scale's index is built ONCE and feeds both the in-memory
@@ -258,10 +258,10 @@ object ScaleProbe {
 
     // PERSISTED-STORE probe legs (the flat path): a FIXED micro-batch
     // (deployment-shaped — a per-run batch is vanishingly small next to
-    // the standing corpus) probed against writeNearDupIndexStore stores
+    // the standing corpus) probed against IndexStore.Lexical stores
     // of the ×1 / ×k / ×k2 corpora, with bucket counts MAINTAINED
     // proportional to corpus size (the banded-width rule applied to
-    // storage; rebandIndexStore is that maintenance step). Per-probe
+    // storage; IndexStore.reband is that maintenance step). Per-probe
     // read volume is (probed buckets / bandBuckets) × corpus — constant
     // when buckets track the corpus — so the ratio here is the
     // corpus-size-independence claim measured, vs the in-memory legs

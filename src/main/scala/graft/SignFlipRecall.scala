@@ -5,9 +5,9 @@ import org.apache.spark.sql.functions._
 
 /** REUSABLE sign-flip recall harness (VERDICT r19 #8): the only probe
   * construction that can grade BORDERLINE banding recall on this
-  * testdata, extracted from Round19Probe's `sem100b` section so future
-  * banding/width changes re-measure recall instead of re-deriving the
-  * probe.
+  * testdata (the round-19 `sem100b` measurement, recorded in
+  * PROBES_r19.json), kept as a main so future banding/width changes
+  * re-measure recall instead of re-deriving the probe.
   *
   * Why sign flips: the testdata embeddings are ~roll-invariant
   * (cos(v, roll(v, c)) ≥ 0.95 measured — PROBES_r19), so dimension-

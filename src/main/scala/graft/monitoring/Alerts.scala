@@ -143,7 +143,9 @@ object Alerts {
     * `alerts` table keyed by batch id — a replayed batch re-emits the
     * same alerts over its prior attempt instead of duplicating them.
     * The one-row max() lookup per micro-batch is the only driver-side
-    * step.
+    * step. The three columns the probes read are persisted around the
+    * two actions (the lookup and the upsert), so the source is read
+    * once per micro-batch.
     */
   def streamingSink(scored: DataFrame, url: String, checkpoint: String,
                     table: String = "alerts")
@@ -151,11 +153,14 @@ object Alerts {
     scored.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val maxTs = batch.agg(max(col("ts"))).head.get(0)
-        if (maxTs != null) {
-          graft.sources.JdbcSink.upsertBatch(
-            apply(batch, lit(maxTs)), batchId, url, table)
-        }
+        val once = batch.select(col("ts"), col("quality_score"),
+          col("anomaly_score")).persist()
+        try {
+          val maxTs = once.agg(max(col("ts"))).head().get(0)
+          if (maxTs != null)
+            graft.sources.JdbcSink.upsertBatch(
+              apply(once, lit(maxTs)), batchId, url, table)
+        } finally once.unpersist()
       }
 
   /** St4/S9 — streaming CUSUM drift alarms delivered end-to-end: map

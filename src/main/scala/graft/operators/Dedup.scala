@@ -629,6 +629,34 @@ object Dedup {
         element_at(sig, b * lit(rowsPerBand) + lit(r + 1))): _*))
   }
 
+  /** `(id, band, bh)`: one row per band key of a [[nearDupIndex]]
+    * frame's signature — the probe side, the index side and the
+    * persisted store's `banded/` table all band through it. */
+  private[operators] def bandKeyRows(index: DataFrame, bands: Int): DataFrame =
+    index.select(col("id"), posexplode(sigBandKeys(col("sig"), bands)))
+      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bh")
+
+  /** The verify fetch of a delta probe core: the `fetched0` rows whose
+    * `id_c` is among `candIds`, semi-reduced through a broadcast while
+    * the distinct candidate count stays under `maxIds`, else through a
+    * shuffle-hash left-semi. Without `knownCount` the candidate ids are
+    * checkpointed and counted first (two sequential jobs); with it, the
+    * broadcast build evaluates the candidate-scale banding join lazily
+    * (the r17 shape, measured flat). */
+  private[operators] def candidateFetch(fetched0: DataFrame,
+                                        candIds: DataFrame,
+                                        knownCount: Option[Long],
+                                        maxIds: Long): DataFrame = {
+    val (ids, n) = knownCount match {
+      case Some(n) => (candIds, n)
+      case None =>
+        val c = candIds.localCheckpoint()
+        (c, c.count())
+    }
+    if (n <= maxIds) fetched0.join(broadcast(ids), "id_c")
+    else fetched0.join(ids.hint("shuffle_hash"), Seq("id_c"), "left_semi")
+  }
+
   /** INCREMENTAL banded near-dup — [[deltaDedup]]'s contract for the
     * NEAR-duplicate regime: classify every `incoming` document against
     * the standing corpus represented by a persisted [[nearDupIndex]]
@@ -715,12 +743,8 @@ object Dedup {
       s"incomingIndex must be a nearDupIndex frame (id, sh, hs, sig); got " +
         incomingIndex.columns.mkString(", "))
     val incIdx = incomingIndex
-    val incB = incIdx.select(col("id").as("id_i"),
-      posexplode(sigBandKeys(col("sig"), bands)))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bh")
-    val corpusB0 = index.select(col("id").as("id_c"),
-      posexplode(sigBandKeys(col("sig"), bands)))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bh")
+    val incB = bandKeyRows(incIdx, bands).withColumnRenamed("id", "id_i")
+    val corpusB0 = bandKeyRows(index, bands).withColumnRenamed("id", "id_c")
     // cross-leg hot-bucket relief valve (round-17 verdict #2):
     // `hotBucketDrop` now applies to the STANDING side too — one batch
     // doc landing in a template-hot corpus bucket otherwise makes the
@@ -784,29 +808,12 @@ object Dedup {
     val candIdsPlan = candPairs.select(col("id_c")).distinct()
     val fetched0 = index.select(col("id").as("id_c"), col("sh").as("sh_c"),
       col("hs").as("hs_c"))
-    // `knownCandCount` (optimization round 21): the store probe's
-    // bucket-pruning job already counts the distinct candidate ids as a
-    // free aggregate of the collect it runs anyway, so the store path
-    // skips the materialize+count pair here (two fewer sequential jobs
-    // per probe) and the broadcast build evaluates the candidate-scale
-    // banding join lazily — the r17 shape, measured flat. A count taken
-    // before hot-bucket dropping can only over-estimate, which only
-    // flips the guard toward the degraded-but-safe shuffle semi.
-    val fetched = knownCandCount match {
-      case Some(n) =>
-        if (n <= maxFetchBroadcastIds)
-          fetched0.join(broadcast(candIdsPlan), "id_c")
-        else
-          fetched0.join(candIdsPlan.hint("shuffle_hash"), Seq("id_c"),
-            "left_semi")
-      case None =>
-        val candIds = candIdsPlan.localCheckpoint()
-        if (candIds.count() <= maxFetchBroadcastIds)
-          fetched0.join(broadcast(candIds), "id_c")
-        else
-          fetched0.join(candIds.hint("shuffle_hash"), Seq("id_c"),
-            "left_semi")
-    }
+    // `knownCandCount` comes from the store probe's bucket-pruning
+    // collect (optimization round 21). A count taken before hot-bucket
+    // dropping can only over-estimate, which only flips the guard toward
+    // the degraded-but-safe shuffle semi.
+    val fetched = candidateFetch(fetched0, candIdsPlan, knownCandCount,
+      maxFetchBroadcastIds)
     val corpusMatch = candPairs
       .join(broadcast(incIdx.select(col("id").as("id_i"),
         col("sh").as("sh_i"), col("hs").as("hs_i"))), "id_i")
@@ -839,217 +846,27 @@ object Dedup {
 
   // ---------------------------------------- persisted near-dup index store
 
-  /** The banded-key table of a [[nearDupIndex]] frame, bucketed for
-    * partition pruning: `(id, band, bh, bkt)` with
-    * `bkt = bh mod bandBuckets`. */
-  private def bandedRows(index: DataFrame, bands: Int,
-                         bandBuckets: Int): DataFrame =
-    index.select(col("id"), posexplode(sigBandKeys(col("sig"), bands)))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bh")
-      .withColumn("bkt", pmod(col("bh"), lit(bandBuckets.toLong)))
+  /** The active store directory of `path` ([[IndexStore.resolveStoreDir]]). */
+  def resolveStoreDir(spark: SparkSession, path: String): String =
+    IndexStore.resolveStoreDir(spark, path)
 
-  /** Driver-side memo for store `meta/` tables (optimization round 21,
-    * guide §1.2 — fewer jobs): every store entry point re-read its
-    * one-row meta parquet through a full Spark job (plan + schedule +
-    * collect ≈ 50–150 ms each; the maintenance-sequence queries pay it
-    * 4–6× per run). A store directory's meta is written exactly once —
-    * appends never touch it, compaction/rebanding write NEW directories
-    * (blue/green), managed versions are immutable — so the value is
-    * cacheable keyed on the resolved directory, guarded by the meta
-    * directory's filesystem modification time (one FS RPC, ~µs locally)
-    * so a same-path rewrite (tests, external tools) invalidates
-    * correctly. Values are 3-int tuples; the map stays trivially small.
+  /** [[deltaNearDup]] against a persisted [[IndexStore.Lexical]] store —
+    * the corpus-size-independent probe: [[IndexStore.fetchCandidates]]
+    * reads only the band-buckets the batch's keys hash to and the
+    * candidates' id-buckets, and the probe core runs over that pruned
+    * payload at the store's recorded width. Decisions are IDENTICAL to
+    * [[deltaNearDupFromIndex]] over the full index frame.
     */
-  private val storeMetaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, AnyRef)]()
-
-  private[operators] def cachedMeta[T <: AnyRef](spark: SparkSession,
-                                                 metaDir: String)(
-      read: => T): T = {
-    val mtime =
-      try {
-        val (p, fs) = hadoopFs(spark, metaDir)
-        fs.getFileStatus(p).getModificationTime
-      } catch { case _: Throwable => -1L }
-    if (mtime < 0) read // unstattable path: no memo, read through
-    else storeMetaCache.compute(metaDir, (_, prev) => prev match {
-      case (t, v) if t == mtime => (t, v)
-      case _ => (mtime, read)
-    })._2.asInstanceOf[T]
-  }
-
-  /** Store meta is a handful of layout ints written exactly once per
-    * store directory — writing it as a one-row parquet TABLE cost a
-    * full Spark job (plan + schedule + task + commit ≈ 100–200 ms) per
-    * store create and another per cold read, and the maintenance-
-    * sequence queries create 3+ store versions per run (optimization
-    * round 21, guide §1.2 — fewer driver-sync jobs). New stores write
-    * `meta` as a PLAIN KEY=VALUE FILE via the filesystem client (zero
-    * Spark jobs either side); readers fall back to the legacy parquet
-    * directory layout so pre-existing stores stay readable. The
-    * [[cachedMeta]] mtime guard works unchanged (a file's mtime moves
-    * on rewrite exactly like a directory's).
-    */
-  private[operators] def writeMetaFile(spark: SparkSession, metaPath: String,
-                                       kv: (String, Int)*): Unit = {
-    val (p, fs) = hadoopFs(spark, metaPath)
-    val out = fs.create(p, true)
-    try out.write(kv.map { case (k, v) => s"$k=$v" }.mkString("\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
-  private[operators] def readMetaFile(spark: SparkSession,
-                                      metaPath: String): Option[Map[String, Int]] = {
-    val (p, fs) = hadoopFs(spark, metaPath)
-    val isFile =
-      try fs.getFileStatus(p).isFile
-      catch { case _: java.io.FileNotFoundException => false }
-    if (!isFile) None
-    else {
-      val in = fs.open(p)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .filter(_.contains("=")).map { l =>
-          val Array(k, v) = l.split("=", 2); k -> v.trim.toInt
-        }.toMap)
-      finally in.close()
-    }
-  }
-
-  private def readStoreMeta(spark: SparkSession,
-                            path: String): (Int, Int, Int) =
-    cachedMeta(spark, s"$path/meta") {
-      readMetaFile(spark, s"$path/meta") match {
-        case Some(m) => (m("bands"), m("band_buckets"), m("id_buckets"))
-        case None =>
-          val r = spark.read.parquet(s"$path/meta").collect().head
-          (r.getAs[Int]("bands"), r.getAs[Int]("band_buckets"),
-            r.getAs[Int]("id_buckets"))
-      }
-    }
-
-  /** Persist a [[nearDupIndex]] frame as a PROBE-PRUNABLE parquet
-    * store — the deployment shape of the standing corpus index once it
-    * outgrows what a per-batch streaming scan should touch. Layout:
-    *
-    *   - `payload/` — the index rows `(id, sh, hs, sig)` partitioned by
-    *     `idb = xxhash64(id) mod idBuckets`, so a probe's verify fetch
-    *     reads only the id-buckets its candidates live in;
-    *   - `banded/` — the exploded band keys `(id, band, bh)` partitioned
-    *     by `bkt = bh mod bandBuckets`, so a probe reads only the
-    *     band-buckets its own keys hash to;
-    *   - `meta/` — one row `(bands, band_buckets, id_buckets)`.
-    *
-    * Per-probe read volume is `(probed buckets / bandBuckets) × corpus`
-    * — FLAT in corpus size as long as the bucket counts are maintained
-    * proportional to the corpus (the banded-width rule applied to
-    * storage; [[rebandIndexStore]] is that maintenance step, no text
-    * rescan needed because signatures are stored). Both tables are
-    * `repartition`ed on their partition column before writing so each
-    * partition value lands in one task (one file per bucket, not one
-    * per task×bucket).
-    */
-  def writeNearDupIndexStore(index: DataFrame, path: String,
-                             bands: Int = 32, bandBuckets: Int = 256,
-                             idBuckets: Int = 256,
-                             bandedFromInput: Boolean = false): Unit = {
-    require(bands >= 1 && 64 % bands == 0,
-      s"bands must divide the 64-hash signature, got $bands")
-    require(bandBuckets >= 1 && idBuckets >= 1,
-      s"bucket counts must be positive, got $bandBuckets/$idBuckets")
-    require(Seq("id", "sh", "hs", "sig").forall(index.columns.contains),
-      s"index must be a nearDupIndex frame (id, sh, hs, sig); got " +
-        index.columns.mkString(", "))
-    val spark = index.sparkSession
-    // driver-side key=value file — no Spark job (see [[writeMetaFile]])
-    writeMetaFile(spark, s"$path/meta", "bands" -> bands,
-      "band_buckets" -> bandBuckets, "id_buckets" -> idBuckets)
-    def payloadWrite(obs: Option[org.apache.spark.sql.Observation]): Unit = {
-      val p = index.select(col("id"), col("sh"), col("hs"), col("sig"),
-        pmod(xxhash64(col("id")), lit(idBuckets.toLong)).as("idb"))
-      obs.fold(p)(o => p.observe(o, count(lit(1)).as("n")))
-        .repartition(col("idb"))
-        .write.mode("overwrite").partitionBy("idb").parquet(s"$path/payload")
-    }
-    if (bandedFromInput) {
-      // MAINTENANCE-REWRITE shape (optimization round 21, guide §2.6):
-      // when the caller's index plan is itself a cheap materialized
-      // read (compaction/rebanding: a payload scan, at most joined
-      // against a checkpointed keep set), the banded table derives from
-      // the INPUT directly and the two table writes run concurrently —
-      // the read-back below would serialize write → read → write for
-      // no recompute saving.
-      inParallel(
-        payloadWrite(None),
-        bandedRows(index.select("id", "sig"), bands, bandBuckets)
-          .repartition(col("bkt"))
-          .write.mode("overwrite").partitionBy("bkt").parquet(s"$path/banded"))
-    } else {
-      // ONE pass over the caller's index plan (optimization round 21,
-      // guide §1.2/§2.3): the payload write counts its rows via observe();
-      // banded/ then derives from the just-written payload's (id, sig)
-      // columns — a narrow column-pruned read-back — instead of
-      // recomputing the index plan a second time. At corpus scale the
-      // index plan is a full text scan + shingle + MinHash pass; the
-      // read-back touches ~(8 + 8×64) bytes/row. (Empty guard: a
-      // partitioned write of zero rows leaves no data file to infer a
-      // schema from, so the banded side falls back to the original plan's
-      // empty projection.)
-      val obs = org.apache.spark.sql.Observation()
-      payloadWrite(Some(obs))
-      val stored =
-        if (obs.get("n").asInstanceOf[Long] == 0L)
-          index.select(col("id"), col("sig")).limit(0)
-        else spark.read.parquet(s"$path/payload").select("id", "sig")
-      bandedRows(stored, bands, bandBuckets)
-        .repartition(col("bkt"))
-        .write.mode("overwrite").partitionBy("bkt").parquet(s"$path/banded")
-    }
-  }
-
-  /** Run two independent Spark actions from two driver threads (guide
-    * §2.6 — overlap independent jobs): the store appends commit two
-    * SEPARATE tables whose jobs share no lineage the caller hasn't
-    * already materialized, so submitting them concurrently overlaps
-    * their driver-side planning/commit and lets the second job's tasks
-    * back-fill executor slots the first job's tail leaves idle. Both
-    * actions are awaited; the first failure (if any) is rethrown after
-    * both settle, so no write is left running past the call. Crash
-    * semantics are unchanged: the plain append already committed the
-    * two tables as two independent jobs (either may land without the
-    * other), which is exactly the state the idempotent variant's
-    * per-table repair is specified against.
-    */
-  private[graft] def inParallel(a: => Unit, b: => Unit): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.global
-    val fa = Future(a); val fb = Future(b)
-    val ra = scala.util.Try(Await.result(fa, Duration.Inf))
-    val rb = scala.util.Try(Await.result(fb, Duration.Inf))
-    ra.get; rb.get
-  }
-
-  /** Append-only maintenance of a persisted store: the admitted rows'
-    * [[nearDupIndex]] frame (already computed for the probe — the
-    * q177 shared-frame shape) lands in both tables under the store's
-    * recorded layout. The two table writes run concurrently
-    * ([[inParallel]] — they are independent jobs; callers pass a
-    * materialized frame per the shared-frame contract, so no lineage
-    * recomputes twice). */
-  def appendNearDupIndexStore(spark: SparkSession, rawPath: String,
-                              newRows: DataFrame): Unit = {
-    val path = resolveStoreDir(spark, rawPath)
-    val (bands, bandBuckets, idBuckets) = readStoreMeta(spark, path)
-    inParallel(
-      newRows.select(col("id"), col("sh"), col("hs"), col("sig"),
-          pmod(xxhash64(col("id")), lit(idBuckets.toLong)).as("idb"))
-        .repartition(col("idb"))
-        .write.mode("append").partitionBy("idb").parquet(s"$path/payload"),
-      bandedRows(newRows, bands, bandBuckets)
-        .repartition(col("bkt"))
-        .write.mode("append").partitionBy("bkt").parquet(s"$path/banded"))
+  def deltaNearDupFromStore(spark: SparkSession, rawPath: String,
+                            incomingIds: DataFrame,
+                            incomingIndex: DataFrame, idCol: String,
+                            threshold: Double, hotBucketDrop: Int = 0,
+                            hotBucketCap: Int = HotBucketCap): DataFrame = {
+    val (pruned, candCount, layout) = IndexStore.fetchCandidates(spark,
+      IndexStore.Lexical, rawPath, incomingIndex)
+    deltaNearDupFromIndex(pruned, incomingIds, incomingIndex, idCol,
+      threshold, layout.width, hotBucketDrop, hotBucketCap,
+      knownCandCount = Some(candCount))
   }
 
   /** Bucket-count maintenance rule for a persisted index store (VERDICT
@@ -1078,8 +895,10 @@ object Dedup {
     * pruned-read volume per probed bucket ≈ `32n/bandBuckets` rows ×
     * ~40 B): the 32k-row bowl floor is where those two curves cross
     * HERE, not a universal constant. A deployment retunes by
-    * re-measuring one bucket curve (the Round19Probe/Round20Probe
-    * `buckets`/`decade` sections are the harness) and passing its own
+    * re-measuring one bucket curve (the `buckets` and `decade` sections
+    * recorded in PROBES_r19.json / PROBES_r20.json show the method;
+    * [[graft.ScaleProbe]]'s store section times a store probe per
+    * bucket count) and passing its own
     * floor as `bandRowsPerBucket`. `maxBuckets` defaults to the 8192
     * local-directory bound, which BINDS past ~8M docs — at 10¹⁰ rows
     * the clamp leaves ~1.2 M banded rows per bucket vs the measured
@@ -1120,378 +939,21 @@ object Dedup {
     (band, id)
   }
 
-  /** Idempotent [[appendNearDupIndexStore]]: rows whose id ALREADY
-    * exists in the store are dropped before the append — the
-    * replay-safe maintenance a `foreachBatch` sink needs, where a batch
-    * that crashed between the append and its commit marker re-runs and
-    * would otherwise land duplicate payload/banded rows (decisions
-    * survive duplicates — the min() keepers collapse them — but the
-    * store inflates monotonically and compaction joins multiply).
-    *
-    * The existence check runs PER TABLE (round-19 review): the plain
-    * append commits `payload/` and `banded/` as two separate jobs, so a
-    * crash BETWEEN them leaves a doc payload-present but banded-absent
-    * — a single payload-keyed check would anti-join the replay away and
-    * the doc would never generate candidates again. Each table repairs
-    * itself: payload rows anti-join the payload ids, banded rows
-    * anti-join the banded ids — both reads bucket-pruned to the
-    * partitions the new rows hash to (a doc's banded rows live in
-    * exactly the buckets its stored signature derives, so id-presence
-    * within those buckets is conclusive), batch-bounded volume either
-    * way. Parquet's job-level commit makes each table's append atomic,
-    * so per-table presence is all-or-nothing per doc.
-    */
-  def appendNearDupIndexStoreIdempotent(spark: SparkSession, rawPath: String,
-                                        newRows: DataFrame): Unit = {
-    val path = resolveStoreDir(spark, rawPath)
-    val (bands, bandBuckets, idBuckets) = readStoreMeta(spark, path)
-    val rows = newRows.localCheckpoint()
-    // BOTH tables' pruning key sets from ONE driver job (optimization
-    // round 21, guide §1.2): the id-buckets and the band-buckets each
-    // derive narrowly from the checkpointed rows, so tagging them and
-    // unioning costs one pass where the old shape ran a second
-    // checkpoint (the banded frame) plus a second collect. Both sets
-    // stay bounded (≤ idBuckets / ≤ min(32 × batch, bandBuckets)).
-    val keys = rows
-      .select(lit(0).as("t"),
-        pmod(xxhash64(col("id")), lit(idBuckets.toLong)).as("k"))
-      .union(bandedRows(rows, bands, bandBuckets)
-        .select(lit(1).as("t"), col("bkt").as("k")))
-      .distinct().collect()
-    val idbs = keys.filter(_.getInt(0) == 0).map(_.getLong(1)).toSeq
-    val bkts = keys.filter(_.getInt(0) == 1).map(_.getLong(1)).toSeq
-    if (idbs.nonEmpty) inParallel(
-      {
-        val inPayload = spark.read.parquet(s"$path/payload")
-          .where(col("idb").isin(idbs: _*)).select("id")
-        rows.join(inPayload, Seq("id"), "left_anti")
-          .select(col("id"), col("sh"), col("hs"), col("sig"),
-            pmod(xxhash64(col("id")), lit(idBuckets.toLong)).as("idb"))
-          .repartition(col("idb"))
-          .write.mode("append").partitionBy("idb").parquet(s"$path/payload")
-      },
-      {
-        val newBanded = bandedRows(rows, bands, bandBuckets)
-        // anti-join on (id, band), not id alone (round-19 ADVICE): the
-        // FileOutputCommitter moves task outputs sequentially, so a crash
-        // mid job-commit can leave a doc with only SOME of its banded
-        // rows; an id-keyed check would see the doc present, skip it
-        // entirely, and leave it permanently under-banded (reduced
-        // candidate recall, no later repair). Keyed per band, the replay
-        // appends exactly the missing rows — partial commits self-heal.
-        // Same bucket-pruned read; (id, band) identifies the row (bh/bkt
-        // derive deterministically from the stored signature).
-        val inBanded = spark.read.parquet(s"$path/banded")
-          .where(col("bkt").isin(bkts: _*)).select("id", "band").distinct()
-        newBanded.join(inBanded, Seq("id", "band"), "left_anti")
-          .repartition(col("bkt"))
-          .write.mode("append").partitionBy("bkt").parquet(s"$path/banded")
-      })
-  }
-
-  /** [[deltaNearDup]] against a PERSISTED [[writeNearDupIndexStore]]
-    * store — the corpus-size-independent probe: the batch's band keys
-    * resolve a bounded bucket set (≤ min(batch × bands, bandBuckets) —
-    * a bounded driver collect), only those `banded/` partitions are
-    * read to discover candidates, and only the candidate id-buckets of
-    * `payload/` are read for the verify. Decisions are IDENTICAL to
-    * [[deltaNearDupFromIndex]] over the full index frame: the pruned
-    * payload is a superset of every band-matching corpus doc (each
-    * contributes its own id-bucket), and non-matching cohabitant rows
-    * generate no candidates when the delta core re-bands them.
-    */
-  def deltaNearDupFromStore(spark: SparkSession, rawPath: String,
-                            incomingIds: DataFrame,
-                            incomingIndex: DataFrame, idCol: String,
-                            threshold: Double, hotBucketDrop: Int = 0,
-                            hotBucketCap: Int = HotBucketCap): DataFrame = {
-    val path = resolveStoreDir(spark, rawPath)
-    val (bands, bandBuckets, idBuckets) = readStoreMeta(spark, path)
-    val incB = incomingIndex.select(col("id").as("id_i"),
-        posexplode(sigBandKeys(col("sig"), bands)))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bh")
-    val probeBkts = incB
-      .select(pmod(col("bh"), lit(bandBuckets.toLong)).as("bkt"))
-      .distinct().collect().map(_.getLong(0)).toSeq
-    val (prunedIndex, candCount) =
-      if (probeBkts.isEmpty)
-        (spark.read.parquet(s"$path/payload")
-          .select("id", "sh", "hs", "sig").limit(0), 0L)
-      else {
-        val corpusB = spark.read.parquet(s"$path/banded")
-          .where(col("bkt").isin(probeBkts: _*))
-          .select(col("id").as("id_c"), col("band"), col("bh"))
-        // one collect yields BOTH the candidate id-buckets (the
-        // partition filter) and the distinct candidate-id count (idb
-        // partitions the id space, so the per-bucket distinct counts
-        // sum to the global one) — the count feeds the probe core's
-        // fetch guard so it skips its own materialize+count jobs
-        // (optimization round 21). Self-pairs are excluded to match
-        // the guard's candidate set; the pruned payload stays a
-        // superset of every needed candidate either way.
-        val stats = broadcast(incB).join(corpusB, Seq("band", "bh"))
-          .filter(col("id_i") =!= col("id_c"))
-          .select(pmod(xxhash64(col("id_c")), lit(idBuckets.toLong)).as("idb"),
-            col("id_c"))
-          .groupBy(col("idb"))
-          .agg(count_distinct(col("id_c")).as("n"))
-          .collect() // ≤ idBuckets rows
-        val candIdb = stats.map(_.getLong(0)).toSeq
-        val n = stats.map(_.getLong(1)).sum
-        if (candIdb.isEmpty)
-          (spark.read.parquet(s"$path/payload")
-            .select("id", "sh", "hs", "sig").limit(0), 0L)
-        else
-          (spark.read.parquet(s"$path/payload")
-            .where(col("idb").isin(candIdb: _*))
-            .select("id", "sh", "hs", "sig"), n)
-      }
-    deltaNearDupFromIndex(prunedIndex, incomingIds, incomingIndex, idCol,
-      threshold, bands, hotBucketDrop, hotBucketCap,
-      knownCandCount = Some(candCount))
-  }
-
-  /** RETENTION maintenance for a persisted store: rewrite it keeping
-    * only the ids in `keepIds` (one `id` column — typically the
-    * pipeline's dedup keep list, or a recency cut over a caller-side id
-    * scheme). The banded table is rebuilt from the surviving
-    * signatures, so expired rows stop generating candidates entirely —
-    * an append-only store otherwise grows monotonically and its
-    * dropped docs keep paying probe-side verify work forever. Plain
-    * equi-join (keep lists are corpus-sized); blue/green to `outPath`.
-    */
-  def compactNearDupIndexStore(spark: SparkSession, rawPath: String,
-                               outPath: String,
-                               keepIds: DataFrame): Unit = {
-    val path = resolveStoreDir(spark, rawPath)
-    val (bands, bandBuckets, idBuckets) = readStoreMeta(spark, path)
-    // keep set checkpointed once (it may be an arbitrary caller plan —
-    // a dedup keep list), then the green payload/banded writes derive
-    // from the cheap payload⋈keeps read concurrently (bandedFromInput)
-    val keeps = keepIds.select(col(keepIds.columns.head).as("id"))
-      .distinct().localCheckpoint()
-    try writeNearDupIndexStore(
-      spark.read.parquet(s"$path/payload").select("id", "sh", "hs", "sig")
-        .join(keeps, "id"),
-      outPath, bands, bandBuckets, idBuckets, bandedFromInput = true)
-    finally keeps.unpersist()
-  }
-
-  /** Re-band / re-bucket a persisted store WITHOUT a text rescan
-    * (VERDICT r16 #7 — the maintenance step a growing corpus
-    * eventually owes: band width and bucket counts both track corpus
-    * size): the stored signatures are sufficient to rebuild the banded
-    * table at any width that divides 64, so the new store is derived
-    * entirely from `payload/`. Writes a NEW store at `outPath`
-    * (blue/green swap — the old store stays probe-able until the
-    * caller retires it).
-    */
-  def rebandIndexStore(spark: SparkSession, rawPath: String, outPath: String,
-                       newBands: Int, newBandBuckets: Int,
-                       newIdBuckets: Int): Unit = {
-    val path = resolveStoreDir(spark, rawPath)
-    writeNearDupIndexStore(
-      spark.read.parquet(s"$path/payload").select("id", "sh", "hs", "sig"),
-      outPath, newBands, newBandBuckets, newIdBuckets,
-      bandedFromInput = true)
-  }
-
-  // ---------------------------------------------- managed (versioned) store
-
-  /** ONLINE store maintenance (VERDICT r19 #2): a MANAGED store root
-    * holds immutable store VERSIONS plus one atomic pointer —
-    *
-    *   - `$root/CURRENT` — a one-line file naming the active version
-    *     (`v00001`, …), committed by atomic rename (write `CURRENT.tmp`,
-    *     `FileContext.rename(OVERWRITE)` — atomic on HDFS and POSIX);
-    *   - `$root/versions/vNNNNN/` — a full [[writeNearDupIndexStore]]
-    *     layout (plus the `exact/` side table when present).
-    *
-    * Every store entry point resolves the pointer per call
-    * ([[resolveStoreDir]] — an unmanaged path resolves to itself, so
-    * the plain-path API is unchanged), which makes compaction/rebanding
-    * safe under a live [[graft.streaming.CurationStream]]: maintenance
-    * builds the GREEN version from the current one OUTSIDE any lock
-    * (the blue version keeps serving probes and appends), then under
-    * the per-root store lock appends the rows that landed in blue
-    * during the build (a bounded id-keyed catch-up) and swaps the
-    * pointer — the next micro-batch resolves green. Old versions stay
-    * on disk until the caller retires them (a lazy reader may still
-    * hold blue frames).
-    *
-    * LOCK SCOPE: [[withStoreLock]] is JVM-wide, striped per root —
-    * sound for the deployment shape where both the `foreachBatch` step
-    * and maintenance run on one driver. Cross-driver maintenance needs
-    * external coordination (the pointer swap itself is atomic either
-    * way; the lock only closes the append-vs-catch-up race).
-    */
-  private val storeLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
-  /** Serialize store appends against a concurrent pointer swap: the
-    * incremental step holds this for its probe+append, maintenance for
-    * its catch-up+swap. No-op cost for unmanaged stores. */
-  def withStoreLock[T](root: String)(f: => T): T =
-    storeLocks.computeIfAbsent(root, _ => new Object).synchronized(f)
-
-  private def hadoopFs(spark: SparkSession, p: String) = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    (hp, hp.getFileSystem(spark.sessionState.newHadoopConf()))
-  }
-
-  /** The active store directory of `path`: `$path/versions/<CURRENT>`
-    * for a managed root, `path` itself otherwise. */
-  def resolveStoreDir(spark: SparkSession, path: String): String =
-    readStorePointer(spark, path) match {
-      case Some(v) => s"$path/versions/$v"
-      case None => path
-    }
-
-  private[operators] def readStorePointer(spark: SparkSession,
-                               root: String): Option[String] = {
-    val (cur, fs) = hadoopFs(spark, s"$root/CURRENT")
-    if (!fs.exists(cur)) None
-    else {
-      val in = fs.open(cur)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim)
-      finally in.close()
-    }
-  }
-
-  private[operators] def commitStorePointer(spark: SparkSession, root: String,
-                                 version: String): Unit = {
-    val (tmp, fs) = hadoopFs(spark, s"$root/CURRENT.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(version.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    org.apache.hadoop.fs.FileContext
-      .getFileContext(fs.getUri, spark.sessionState.newHadoopConf())
-      .rename(tmp, new org.apache.hadoop.fs.Path(s"$root/CURRENT"),
-        org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
-
-  private[operators] def nextVersion(current: String): String = {
-    require(current.matches("v\\d{5}"),
-      s"unrecognized store version '$current'")
-    f"v${current.drop(1).toInt + 1}%05d"
-  }
-
-  /** Create a managed store root: version `v00001` plus the pointer. */
+  /** Create a managed [[IndexStore.Lexical]] root
+    * ([[IndexStore.initManaged]]). */
   def initManagedNearDupIndexStore(spark: SparkSession, root: String,
                                    index: DataFrame, bands: Int = 32,
                                    bandBuckets: Int = 256,
-                                   idBuckets: Int = 256): Unit = {
-    require(readStorePointer(spark, root).isEmpty,
-      s"managed store already exists at $root")
-    writeNearDupIndexStore(index, s"$root/versions/v00001", bands,
+                                   idBuckets: Int = 256): Unit =
+    IndexStore.initManaged(spark, IndexStore.Lexical, root, index, bands,
       bandBuckets, idBuckets)
-    commitStorePointer(spark, root, "v00001")
-  }
 
-  /** RETENTION maintenance of a managed store, safe under a live
-    * ingest stream: build green from the current version's payload
-    * restricted to `keepIds` (and the `exact/` side table likewise),
-    * then under the store lock append the rows that arrived in blue
-    * during the build — blue-payload ids absent from green MINUS the
-    * ids the retention cut deliberately dropped (a snapshot of blue's
-    * id set taken before the build makes the two distinguishable;
-    * id-sized frames throughout) — and atomically swap the pointer.
-    * Returns the retired version's directory (the caller deletes it
-    * once no reader can still hold it).
-    */
+  /** Live retention maintenance of a managed lexical root, `exact/`
+    * side table included ([[IndexStore.maintainManaged]]). Returns the
+    * retired version's directory. */
   def compactManagedStore(spark: SparkSession, root: String,
                           keepIds: DataFrame): String =
-    maintainManagedStore(spark, root, keep = Some(keepIds),
-      reband = None)
-
-  /** Width/bucket maintenance of a managed store, same protocol as
-    * [[compactManagedStore]] (no retention cut — catch-up is a plain
-    * blue-minus-green append). */
-  def rebandManagedStore(spark: SparkSession, root: String, newBands: Int,
-                         newBandBuckets: Int, newIdBuckets: Int): String =
-    maintainManagedStore(spark, root, keep = None,
-      reband = Some((newBands, newBandBuckets, newIdBuckets)))
-
-  /** `afterBuild` is a TEST SEAM: invoked between the green build and
-    * the locked catch-up+swap, where a live stream's append would race
-    * — lets the catch-up leg be exercised deterministically instead of
-    * hoping a concurrent thread lands in the window. */
-  private[graft] def maintainManagedStore(spark: SparkSession, root: String,
-                                          keep: Option[DataFrame],
-                                          reband: Option[(Int, Int, Int)],
-                                          afterBuild: () => Unit =
-                                            () => ()): String = {
-    val curV = readStorePointer(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"$root is not a managed store"))
-    val blue = s"$root/versions/$curV"
-    val newV = nextVersion(curV)
-    val green = s"$root/versions/$newV"
-    val (bands, bandBuckets, idBuckets) = readStoreMeta(spark, blue)
-    val (gBands, gBB, gIB) = reband.getOrElse((bands, bandBuckets, idBuckets))
-    val keeps = keep.map(_.select(col(keep.get.columns.head).as("id"))
-      .distinct().localCheckpoint())
-    // snapshot blue's id universe BEFORE the build: blue ∖ green later
-    // mixes deliberately-dropped ids with build-concurrent arrivals,
-    // and only the snapshot separates them. ONLY the retention path
-    // needs it (optimization round 21, guide §1.2): a pure reband drops
-    // nothing, so blue ∖ green IS the catch-up set and the snapshot
-    // job (a full blue-payload id scan + checkpoint) was pure waste.
-    val snapshot = keep.map(_ =>
-      spark.read.parquet(s"$blue/payload").select("id").localCheckpoint())
-    val basePayload = spark.read.parquet(s"$blue/payload")
-      .select("id", "sh", "hs", "sig")
-    val kept = keeps.fold(basePayload)(k => basePayload.join(k, "id"))
-    val hadExact = fpStoreExists(spark, blue)
-    // the green payload/banded build and the exact/ side-table build
-    // touch disjoint tables — run them concurrently (guide §2.6)
-    inParallel(
-      writeNearDupIndexStore(kept, green, gBands, gBB, gIB,
-        bandedFromInput = true),
-      if (hadExact) {
-        val fpBuckets = readFpBuckets(spark, blue)
-        val baseKeys = spark.read.schema(FpKeysSchema)
-          .parquet(s"$blue/exact/keys").select("id", "fp")
-        writeFingerprintStore(spark, green,
-          keeps.fold(baseKeys)(k => baseKeys.join(k, "id")), fpBuckets)
-      })
-    // lazy by design: both inputs are checkpointed id frames, so the
-    // anti-join re-derives cheaply inside each catch-up plan — the
-    // eager checkpoint here was one more sequential job for no reuse win
-    val dropped = keeps.map(k =>
-      snapshot.get.join(k, Seq("id"), "left_anti"))
-    afterBuild()
-    withStoreLock(root) {
-      // the two catch-up legs touch DISJOINT green tables
-      // (payload+banded vs exact/keys) and neither feeds the other —
-      // run them concurrently (guide §2.6; optimization round 21)
-      inParallel(
-        {
-          val lateIds = spark.read.parquet(s"$blue/payload").select("id")
-            .join(spark.read.parquet(s"$green/payload").select("id"),
-              Seq("id"), "left_anti")
-          val catchUp = dropped.fold(lateIds)(d =>
-            lateIds.join(d, Seq("id"), "left_anti")).localCheckpoint()
-          if (catchUp.count() > 0)
-            appendNearDupIndexStore(spark, green,
-              spark.read.parquet(s"$blue/payload")
-                .select("id", "sh", "hs", "sig").join(catchUp, "id"))
-        },
-        if (hadExact) {
-          val lateKeys = spark.read.schema(FpKeysSchema)
-            .parquet(s"$blue/exact/keys").select("id", "fp")
-            .join(spark.read.schema(FpKeysSchema)
-              .parquet(s"$green/exact/keys").select("fp"),
-              Seq("fp"), "left_anti")
-          val fpCatchUp = dropped.fold(lateKeys)(d =>
-            lateKeys.join(d, Seq("id"), "left_anti")).localCheckpoint()
-          if (fpCatchUp.count() > 0)
-            appendFingerprintStore(spark, green, fpCatchUp)
-        })
-      commitStorePointer(spark, root, newV)
-    }
-    keeps.foreach(_.unpersist()); snapshot.foreach(_.unpersist())
-    blue
-  }
+    IndexStore.compactManaged(spark, IndexStore.Lexical, root, keepIds)
 
   // ------------------------------------------------- fingerprint store
 
@@ -1503,19 +965,35 @@ object Dedup {
     */
   private val FpKeysSchema = "id LONG, fp STRING, fpb LONG"
 
-  /** `exact/meta`'s single value through the [[cachedMeta]] memo —
-    * rewrites (the enable-later create path) invalidate via mtime. */
-  private def readFpBuckets(spark: SparkSession, path: String): Int =
-    cachedMeta(spark, s"$path/exact/meta") {
-      Int.box(readMetaFile(spark, s"$path/exact/meta")
-        .map(_("fp_buckets"))
-        .getOrElse(spark.read.parquet(s"$path/exact/meta")
-          .collect().head.getAs[Int]("fp_buckets")))
-    }.intValue
+  private def fpBuckets(spark: SparkSession, path: String): Int =
+    IndexStore.readMeta(spark, s"$path/exact/meta", Seq("fp_buckets")).head
 
-  private def fpStoreExists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/exact/meta")
-    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
+  private def fpKeys(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(FpKeysSchema).parquet(s"$path/exact/keys")
+
+  /** The `exact/` table as the lexical kind's side table: managed
+    * maintenance rebuilds green's from blue's keys (restricted to the
+    * keep set) and catches up the fingerprints that landed in blue
+    * during the build, minus the ids the retention cut dropped. */
+  private[operators] object FingerprintSide extends IndexStore.SideTable {
+    def exists(spark: SparkSession, dir: String): Boolean = {
+      val p = new org.apache.hadoop.fs.Path(s"$dir/exact/meta")
+      p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
+    }
+    def rebuild(spark: SparkSession, blue: String, green: String,
+                keeps: Option[DataFrame]): Unit = {
+      val base = fpKeys(spark, blue).select("id", "fp")
+      writeFingerprintStore(spark, green,
+        keeps.fold(base)(k => base.join(k, "id")), fpBuckets(spark, blue))
+    }
+    def catchUp(spark: SparkSession, blue: String, green: String,
+                dropped: Option[DataFrame]): Unit = {
+      val late = fpKeys(spark, blue).select("id", "fp")
+        .join(fpKeys(spark, green).select("fp"), Seq("fp"), "left_anti")
+      val rows = dropped.fold(late)(d => late.join(d, Seq("id"), "left_anti"))
+        .localCheckpoint()
+      if (rows.count() > 0) appendFingerprintStore(spark, green, rows)
+    }
   }
 
   /** EXACT-duplicate side table of a persisted index store (VERDICT r19
@@ -1524,7 +1002,7 @@ object Dedup {
     * below the shingle width owes short-dup catching to the exact
     * family. This table persists the standing corpus's normalized-text
     * fingerprints ([[graft.functions.TextFns.fingerprint]]) under
-    * `$path/exact/` — `meta` (one row: fp_buckets) and `keys`
+    * `$path/exact/` — `meta` (`fp_buckets`) and `keys`
     * partitioned by `fpb = xxhash64(fp) mod fpBuckets`, one row per
     * DISTINCT standing fingerprint `(id = keeper = min id, fp)` — so a
     * probe reads only the buckets its own fingerprints hash to (the
@@ -1540,13 +1018,11 @@ object Dedup {
     require(fpBuckets >= 1, s"fpBuckets must be positive, got $fpBuckets")
     require(Seq("id", "fp").forall(rows.columns.contains),
       s"rows must be an (id, fp) frame; got ${rows.columns.mkString(", ")}")
-    // driver-side key=value file — no Spark job (see [[writeMetaFile]])
-    writeMetaFile(spark, s"$path/exact/meta", "fp_buckets" -> fpBuckets)
-    rows.groupBy(col("fp")).agg(min(col("id")).as("id"))
+    IndexStore.writeMeta(spark, s"$path/exact/meta", "fp_buckets" -> fpBuckets)
+    IndexStore.land(rows.groupBy(col("fp")).agg(min(col("id")).as("id"))
       .select(col("id"), col("fp"),
-        pmod(xxhash64(col("fp")), lit(fpBuckets.toLong)).as("fpb"))
-      .repartition(col("fpb"))
-      .write.mode("overwrite").partitionBy("fpb").parquet(s"$path/exact/keys")
+        pmod(xxhash64(col("fp")), lit(fpBuckets.toLong)).as("fpb")),
+      "fpb", "overwrite", s"$path/exact/keys")
   }
 
   /** [[deltaDedup]] against a persisted [[writeFingerprintStore]] table
@@ -1576,21 +1052,17 @@ object Dedup {
         incoming.columns.mkString(", "))
     val inc = incoming.select(col("id"), col("fp"))
     val pruned =
-      if (!fpStoreExists(spark, path))
+      if (!FingerprintSide.exists(spark, path))
         spark.createDataFrame(spark.sparkContext.emptyRDD[
           org.apache.spark.sql.Row],
           org.apache.spark.sql.types.StructType.fromDDL(FpKeysSchema))
       else {
-        val fpBuckets = readFpBuckets(spark, path)
         val fpbs = inc
-          .select(pmod(xxhash64(col("fp")), lit(fpBuckets.toLong)).as("fpb"))
+          .select(pmod(xxhash64(col("fp")), lit(fpBuckets(spark, path).toLong))
+            .as("fpb"))
           .distinct().collect().map(_.getLong(0)).toSeq // ≤ fpBuckets
-        if (fpbs.isEmpty)
-          spark.read.schema(FpKeysSchema).parquet(s"$path/exact/keys")
-            .limit(0)
-        else
-          spark.read.schema(FpKeysSchema).parquet(s"$path/exact/keys")
-            .where(col("fpb").isin(fpbs: _*))
+        if (fpbs.isEmpty) fpKeys(spark, path).limit(0)
+        else fpKeys(spark, path).where(col("fpb").isin(fpbs: _*))
       }
     // deltaDedup's decision shape with the corpus leg's min() taken
     // AFTER self-exclusion (the store is fp-unique by construction, but
@@ -1628,14 +1100,13 @@ object Dedup {
                              newRows: DataFrame,
                              idempotent: Boolean = false): Unit = {
     val path = resolveStoreDir(spark, rawPath)
-    if (!fpStoreExists(spark, path)) {
+    if (!FingerprintSide.exists(spark, path)) {
       writeFingerprintStore(spark, path, newRows)
       return
     }
-    val fpBuckets = readFpBuckets(spark, path)
     val projected = newRows
       .select(col("id"), col("fp"),
-        pmod(xxhash64(col("fp")), lit(fpBuckets.toLong)).as("fpb"))
+        pmod(xxhash64(col("fp")), lit(fpBuckets(spark, path).toLong)).as("fpb"))
     // the checkpoint exists for the idempotent path's two consumers
     // (the fpb collect and the anti-join append); the plain append
     // consumes the rows exactly once, so its checkpoint was one wasted
@@ -1648,13 +1119,10 @@ object Dedup {
         val fpbs = rows.select("fpb").distinct()
           .collect().map(_.getLong(0)).toSeq // ≤ fpBuckets
         if (fpbs.isEmpty) return
-        val inKeys = spark.read.schema(FpKeysSchema)
-          .parquet(s"$path/exact/keys")
-          .where(col("fpb").isin(fpbs: _*)).select("fp")
-        rows.join(inKeys, Seq("fp"), "left_anti")
+        rows.join(fpKeys(spark, path).where(col("fpb").isin(fpbs: _*))
+          .select("fp"), Seq("fp"), "left_anti")
       }
-    keep.repartition(col("fpb"))
-      .write.mode("append").partitionBy("fpb").parquet(s"$path/exact/keys")
+    IndexStore.land(keep, "fpb", "append", s"$path/exact/keys")
   }
 
   /** SimHash near-dup pairs with Hamming distance ≤ maxHamming.

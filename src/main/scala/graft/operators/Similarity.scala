@@ -800,7 +800,7 @@ object Similarity {
     * self-join pair path and the incremental probe path so both sides
     * of a delta run band IDENTICALLY by construction.
     */
-  private def packedBandKeys(sigF: DataFrame, rows: Int): DataFrame = {
+  private[operators] def packedBandKeys(sigF: DataFrame, rows: Int): DataFrame = {
     val bands = Bits / rows
     sigF.select(col("id"), explode(
       transform(sequence(lit(0), lit(bands - 1)), b =>
@@ -826,7 +826,7 @@ object Similarity {
     * prefix is untouched, so flipped keys stay within their band's
     * keyspace.
     */
-  private def packedBandProbeKeys(sigF: DataFrame, rows: Int): DataFrame = {
+  private[operators] def packedBandProbeKeys(sigF: DataFrame, rows: Int): DataFrame = {
     // TWO projections (optimization round 21, guide §1.2 order-of-work):
     // fold each band's exact key ONCE into a scalar column, then derive
     // the w flip keys from the packed key by bit arithmetic. The
@@ -1238,24 +1238,8 @@ object Similarity {
     val candIdsPlan = candPairs.select(col("id_c")).distinct()
     val fetched0 = index.select(col("id").as("id_c"), col("e_d").as("e_c"),
       col("n").as("n_c"))
-    // `knownCandCount`: the store probe's pruning collect already
-    // counted the distinct candidates — skip the materialize+count
-    // pair here (the lexical twin's convention, optimization round 21)
-    val fetched = knownCandCount match {
-      case Some(n) =>
-        if (n <= maxFetchBroadcastIds)
-          fetched0.join(broadcast(candIdsPlan), "id_c")
-        else
-          fetched0.join(candIdsPlan.hint("shuffle_hash"), Seq("id_c"),
-            "left_semi")
-      case None =>
-        val candIds = candIdsPlan.localCheckpoint()
-        if (candIds.count() <= maxFetchBroadcastIds)
-          fetched0.join(broadcast(candIds), "id_c")
-        else
-          fetched0.join(candIds.hint("shuffle_hash"), Seq("id_c"),
-            "left_semi")
-    }
+    val fetched = Dedup.candidateFetch(fetched0, candIdsPlan, knownCandCount,
+      maxFetchBroadcastIds)
     val corpusMatch = candPairs
       .join(broadcast(incIdx.select(col("id").as("id_i"),
         col("e_d").as("e_i"), col("n").as("n_i"))), "id_i")
@@ -1284,194 +1268,69 @@ object Similarity {
 
   // ------------------------------------ persisted signature-frame store
 
-  /** The bucketed packed-band-key table of a [[signatureFrame]]:
-    * `(id, key, bkt)` with `bkt = key mod bandBuckets`. */
-  private def semBandedRows(sigF: DataFrame, rows: Int,
-                            bandBuckets: Int): DataFrame =
-    packedBandKeys(sigF, rows)
-      .select(col("id"), col("key"),
-        pmod(col("key"), lit(bandBuckets.toLong)).as("bkt"))
-
-  private def readSemStoreMeta(spark: SparkSession,
-                               path: String): (Int, Int, Int) =
-    // same job-elision memo as the lexical store's meta (guide §1.2 —
-    // a store directory's meta is write-once; mtime guards rewrites)
-    Dedup.cachedMeta(spark, s"$path/meta") {
-      Dedup.readMetaFile(spark, s"$path/meta") match {
-        case Some(m) =>
-          (m("rows_per_band"), m("band_buckets"), m("id_buckets"))
-        case None =>
-          val r = spark.read.parquet(s"$path/meta").collect().head
-          (r.getAs[Int]("rows_per_band"), r.getAs[Int]("band_buckets"),
-            r.getAs[Int]("id_buckets"))
-      }
-    }
-
-  /** Persist a [[signatureFrame]] as a PROBE-PRUNABLE parquet store —
-    * the semantic twin of
-    * [[graft.operators.Dedup.writeNearDupIndexStore]]: `payload/` holds
-    * the frame rows `(id, e_d, sig, n)` partitioned by
-    * `idb = xxhash64(id) mod idBuckets`; `banded/` holds the packed
-    * band keys `(id, key)` at the RECORDED `rowsPerBand` partitioned by
-    * `bkt = key mod bandBuckets`; `meta/` records the layout. The
-    * stored width is the store's banding commitment — as the corpus
-    * grows past the width's occupancy design point,
-    * [[rebandSignatureStore]] rebuilds `banded/` at a new width from
-    * the STORED signatures (the hyperplane model is data-independent,
-    * so no embedding rescan is ever needed).
-    *
-    * WHEN THE STORE WINS (PROBES_r20 `sem_store_decade`, three
-    * scales): unlike the lexical index store (which beats the
-    * in-memory probe 5–7× at 5M docs), the signature store LOSES to
-    * the checkpointed in-memory probe at every measured scale — 2.50×
-    * at 200k, 2.55× at 1M (same width: the ratio is width-governed,
-    * not scale-governed), 1.41× at 5M (where the probe budget steps
-    * the width to 15 bits). The payload row is narrow (no shingle
-    * arrays), so the streaming scan it competes with stays cheap, and
-    * 1-flip probing multiplies the probed bucket set ((w+1)·bands
-    * keys per vector) until pruning degenerates into a full banded
-    * read plus per-bucket overhead. Keep the probing frame
-    * checkpointed in memory for speed (at least through 10⁷ vectors)
-    * and use this store for durability, restart, and cross-job
-    * handoff — [[readSignatureStore]] + [[storedRowsPerBand]] are
-    * that bridge.
-    */
-  def writeSignatureStore(sigF: DataFrame, path: String, rowsPerBand: Int,
-                          bandBuckets: Int = 256,
-                          idBuckets: Int = 256,
-                          bandedFromInput: Boolean = false): Unit = {
-    require(rowsPerBand >= 1 && rowsPerBand <= MaxRowsPerBand,
-      s"rowsPerBand must be in [1, $MaxRowsPerBand], got $rowsPerBand")
-    require(bandBuckets >= 1 && idBuckets >= 1,
-      s"bucket counts must be positive, got $bandBuckets/$idBuckets")
-    require(Seq("id", "e_d", "sig", "n").forall(sigF.columns.contains),
-      s"sigF must be a signatureFrame (id, e_d, sig, n); got " +
-        sigF.columns.mkString(", "))
-    val spark = sigF.sparkSession
-    // driver-side key=value file — no Spark job (the lexical store's
-    // [[graft.operators.Dedup.writeMetaFile]] convention)
-    Dedup.writeMetaFile(spark, s"$path/meta",
-      "rows_per_band" -> rowsPerBand, "band_buckets" -> bandBuckets,
-      "id_buckets" -> idBuckets)
-    def payloadWrite(obs: Option[org.apache.spark.sql.Observation]): Unit = {
-      val p = sigF.select(col("id"), col("e_d"), col("sig"), col("n"),
-        pmod(xxhash64(col("id")), lit(idBuckets.toLong)).as("idb"))
-      obs.fold(p)(o => p.observe(o, count(lit(1)).as("n_rows")))
-        .repartition(col("idb"))
-        .write.mode("overwrite").partitionBy("idb").parquet(s"$path/payload")
-    }
-    if (bandedFromInput) {
-      // maintenance-rewrite shape (the lexical store's convention,
-      // guide §2.6): the caller's plan is a cheap materialized read, so
-      // the two table writes run concurrently off the input directly
-      Dedup.inParallel(
-        payloadWrite(None),
-        semBandedRows(sigF.select("id", "sig"), rowsPerBand, bandBuckets)
-          .repartition(col("bkt"))
-          .write.mode("overwrite").partitionBy("bkt").parquet(s"$path/banded"))
-    } else {
-      // one pass over the caller's signature plan (optimization round 21):
-      // banded/ derives from the just-written payload's (id, sig) columns
-      // — the lexical store's read-back shape; see
-      // [[graft.operators.Dedup.writeNearDupIndexStore]] — instead of
-      // recomputing the hyperplane-projection pass a second time
-      val obs = org.apache.spark.sql.Observation()
-      payloadWrite(Some(obs))
-      val stored =
-        if (obs.get("n_rows").asInstanceOf[Long] == 0L)
-          sigF.select(col("id"), col("sig")).limit(0)
-        else spark.read.parquet(s"$path/payload").select("id", "sig")
-      semBandedRows(stored, rowsPerBand, bandBuckets)
-        .repartition(col("bkt"))
-        .write.mode("overwrite").partitionBy("bkt").parquet(s"$path/banded")
-    }
-  }
+  /* The signature store is [[IndexStore.Semantic]]: a [[signatureFrame]]
+   * persisted probe-prunable, banded at its RECORDED `rowsPerBand`. As
+   * the corpus grows past the width's occupancy design point,
+   * [[IndexStore.reband]] rebuilds `banded/` at a new width from the
+   * STORED signatures (the hyperplane model is data-independent, so no
+   * embedding rescan is ever needed).
+   *
+   * WHEN THE STORE WINS (PROBES_r20 `sem_store_decade`, three scales):
+   * unlike the lexical index store (which beats the in-memory probe 5–7×
+   * at 5M docs), the signature store LOSES to the checkpointed in-memory
+   * probe at every measured scale — 2.50× at 200k, 2.55× at 1M (same
+   * width: the ratio is width-governed, not scale-governed), 1.41× at 5M
+   * (where the probe budget steps the width to 15 bits). The payload row
+   * is narrow (no shingle arrays), so the streaming scan it competes with
+   * stays cheap, and 1-flip probing multiplies the probed bucket set
+   * ((w+1)·bands keys per vector) until pruning degenerates into a full
+   * banded read plus per-bucket overhead. Keep the probing frame
+   * checkpointed in memory for speed (at least through 10⁷ vectors) and
+   * use this store for durability, restart, and cross-job handoff —
+   * [[readSignatureStore]] + [[storedRowsPerBand]] are that bridge.
+   */
 
   /** Append-only maintenance: admitted rows' [[signatureFrame]] rows
     * (already computed for the probe — the q180 shared-frame shape)
-    * land in both tables under the store's recorded layout. */
+    * land in both tables ([[IndexStore.append]]). */
   def appendSignatureStore(spark: SparkSession, rawPath: String,
-                           newRows: DataFrame): Unit = {
-    val path = Dedup.resolveStoreDir(spark, rawPath)
-    val (rows, bandBuckets, idBuckets) = readSemStoreMeta(spark, path)
-    // the two table writes are independent jobs — run them concurrently
-    // (guide §2.6; the lexical append's inParallel convention)
-    Dedup.inParallel(
-      newRows.select(col("id"), col("e_d"), col("sig"), col("n"),
-          pmod(xxhash64(col("id")), lit(idBuckets.toLong)).as("idb"))
-        .repartition(col("idb"))
-        .write.mode("append").partitionBy("idb").parquet(s"$path/payload"),
-      semBandedRows(newRows, rows, bandBuckets)
-        .repartition(col("bkt"))
-        .write.mode("append").partitionBy("bkt").parquet(s"$path/banded"))
-  }
+                           newRows: DataFrame): Unit =
+    IndexStore.append(spark, IndexStore.Semantic, rawPath, newRows)
 
-  /** [[deltaSemNearDup]] against a PERSISTED [[writeSignatureStore]]
+  /** [[deltaSemNearDup]] against a persisted [[IndexStore.Semantic]]
     * store — [[graft.operators.Dedup.deltaNearDupFromStore]]'s contract
-    * in the embedding regime: the batch's packed band keys resolve a
-    * bounded bucket set, only those `banded/` partitions are read to
-    * discover candidates, and only the candidate id-buckets of
-    * `payload/` feed the verify. The banding width is the STORE's
-    * recorded `rowsPerBand`; `flips = 1` carries the 1-plane probe
-    * repair onto the store path (the batch side probes its ≤1-flip
-    * neighbor keys — the flip keys just widen the probed bucket set;
-    * nothing store-sided changes, since candidates still meet on the
-    * index's exact keys). The flip decision is the caller's PROBE
-    * POLICY, pinned explicitly because it is part of a graded query's
-    * candidate contract — [[storeProbeFlips]] is the recall-governed
-    * derivation a pipeline composes in. Decisions are identical to
-    * [[deltaSemNearDupFromIndex]] over the full frame at that
-    * `(width, flips)` (the pruned payload is a superset of every
-    * band-matching vector).
+    * in the embedding regime, at the store's recorded `rowsPerBand`;
+    * `flips = 1` carries the 1-plane probe repair onto the store path
+    * (the batch side probes its ≤1-flip neighbor keys — the flip keys
+    * just widen the probed bucket set; nothing store-sided changes,
+    * since candidates still meet on the index's exact keys). The flip
+    * decision is the caller's PROBE POLICY, pinned explicitly because it
+    * is part of a graded query's candidate contract — [[storeProbeFlips]]
+    * is the recall-governed derivation a pipeline composes in. Decisions
+    * are identical to [[deltaSemNearDupFromIndex]] over the full frame
+    * at that `(width, flips)`.
     */
   def deltaSemNearDupFromStore(spark: SparkSession, rawPath: String,
                                incomingIds: DataFrame,
                                incomingIndex: DataFrame, idCol: String,
                                threshold: Double,
                                flips: Int = 0): DataFrame = {
-    val path = Dedup.resolveStoreDir(spark, rawPath)
-    val (rows, bandBuckets, idBuckets) = readSemStoreMeta(spark, path)
-    val incK = (if (flips >= 1) packedBandProbeKeys(incomingIndex, rows)
-                else packedBandKeys(incomingIndex, rows))
-      .withColumnRenamed("id", "id_i")
-    val probeBkts = incK
-      .select(pmod(col("key"), lit(bandBuckets.toLong)).as("bkt"))
-      .distinct().collect().map(_.getLong(0)).toSeq
-    val (prunedIndex, candCount) =
-      if (probeBkts.isEmpty)
-        (spark.read.parquet(s"$path/payload")
-          .select("id", "e_d", "sig", "n").limit(0), 0L)
-      else {
-        val corpusK = spark.read.parquet(s"$path/banded")
-          .where(col("bkt").isin(probeBkts: _*))
-          .select(col("id").as("id_c"), col("key"))
-        // buckets + distinct candidate count in ONE collect (the
-        // lexical store probe's convention — idb partitions the id
-        // space, so per-bucket distinct counts sum to the global one)
-        val stats = broadcast(incK).join(corpusK, Seq("key"))
-          .filter(col("id_i") =!= col("id_c"))
-          .select(pmod(xxhash64(col("id_c")), lit(idBuckets.toLong))
-            .as("idb"), col("id_c"))
-          .groupBy(col("idb"))
-          .agg(count_distinct(col("id_c")).as("n"))
-          .collect() // ≤ idBuckets rows
-        val candIdb = stats.map(_.getLong(0)).toSeq
-        val n = stats.map(_.getLong(1)).sum
-        if (candIdb.isEmpty)
-          (spark.read.parquet(s"$path/payload")
-            .select("id", "e_d", "sig", "n").limit(0), 0L)
-        else
-          (spark.read.parquet(s"$path/payload")
-            .where(col("idb").isin(candIdb: _*))
-            .select("id", "e_d", "sig", "n"), n)
-      }
-    deltaSemNearDupFromIndex(prunedIndex, incomingIds, incomingIndex,
-      idCol, threshold, rows, flips, knownCandCount = Some(candCount))
+    val (pruned, candCount, layout) = IndexStore.fetchCandidates(spark,
+      IndexStore.Semantic, rawPath, incomingIndex, flips)
+    deltaSemNearDupFromIndex(pruned, incomingIds, incomingIndex, idCol,
+      threshold, layout.width, flips, knownCandCount = Some(candCount))
   }
+
+  /** The recorded banding width of a persisted signature store — the
+    * width [[readSignatureStore]]-then-[[deltaSemNearDupFromIndex]]
+    * callers probe at to reproduce the store path's decisions. */
+  def storedRowsPerBand(spark: SparkSession, rawPath: String): Int =
+    IndexStore.layout(spark, IndexStore.Semantic,
+      IndexStore.resolveStoreDir(spark, rawPath)).width
 
   /** The recall-governed flip decision for probing a persisted store
     * at its RECORDED width — [[recommendedSemDeltaProbe]]'s probe half
-    * for the store regime, computed from `meta/` alone (no index scan,
+    * for the store regime, computed from `meta` alone (no index scan,
     * so it is free to evaluate per batch): engage the 1-flip probe
     * whenever the plain banding curve at the stored width misses
     * `recallTarget` at the threshold cosine. A pipeline composes this
@@ -1479,50 +1338,19 @@ object Similarity {
     * explicitly because the probe rule is part of the oracle contract.
     */
   def storeProbeFlips(spark: SparkSession, rawPath: String, threshold: Double,
-                      recallTarget: Double = 0.9): Int = {
-    val (rows, _, _) = readSemStoreMeta(spark,
-      Dedup.resolveStoreDir(spark, rawPath))
-    if (bandingRecall(threshold, rows, flips = 0) >= recallTarget) 0 else 1
-  }
+                      recallTarget: Double = 0.9): Int =
+    if (bandingRecall(threshold, storedRowsPerBand(spark, rawPath),
+        flips = 0) >= recallTarget) 0 else 1
 
   /** Read a persisted signature store back as its [[signatureFrame]]
-    * — the durability→speed bridge the decade measurement prescribes
-    * (PROBES_r20 `sem_store_decade`: the store never beats the
-    * checkpointed in-memory probe at any measured scale, so a
-    * restarting pipeline reads the store ONCE, `localCheckpoint()`s
+    * — the durability→speed bridge the decade measurement prescribes:
+    * a restarting pipeline reads the store ONCE, `localCheckpoint()`s
     * the result, and probes via [[deltaSemNearDupFromIndex]] at the
-    * store's recorded width — [[storedRowsPerBand]] exposes it).
-    * Column-pruned to the frame contract; `banded/` is never read
-    * (band keys re-derive from `sig` at any width).
+    * store's recorded width ([[storedRowsPerBand]]). `banded/` is never
+    * read (band keys re-derive from `sig` at any width).
     */
   def readSignatureStore(spark: SparkSession, rawPath: String): DataFrame =
-    spark.read
-      .parquet(s"${Dedup.resolveStoreDir(spark, rawPath)}/payload")
-      .select("id", "e_d", "sig", "n")
-
-  /** The recorded banding width of a persisted signature store — the
-    * width [[readSignatureStore]]-then-[[deltaSemNearDupFromIndex]]
-    * callers probe at to reproduce the store path's decisions. */
-  def storedRowsPerBand(spark: SparkSession, rawPath: String): Int =
-    readSemStoreMeta(spark, Dedup.resolveStoreDir(spark, rawPath))._1
-
-  /** RETENTION maintenance for a persisted signature store — the
-    * semantic twin of
-    * [[graft.operators.Dedup.compactNearDupIndexStore]]: rewrite
-    * keeping only the ids in `keepIds` (one id column); expired vectors
-    * stop generating candidates entirely. Blue/green to `outPath`. */
-  def compactSignatureStore(spark: SparkSession, rawPath: String,
-                            outPath: String, keepIds: DataFrame): Unit = {
-    val path = Dedup.resolveStoreDir(spark, rawPath)
-    val (rows, bandBuckets, idBuckets) = readSemStoreMeta(spark, path)
-    val keeps = keepIds.select(col(keepIds.columns.head).as("id"))
-      .distinct().localCheckpoint()
-    try writeSignatureStore(
-      spark.read.parquet(s"$path/payload").select("id", "e_d", "sig", "n")
-        .join(keeps, "id"),
-      outPath, rows, bandBuckets, idBuckets, bandedFromInput = true)
-    finally keeps.unpersist()
-  }
+    IndexStore.read(spark, IndexStore.Semantic, rawPath)
 
   /** The maintenance DECIDER for a persisted signature store: the
     * bias-aware band width the store SHOULD be at for its CURRENT row
@@ -1530,7 +1358,7 @@ object Similarity {
     * applied to a STANDING index (the r16 note), computed entirely from
     * the stored signatures (one count + the agreement aggregate; no
     * embedding read). A pipeline compares this against the store's
-    * recorded width after appends and calls [[rebandSignatureStore]]
+    * recorded width after appends and calls [[IndexStore.reband]]
     * when they diverge — the width-tracks-corpus-size rule as a closed
     * measure→decide→reband loop.
     */
@@ -1540,106 +1368,21 @@ object Similarity {
     biasAwareRowsPerBand(rows, planeAgreeProbsFromSig(sigF, rows))
   }
 
-  /** Re-band / re-bucket a persisted signature store WITHOUT touching
-    * raw embeddings: the stored signatures rebuild `banded/` at any new
-    * width (bias-aware widening as the corpus grows — see
-    * [[recommendedRowsPerBand]] for the decision half). Blue/green to
-    * `outPath`. */
-  def rebandSignatureStore(spark: SparkSession, rawPath: String,
-                           outPath: String, newRowsPerBand: Int,
-                           newBandBuckets: Int, newIdBuckets: Int): Unit =
-    writeSignatureStore(
-      readSignatureStore(spark, rawPath),
-      outPath, newRowsPerBand, newBandBuckets, newIdBuckets,
-      bandedFromInput = true)
-
-  // ------------------------------------- managed (versioned) sem store
-
-  /** Managed-root support for the signature store — the semantic twin
-    * of [[graft.operators.Dedup.initManagedNearDupIndexStore]], same
-    * layout (`$root/versions/vNNNNN/` + an atomic `CURRENT` pointer)
-    * and same protocol: every sem-store entry point resolves the
-    * pointer per call ([[graft.operators.Dedup.resolveStoreDir]] —
-    * unmanaged paths resolve to themselves), so compaction/rebanding
-    * is safe under a live appender that holds
-    * [[graft.operators.Dedup.withStoreLock]] for its probe+append.
-    */
+  /** Create a managed [[IndexStore.Semantic]] root
+    * ([[IndexStore.initManaged]]). */
   def initManagedSignatureStore(spark: SparkSession, root: String,
                                 sigF: DataFrame, rowsPerBand: Int,
                                 bandBuckets: Int = 256,
-                                idBuckets: Int = 256): Unit = {
-    require(Dedup.readStorePointer(spark, root).isEmpty,
-      s"managed store already exists at $root")
-    writeSignatureStore(sigF, s"$root/versions/v00001", rowsPerBand,
-      bandBuckets, idBuckets)
-    Dedup.commitStorePointer(spark, root, "v00001")
-  }
+                                idBuckets: Int = 256): Unit =
+    IndexStore.initManaged(spark, IndexStore.Semantic, root, sigF,
+      rowsPerBand, bandBuckets, idBuckets)
 
-  /** RETENTION maintenance of a managed signature store, safe under a
-    * live appender — [[graft.operators.Dedup.compactManagedStore]]'s
-    * protocol in the embedding regime: build green restricted to
-    * `keepIds` outside any lock (blue keeps serving), then under the
-    * per-root lock append the build-concurrent arrivals (blue ∖ green
-    * minus the ids the retention cut deliberately dropped — a
-    * pre-build snapshot of blue's id set separates them) and swap the
-    * pointer. Returns the retired version's directory. */
+  /** Live retention maintenance of a managed signature root
+    * ([[IndexStore.maintainManaged]]). Returns the retired version's
+    * directory. */
   def compactManagedSignatureStore(spark: SparkSession, root: String,
                                    keepIds: DataFrame): String =
-    maintainManagedSignatureStore(spark, root, Some(keepIds), None)
-
-  /** Width/bucket maintenance of a managed signature store, same
-    * protocol (no retention cut — catch-up is plain blue ∖ green). */
-  def rebandManagedSignatureStore(spark: SparkSession, root: String,
-                                  newRowsPerBand: Int,
-                                  newBandBuckets: Int,
-                                  newIdBuckets: Int): String =
-    maintainManagedSignatureStore(spark, root, None,
-      Some((newRowsPerBand, newBandBuckets, newIdBuckets)))
-
-  /** `afterBuild` is the same TEST SEAM as the lexical twin's: invoked
-    * between the green build and the locked catch-up+swap. */
-  private[graft] def maintainManagedSignatureStore(
-      spark: SparkSession, root: String, keep: Option[DataFrame],
-      reband: Option[(Int, Int, Int)],
-      afterBuild: () => Unit = () => ()): String = {
-    val curV = Dedup.readStorePointer(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"$root is not a managed store"))
-    val blue = s"$root/versions/$curV"
-    val newV = Dedup.nextVersion(curV)
-    val green = s"$root/versions/$newV"
-    val (rows, bandBuckets, idBuckets) = readSemStoreMeta(spark, blue)
-    val (gR, gBB, gIB) = reband.getOrElse((rows, bandBuckets, idBuckets))
-    val keeps = keep.map(k => k.select(col(k.columns.head).as("id"))
-      .distinct().localCheckpoint())
-    // retention-path-only (the lexical twin's convention, optimization
-    // round 21): a pure reband drops nothing, so blue ∖ green IS the
-    // catch-up set and the snapshot scan+checkpoint would be waste
-    val snapshot = keep.map(_ =>
-      spark.read.parquet(s"$blue/payload").select("id").localCheckpoint())
-    val base = spark.read.parquet(s"$blue/payload")
-      .select("id", "e_d", "sig", "n")
-    writeSignatureStore(keeps.fold(base)(k => base.join(k, "id")),
-      green, gR, gBB, gIB, bandedFromInput = true)
-    // lazy (the lexical twin's convention): both inputs are
-    // checkpointed id frames — no eager-checkpoint job needed
-    val dropped = keeps.map(k =>
-      snapshot.get.join(k, Seq("id"), "left_anti"))
-    afterBuild()
-    Dedup.withStoreLock(root) {
-      val lateIds = spark.read.parquet(s"$blue/payload").select("id")
-        .join(spark.read.parquet(s"$green/payload").select("id"),
-          Seq("id"), "left_anti")
-      val catchUp = dropped.fold(lateIds)(d =>
-        lateIds.join(d, Seq("id"), "left_anti")).localCheckpoint()
-      if (catchUp.count() > 0)
-        appendSignatureStore(spark, green,
-          spark.read.parquet(s"$blue/payload")
-            .select("id", "e_d", "sig", "n").join(catchUp, "id"))
-      Dedup.commitStorePointer(spark, root, newV)
-    }
-    keeps.foreach(_.unpersist()); snapshot.foreach(_.unpersist())
-    blue
-  }
+    IndexStore.compactManaged(spark, IndexStore.Semantic, root, keepIds)
 
   /** [[lshNearDupPairs]] from a pre-built [[signatureFrame]] — the
     * shared-frame entry point (`rowsPerBand` must be explicit here; the

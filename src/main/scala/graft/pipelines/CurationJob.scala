@@ -3,7 +3,7 @@ package graft.pipelines
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Curation, Dedup, Redact, Splits}
+import graft.operators.{Curation, Dedup, IndexStore, Redact, Splits}
 import graft.sources.Tables
 
 /** The composed training-data builder: every curation operator chained
@@ -146,7 +146,7 @@ object CurationJob {
     * The decisions are `localCheckpoint`ed before the append so the
     * returned frame is stable against the store growth it itself
     * caused. A pipeline bootstraps the store once from its existing
-    * corpus via [[graft.operators.Dedup.writeNearDupIndexStore]] (the
+    * corpus via [[graft.operators.IndexStore.write]] (the
     * q183-graded write path) and periodically runs the
     * `recommendedRowsPerBand`-style reband/compaction maintenance
     * (q187-graded).
@@ -173,14 +173,14 @@ object CurationJob {
     * leg (identical long texts have J = 1.0 — the Jaccard store
     * already catches them), so the merge is a disjoint union. NOTE:
     * the `exact/` table has its own lifecycle under the PLAIN offline
-    * helpers — [[graft.operators.Dedup.compactNearDupIndexStore]] /
-    * `rebandNearDupIndexStore` rebuild from `payload/` and do not
-    * carry it; compact it by rewriting
+    * helpers — [[graft.operators.IndexStore.compact]] /
+    * [[graft.operators.IndexStore.reband]] rebuild from `payload/` and
+    * do not carry it; compact it by rewriting
     * ([[graft.operators.Dedup.writeFingerprintStore]] over the
     * surviving keys) when retention applies. The MANAGED maintenance
-    * path ([[graft.operators.Dedup.compactManagedStore]] /
-    * `rebandManagedStore`) carries it into the green version
-    * automatically, retention cut and catch-up included.
+    * path ([[graft.operators.IndexStore.maintainManaged]]) carries it
+    * into the green version as the lexical kind's side table,
+    * retention cut and catch-up included.
     */
   def incrementalStep(spark: SparkSession, storePath: String,
                       batch: DataFrame, benchmark: DataFrame,
@@ -260,11 +260,11 @@ object CurationJob {
     // keep the plain append (fresh stores, no replay, one less read).
     val admit = idx.join(dec.filter(col("status") === "new")
       .select(col(idCol).as("id")), "id")
-    Dedup.inParallel(
+    IndexStore.inParallel(
       if (idempotent)
-        Dedup.appendNearDupIndexStoreIdempotent(spark, storePath, admit)
+        IndexStore.appendIdempotent(spark, IndexStore.Lexical, storePath, admit)
       else
-        Dedup.appendNearDupIndexStore(spark, storePath, admit),
+        IndexStore.append(spark, IndexStore.Lexical, storePath, admit),
       exactLeg.foreach { case (short, exactDec) =>
         Dedup.appendFingerprintStore(spark, storePath,
           short.join(exactDec.filter(col("status") === "new")
@@ -292,10 +292,7 @@ object CurationJob {
           clfFloor: Double = 0.5,
           clfGate: Boolean = false,
           encodeTokens: Boolean = false,
-          tokenizer: String = "unigram",
-          sink: String = "parquet"): Map[String, Long] = {
-    require(sink == "parquet" || sink == "noop",
-      s"sink must be parquet or noop, got $sink")
+          tokenizer: String = "unigram"): Map[String, Long] = {
     require(Seq("unigram", "bpe", "greedy").contains(tokenizer),
       s"tokenizer must be unigram, bpe, or greedy, got $tokenizer")
     val docs = Tables.documents(spark, sfDir)
@@ -439,14 +436,8 @@ object CurationJob {
             "train_shards" -> trainShards)
           def writeOne(name: String, df: DataFrame): (String, Long) = {
             val obs = org.apache.spark.sql.Observation(s"graft_curation_$name")
-            val w = df.observe(obs, count(lit(1)).as("n_rows"))
-              .write.mode("overwrite")
-            // `noop` executes the identical plans without the write
-            // path — the measurement sink JobStageProbe's write-delta
-            // mode uses to price the five table writes; never a
-            // deployment setting (it writes nothing)
-            if (sink == "noop") w.format("noop").save()
-            else w.parquet(s"$outDir/$name")
+            df.observe(obs, count(lit(1)).as("n_rows"))
+              .write.mode("overwrite").parquet(s"$outDir/$name")
             name -> obs.get("n_rows").asInstanceOf[Long]
           }
           // corpus_clean FIRST and alone: its plan computes (and fills)

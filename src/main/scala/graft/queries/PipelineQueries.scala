@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFns
-import graft.operators.{Dedup, Multimodal, Sessionize, Similarity}
+import graft.operators.{Dedup, IndexStore, Multimodal, Sessionize, Similarity}
 import graft.sources.Tables
 import QueryDefs._
 
@@ -1062,7 +1062,7 @@ object PipelineQueries {
 
   /** Q185 — q173's incremental semantic probe run through the
     * PERSISTED signature store (see
-    * [[graft.operators.Similarity.writeSignatureStore]] /
+    * [[graft.operators.IndexStore.write]] /
     * [[graft.operators.Similarity.deltaSemNearDupFromStore]]): same
     * split, threshold, and 16×8 banding, but the standing corpus lives
     * in the bucket-pruned parquet store and the probe reads only the
@@ -1074,10 +1074,10 @@ object PipelineQueries {
   private def q185(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
     val path = QueryDefs.tempStoreDir("graft_q185_store")
-    Similarity.writeSignatureStore(
+    IndexStore.write(IndexStore.Semantic,
       Similarity.signatureFrame(
         emb.filter(col("vec_id") % 5 =!= 4), "vec_id", "embedding"),
-      path, rowsPerBand = 8, bandBuckets = 16, idBuckets = 16)
+      path, width = 8, bandBuckets = 16, idBuckets = 16)
     val batch = emb.filter(col("vec_id") % 5 === 4)
     Similarity.deltaSemNearDupFromStore(spark, path,
         batch.select("vec_id"),
@@ -1145,7 +1145,7 @@ object PipelineQueries {
   /** Q188 — RETENTION graded in the semantic regime (VERDICT r17 #5):
     * q185's store is COMPACTED to the vectors surviving a retention cut
     * (`vec_id % 3 ≠ 0` — a stand-in keep list) via blue/green
-    * [[graft.operators.Similarity.compactSignatureStore]], then the
+    * [[graft.operators.IndexStore.compact]], then the
     * same batch probes the compacted store. The oracle is q173's exact
     * banding restated over the KEPT corpus only, so one hash checks
     * expiry end-to-end: a dropped vector must stop matching (batch
@@ -1156,11 +1156,11 @@ object PipelineQueries {
     val emb = Tables.embeddings(spark, dir)
     val corpus = emb.filter(col("vec_id") % 5 =!= 4)
     val path = QueryDefs.tempStoreDir("graft_q188_store")
-    Similarity.writeSignatureStore(
+    IndexStore.write(IndexStore.Semantic,
       Similarity.signatureFrame(corpus, "vec_id", "embedding"),
-      path, rowsPerBand = 8, bandBuckets = 16, idBuckets = 16)
+      path, width = 8, bandBuckets = 16, idBuckets = 16)
     val path2 = QueryDefs.tempStoreDir("graft_q188_store_compact")
-    Similarity.compactSignatureStore(spark, path, path2,
+    IndexStore.compact(spark, IndexStore.Semantic, path, path2,
       corpus.filter(col("vec_id") % 3 =!= 0)
         .select(col("vec_id").as("id")))
     val batch = emb.filter(col("vec_id") % 5 === 4)
@@ -1325,7 +1325,7 @@ object PipelineQueries {
     * ([[graft.operators.Similarity.compactManagedSignatureStore]]:
     * keep only `vec_id % 3 ≠ 0`, which also cuts batch A admits on the
     * 3-grid) and a bucket-count reband
-    * ([[graft.operators.Similarity.rebandManagedSignatureStore]]:
+    * ([[graft.operators.IndexStore.rebandManaged]]:
     * 16/16 → 8/8 with the width HELD at 8 rows/band, so the layout
     * changes but the banded candidate set is identical by
     * construction). Batch A probes v1 through the store path
@@ -1365,8 +1365,8 @@ object PipelineQueries {
     Similarity.compactManagedSignatureStore(spark, root,
       emb.filter(col("vec_id") % 5 =!= 4)
         .filter(col("vec_id") % 3 =!= 0).select("vec_id"))
-    Similarity.rebandManagedSignatureStore(spark, root, newRowsPerBand = 8,
-      newBandBuckets = 8, newIdBuckets = 8)
+    IndexStore.rebandManaged(spark, IndexStore.Semantic, root, width = 8,
+      bandBuckets = 8, idBuckets = 8)
     val frame = Similarity.readSignatureStore(spark, root).localCheckpoint()
     val decB = Similarity.deltaSemNearDupFromIndex(frame,
       batchB.select("vec_id"),

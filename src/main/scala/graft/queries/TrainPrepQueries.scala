@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Bm25, TextFns}
-import graft.operators.{Curation, Dedup, Fusion, Similarity}
+import graft.operators.{Curation, Dedup, Fusion, IndexStore, Similarity}
 import graft.sources.Tables
 
 /** Q73–Q98 — the training-prep surface: the remaining steps between
@@ -205,7 +205,7 @@ object TrainPrepQueries {
        |ORDER BY doc_id""".stripMargin
 
   /** Q183 — the incremental probe against the PERSISTED, bucket-pruned
-    * index store (see [[graft.operators.Dedup.writeNearDupIndexStore]] /
+    * index store (see [[graft.operators.IndexStore.write]] /
     * [[graft.operators.Dedup.deltaNearDupFromStore]]): q167's exact
     * contract — same split, same threshold, same banding — but the
     * standing corpus lives in the partitioned parquet store a
@@ -221,11 +221,11 @@ object TrainPrepQueries {
   private def q183(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val path = QueryDefs.tempStoreDir("graft_q183_store")
-    Dedup.writeNearDupIndexStore(
+    IndexStore.write(IndexStore.Lexical,
       Dedup.nearDupIndex(
         docs.filter(col("doc_id") % DeltaMod =!= DeltaMod - 1),
         "doc_id", "text", n = 3),
-      path, bands = 32, bandBuckets = 64, idBuckets = 64)
+      path, width = 32, bandBuckets = 64, idBuckets = 64)
     val batch = docs.filter(col("doc_id") % DeltaMod === DeltaMod - 1)
     Dedup.deltaNearDupFromStore(spark, path, batch.select("doc_id"),
         Dedup.nearDupIndex(batch, "doc_id", "text", n = 3)
@@ -238,7 +238,7 @@ object TrainPrepQueries {
     * is COMPACTED to the docs surviving a retention cut
     * (`doc_id % 3 ≠ 0` — a stand-in keep list: a dedup keep list or a
     * recency cut in deployment) via blue/green
-    * [[graft.operators.Dedup.compactNearDupIndexStore]], and the same
+    * [[graft.operators.IndexStore.compact]], and the same
     * batch then probes the compacted store. The oracle is q167's
     * brute-force exact Jaccard restated over the KEPT corpus only, so
     * one hash checks expiry the way q184 checks append: a batch doc
@@ -250,11 +250,11 @@ object TrainPrepQueries {
     val docs = Tables.documents(spark, dir)
     val corpus = docs.filter(col("doc_id") % DeltaMod =!= DeltaMod - 1)
     val path = QueryDefs.tempStoreDir("graft_q187_store")
-    Dedup.writeNearDupIndexStore(
+    IndexStore.write(IndexStore.Lexical,
       Dedup.nearDupIndex(corpus, "doc_id", "text", n = 3),
-      path, bands = 32, bandBuckets = 16, idBuckets = 16)
+      path, width = 32, bandBuckets = 16, idBuckets = 16)
     val path2 = QueryDefs.tempStoreDir("graft_q187_store_compact")
-    Dedup.compactNearDupIndexStore(spark, path, path2,
+    IndexStore.compact(spark, IndexStore.Lexical, path, path2,
       corpus.filter(col("doc_id") % 3 =!= 0)
         .select(col("doc_id").as("id")))
     val batch = docs.filter(col("doc_id") % DeltaMod === DeltaMod - 1)
@@ -297,7 +297,7 @@ object TrainPrepQueries {
        |ORDER BY doc_id""".stripMargin
 
   /** Q184 — q177's ADMIT-THEN-PROBE sequence run through the PERSISTED
-    * store (write → probe A → `appendNearDupIndexStore` the admitted
+    * store (write → probe A → `IndexStore.append` the admitted
     * rows → probe B against the GROWN store): the full maintenance loop
     * a continuous-ingest pipeline actually executes against its parquet
     * index, graded value-for-value by q177's own exact-Jaccard oracle
@@ -309,11 +309,11 @@ object TrainPrepQueries {
   private def q184(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val path = QueryDefs.tempStoreDir("graft_q184_store")
-    Dedup.writeNearDupIndexStore(
+    IndexStore.write(IndexStore.Lexical,
       Dedup.nearDupIndex(
         docs.filter(col("doc_id") % DeltaMod < DeltaMod - 2),
         "doc_id", "text", n = 3),
-      path, bands = 32, bandBuckets = 16, idBuckets = 16)
+      path, width = 32, bandBuckets = 16, idBuckets = 16)
     val batchA = docs.filter(col("doc_id") % DeltaMod === DeltaMod - 2)
     val batchB = docs.filter(col("doc_id") % DeltaMod === DeltaMod - 1)
     val idxA = Dedup.nearDupIndex(batchA, "doc_id", "text", n = 3)
@@ -321,7 +321,7 @@ object TrainPrepQueries {
     val decA = Dedup.deltaNearDupFromStore(spark, path,
         batchA.select("doc_id"), idxA, "doc_id", threshold = 0.6)
       .localCheckpoint()
-    Dedup.appendNearDupIndexStore(spark, path, idxA.join(
+    IndexStore.append(spark, IndexStore.Lexical, path, idxA.join(
       decA.filter(col("status") === "new").select(col("doc_id").as("id")),
       "id"))
     val decB = Dedup.deltaNearDupFromStore(spark, path,
@@ -471,11 +471,11 @@ object TrainPrepQueries {
     val bench = docs.filter(col("doc_id") < BenchCut)
     val nonBench = docs.filter(col("doc_id") >= BenchCut)
     val path = QueryDefs.tempStoreDir("graft_q189_store")
-    Dedup.writeNearDupIndexStore(
+    IndexStore.write(IndexStore.Lexical,
       Dedup.nearDupIndex(
         nonBench.filter(col("doc_id") % DeltaMod < DeltaMod - 2),
         "doc_id", "text", n = 3),
-      path, bands = 32, bandBuckets = 16, idBuckets = 16)
+      path, width = 32, bandBuckets = 16, idBuckets = 16)
     def step(m: Int): DataFrame =
       graft.pipelines.CurationJob.incrementalStep(spark, path,
         nonBench.filter(col("doc_id") % DeltaMod === m)
@@ -627,11 +627,11 @@ object TrainPrepQueries {
     val bench = docs.filter(col("doc_id") < BenchCut)
     val nonBench = docs.filter(col("doc_id") >= BenchCut)
     val path = QueryDefs.tempStoreDir("graft_q190_store")
-    Dedup.writeNearDupIndexStore(
+    IndexStore.write(IndexStore.Lexical,
       Dedup.nearDupIndex(
         nonBench.filter(col("doc_id") % DeltaMod < DeltaMod - 2),
         "doc_id", "text", n = 3),
-      path, bands = 32, bandBuckets = 16, idBuckets = 16)
+      path, width = 32, bandBuckets = 16, idBuckets = 16)
     val outDir = QueryDefs.tempStoreDir("graft_q190_out")
     val ckpt = QueryDefs.tempStoreDir("graft_q190_ckpt")
     implicit val ctx = spark.sqlContext
@@ -688,9 +688,9 @@ object TrainPrepQueries {
           .otherwise(col("text")).as("text"))
     val standing = mixed.filter(col("doc_id") % DeltaMod < DeltaMod - 2)
     val path = QueryDefs.tempStoreDir("graft_q191_store")
-    Dedup.writeNearDupIndexStore(
+    IndexStore.write(IndexStore.Lexical,
       Dedup.nearDupIndex(standing, "doc_id", "text", n = 3),
-      path, bands = 32, bandBuckets = 16, idBuckets = 16)
+      path, width = 32, bandBuckets = 16, idBuckets = 16)
     Dedup.writeFingerprintStore(spark, path,
       standing.filter(size(TextFns.shingles(col("text"), 3)) === 0)
         .select(col("doc_id").as("id"),
@@ -862,7 +862,7 @@ object TrainPrepQueries {
     * ([[graft.operators.Dedup.compactManagedStore]]: keep only
     * `doc_id % 7 ≠ 0`, which also cuts batch A admits on the 7-grid)
     * and a bucket-count reband
-    * ([[graft.operators.Dedup.rebandManagedStore]]: 16/16 → 8/8 with
+    * ([[graft.operators.IndexStore.rebandManaged]]: 16/16 → 8/8 with
     * bands HELD at 32, so the layout changes but the candidate set is
     * identical by construction). Batch B therefore probes the THIRD
     * immutable store version through the atomic `CURRENT` pointer,
@@ -893,8 +893,8 @@ object TrainPrepQueries {
     val decA = step(DeltaMod - 2)
     Dedup.compactManagedStore(spark, root,
       docs.filter(col("doc_id") % 7 =!= 0).select("doc_id"))
-    Dedup.rebandManagedStore(spark, root, newBands = 32,
-      newBandBuckets = 8, newIdBuckets = 8)
+    IndexStore.rebandManaged(spark, IndexStore.Lexical, root, width = 32,
+      bandBuckets = 8, idBuckets = 8)
     val decB = step(DeltaMod - 1)
     decA.withColumn("batch", lit("a"))
       .unionByName(decB.withColumn("batch", lit("b")))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.operators.IndexStore
 import graft.pipelines.CurationJob
 
 /** CONTINUOUS-INGEST curation — [[graft.pipelines.CurationJob.incrementalStep]]
@@ -35,13 +36,13 @@ import graft.pipelines.CurationJob
   * not the streaming engine — by design: state the engine cannot
   * bound, the store's bucket layout can). The benchmark frame is
   * static (eval suites don't stream). A pipeline bootstraps the store
-  * once via [[graft.operators.Dedup.writeNearDupIndexStore]] (or, for
+  * once via [[graft.operators.IndexStore.write]] (or, for
   * ONLINE maintenance, [[graft.operators.Dedup.initManagedNearDupIndexStore]])
   * and runs the q187-graded compaction/reband maintenance either
   * offline (plain store: stop, maintain, restart) or LIVE against a
   * managed root (VERDICT r19 #2):
   * [[graft.operators.Dedup.compactManagedStore]] /
-  * [[graft.operators.Dedup.rebandManagedStore]] build the green
+  * [[graft.operators.IndexStore.rebandManaged]] build the green
   * version while this stream keeps probing and appending blue, catch
   * up the build-concurrent appends, and swap the atomic `CURRENT`
   * pointer — the next micro-batch resolves green. Each micro-batch
@@ -65,7 +66,7 @@ object CurationStream {
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        graft.operators.Dedup.withStoreLock(storePath) {
+        IndexStore.withStoreLock(storePath) {
           CurationJob.incrementalStep(spark, storePath,
               batch.select(col(idCol), col(textCol)), benchmark, rules,
               idCol, textCol, threshold, n, idempotent = true,

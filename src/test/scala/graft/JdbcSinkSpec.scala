@@ -91,6 +91,37 @@ class JdbcSinkSpec extends SparkSpec {
     } finally queries.foreach(_.stop())
   }
 
+  test("the alerts sink reads each micro-batch once: its input rows equal a JdbcSink query's") {
+    val url = derbyUrl("alerts_once")
+    val dir = Files.createTempDirectory("alerts_once_in")
+    val ck = Files.createTempDirectory("alerts_once_ckpt").toString
+    // staged outside the source directory, then moved in by one rename
+    def feed(file: Int, ids: Range): Unit = {
+      val staged = Files.createTempFile("alerts_once", ".json")
+      Files.write(staged, ids.map(i => "{\"event_id\":" + i +
+          ",\"ts\":\"2026-01-01T00:00:" + "%02d".format(i % 60) + "Z\"," +
+          "\"user_id\":" + i % 3 + ",\"event_type\":\"click\"," +
+          "\"value\":1.0,\"props\":\"{}\"}").mkString("\n").getBytes("UTF-8"))
+      Files.move(staged, dir.resolve(s"e$file.json"),
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    }
+    feed(0, 0 until 40)
+    val events = spark.readStream.schema(graft.streaming.EventsStream.schema)
+      .json(dir.toString)
+    val queries = graft.pipelines.StreamingJob.startServing(events, url, ck)
+    try {
+      queries.foreach(_.processAllAvailable())
+      feed(1, 40 until 100)
+      queries.foreach(_.processAllAvailable())
+      // startServing's first query is the quality_checked JdbcSink, its
+      // last the alerts sink; both read the same files
+      def inputRows(q: org.apache.spark.sql.streaming.StreamingQuery) =
+        q.recentProgress.map(_.numInputRows).sum
+      assert(inputRows(queries.head) == 100L)
+      assert(inputRows(queries.last) == inputRows(queries.head))
+    } finally queries.foreach(_.stop())
+  }
+
   test("streaming foreachBatch sink lands micro-batches exactly once") {
     val url = derbyUrl("stream")
     val checkpoint = Files.createTempDirectory("jdbc_ckpt").toString

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
+import graft.operators.IndexStore
 import graft.pipelines.{BatchJob, CurationJob, StreamingJob}
 
 /** End-to-end tests for the composed jobs (the reference's two mains). */
@@ -268,7 +269,7 @@ class PipelineJobSpec extends SparkSpec {
 
   private def freshStore(index: org.apache.spark.sql.DataFrame): String = {
     val p = Files.createTempDirectory("graft_incstep_store").toString
-    graft.operators.Dedup.writeNearDupIndexStore(index, p, bands = 32,
+    IndexStore.write(IndexStore.Lexical, index, p, width = 32,
       bandBuckets = 16, idBuckets = 16)
     p
   }
@@ -480,7 +481,7 @@ class PipelineJobSpec extends SparkSpec {
       .repartition(col("idb"))
       .write.mode("append").partitionBy("idb").parquet(s"$store/payload")
     val bandedBefore = spark.read.parquet(s"$store/banded").count()
-    Dedup.appendNearDupIndexStoreIdempotent(spark, store, idx2)
+    IndexStore.appendIdempotent(spark, IndexStore.Lexical, store, idx2)
     assert(spark.read.parquet(s"$store/payload")
       .filter(col("id") === 2L).count() == 1L,
       "payload must not duplicate the already-committed row")
@@ -498,7 +499,7 @@ class PipelineJobSpec extends SparkSpec {
     assert(dec.toSeq == Seq((99L, "dup_of_corpus", Some(2L))), s"got ${dec.toSeq}")
     // a full replay is now a complete no-op
     val p0 = spark.read.parquet(s"$store/payload").count()
-    Dedup.appendNearDupIndexStoreIdempotent(spark, store, idx2)
+    IndexStore.appendIdempotent(spark, IndexStore.Lexical, store, idx2)
     assert(spark.read.parquet(s"$store/payload").count() == p0)
     assert(spark.read.parquet(s"$store/banded").count() == bandedBefore + 32L)
   }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TextFns, VectorFns}
-import graft.operators.{Dedup, Multimodal, Sessionize, Similarity}
+import graft.operators.{Dedup, IndexStore, Multimodal, Sessionize, Similarity}
 
 /** Unit tests for the training-data pipeline operators (SURVEY §7.3) on
   * tiny fixtures with hand-computed answers: dedup (exact / Jaccard /
@@ -201,7 +201,7 @@ class PipelineOpSpec extends SparkSpec {
     val wantA = canon(Dedup.deltaNearDupFromIndex(idx0,
       batchA.select("doc_id"), idxA, "doc_id", threshold = 0.6))
     val path = Files.createTempDirectory("graft_ndstore").toString
-    Dedup.writeNearDupIndexStore(idx0, path, bands = 32,
+    IndexStore.write(IndexStore.Lexical, idx0, path, width = 32,
       bandBuckets = 16, idBuckets = 16)
     val gotA = canon(Dedup.deltaNearDupFromStore(spark, path,
       batchA.select("doc_id"), idxA, "doc_id", threshold = 0.6))
@@ -211,7 +211,7 @@ class PipelineOpSpec extends SparkSpec {
     val admitted = Dedup.deltaNearDupFromIndex(idx0,
         batchA.select("doc_id"), idxA, "doc_id", threshold = 0.6)
       .filter($"status" === "new").select($"doc_id".as("id"))
-    Dedup.appendNearDupIndexStore(spark, path, idxA.join(admitted, "id"))
+    IndexStore.append(spark, IndexStore.Lexical, path, idxA.join(admitted, "id"))
     val idx1 = idx0.unionByName(idxA.join(admitted, "id")).localCheckpoint()
     val wantB = canon(Dedup.deltaNearDupFromIndex(idx1,
       batchB.select("doc_id"), idxB, "doc_id", threshold = 0.6))
@@ -222,8 +222,8 @@ class PipelineOpSpec extends SparkSpec {
     // decisions equal the in-memory op at the new width AND, banding
     // recall being complete on this corpus, the pre-reband decisions
     val path2 = Files.createTempDirectory("graft_ndstore_rb").toString
-    Dedup.rebandIndexStore(spark, path, path2, newBands = 16,
-      newBandBuckets = 8, newIdBuckets = 8)
+    IndexStore.reband(spark, IndexStore.Lexical, path, path2, width = 16,
+      bandBuckets = 8, idBuckets = 8)
     val want16 = canon(Dedup.deltaNearDupFromIndex(idx1,
       batchB.select("doc_id"), idxB, "doc_id", threshold = 0.6,
       bands = 16))
@@ -235,7 +235,7 @@ class PipelineOpSpec extends SparkSpec {
     // expired docs stop being claimable as keepers
     val keep = idx1.select($"id").filter($"id" % 2 === 0)
     val path3 = Files.createTempDirectory("graft_ndstore_cp").toString
-    Dedup.compactNearDupIndexStore(spark, path2, path3, keep)
+    IndexStore.compact(spark, IndexStore.Lexical, path2, path3, keep)
     val wantCp = canon(Dedup.deltaNearDupFromIndex(idx1.join(keep, "id"),
       batchB.select("doc_id"), idxB, "doc_id", threshold = 0.6,
       bands = 16))
@@ -269,7 +269,7 @@ class PipelineOpSpec extends SparkSpec {
       batchA.select("vec_id"), idxA, "vec_id", threshold = 0.4,
       rowsPerBand = 8))
     val path = Files.createTempDirectory("graft_semstore").toString
-    Similarity.writeSignatureStore(idx0, path, rowsPerBand = 8,
+    IndexStore.write(IndexStore.Semantic, idx0, path, width = 8,
       bandBuckets = 16, idBuckets = 16)
     val gotA = canon(Similarity.deltaSemNearDupFromStore(spark, path,
       batchA.select("vec_id"), idxA, "vec_id", threshold = 0.4))
@@ -299,8 +299,8 @@ class PipelineOpSpec extends SparkSpec {
     assert(gotB == wantB)
     // re-band to 4-bit bands from STORED signatures (no embedding read)
     val path2 = Files.createTempDirectory("graft_semstore_rb").toString
-    Similarity.rebandSignatureStore(spark, path, path2,
-      newRowsPerBand = 4, newBandBuckets = 8, newIdBuckets = 8)
+    IndexStore.reband(spark, IndexStore.Semantic, path, path2,
+      width = 4, bandBuckets = 8, idBuckets = 8)
     val want4 = canon(Similarity.deltaSemNearDupFromIndex(idx1,
       batchB.select("vec_id"), idxB, "vec_id", threshold = 0.4,
       rowsPerBand = 4))
@@ -310,7 +310,7 @@ class PipelineOpSpec extends SparkSpec {
     // retention: compact to the even ids
     val keep = idx1.select($"id").filter($"id" % 2 === 0)
     val path3 = Files.createTempDirectory("graft_semstore_cp").toString
-    Similarity.compactSignatureStore(spark, path2, path3, keep)
+    IndexStore.compact(spark, IndexStore.Semantic, path2, path3, keep)
     val wantCp = canon(Similarity.deltaSemNearDupFromIndex(
       idx1.join(keep, "id"), batchB.select("vec_id"), idxB, "vec_id",
       threshold = 0.4, rowsPerBand = 4))
@@ -353,9 +353,9 @@ class PipelineOpSpec extends SparkSpec {
     // still-unswapped pointer) into the build-vs-swap race window — the
     // locked catch-up must carry it into green
     val keep = idx0.select($"id").filter($"id" % 2 === 0).localCheckpoint()
-    Similarity.maintainManagedSignatureStore(spark, root,
+    IndexStore.maintainManaged(spark, IndexStore.Semantic, root,
       Some(keep), None, afterBuild = () =>
-        Dedup.withStoreLock(root) {
+        IndexStore.withStoreLock(root) {
           Similarity.appendSignatureStore(spark, root, idxA)
         })
     assert(Dedup.resolveStoreDir(spark, root).endsWith("v00002"))
@@ -366,8 +366,8 @@ class PipelineOpSpec extends SparkSpec {
     assert(canon(Similarity.deltaSemNearDupFromStore(spark, root,
       batchB.select("vec_id"), idxB, "vec_id", threshold = 0.4)) == wantB)
     // managed reband: decisions re-derive at the new width, same content
-    Similarity.rebandManagedSignatureStore(spark, root,
-      newRowsPerBand = 4, newBandBuckets = 8, newIdBuckets = 8)
+    IndexStore.rebandManaged(spark, IndexStore.Semantic, root,
+      width = 4, bandBuckets = 8, idBuckets = 8)
     assert(Dedup.resolveStoreDir(spark, root).endsWith("v00003"))
     assert(Similarity.storedRowsPerBand(spark, root) == 4)
     val want4 = canon(Similarity.deltaSemNearDupFromIndex(idx1,
@@ -386,9 +386,9 @@ class PipelineOpSpec extends SparkSpec {
     val emb = graft.sources.Tables.embeddings(spark, sf)
       .filter($"embedding".isNotNull).select("vec_id", "embedding")
     val path = Files.createTempDirectory("graft_semstore_dec").toString
-    Similarity.writeSignatureStore(
+    IndexStore.write(IndexStore.Semantic,
       Similarity.signatureFrame(emb, "vec_id", "embedding"),
-      path, rowsPerBand = 8, bandBuckets = 16, idBuckets = 16)
+      path, width = 8, bandBuckets = 16, idBuckets = 16)
     val r1 = Similarity.recommendedRowsPerBand(spark, path)
     // grow the store ×10 with dimension-rolled replicas (the ScaleProbe
     // convention: a pure permutation keeps geometry, remapped ids) —
@@ -409,7 +409,7 @@ class PipelineOpSpec extends SparkSpec {
     // closing the loop: reband to the recommendation — the store's
     // recorded width follows the decider with no embedding rescan
     val path2 = Files.createTempDirectory("graft_semstore_dec2").toString
-    Similarity.rebandSignatureStore(spark, path, path2, rK, 16, 16)
+    IndexStore.reband(spark, IndexStore.Semantic, path, path2, rK, 16, 16)
     val probe = emb.limit(3)
       .select(($"vec_id" + 900000L).as("vec_id"), $"embedding")
     val got = Similarity.deltaSemNearDupFromStore(spark, path2,

@@ -6,6 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.operators.Anomaly.AnomalyRule
+import graft.operators.IndexStore
 import graft.streaming.EventsStream
 
 /** Structured Streaming semantics tests over MemoryStream (SURVEY §5.4):
@@ -847,10 +848,10 @@ class StreamingSpec extends SparkSpec {
     val bench = Seq((0L, "benchmark prose entirely disjoint from every " +
       "stream document body here")).toDF("doc_id", "text")
     val store = Files.createTempDirectory("graft_curstream_store").toString
-    Dedup.writeNearDupIndexStore(
+    IndexStore.write(IndexStore.Lexical,
       Dedup.nearDupIndex(Seq((1L, base)).toDF("doc_id", "text"),
         "doc_id", "text", n = 3),
-      store, bands = 32, bandBuckets = 16, idBuckets = 16)
+      store, width = 32, bandBuckets = 16, idBuckets = 16)
     val out = Files.createTempDirectory("graft_curstream_out").toString
     val ckpt = Files.createTempDirectory("graft_curstream_ckpt").toString
     val in = MemoryStream[(Long, String)]
@@ -943,9 +944,9 @@ class StreamingSpec extends SparkSpec {
       // 2, keep the standing doc and the stream's own admit — and a
       // build-concurrent arrival lands in BLUE inside the race window
       // (the afterBuild seam): the catch-up must carry it into green
-      val retired = Dedup.maintainManagedStore(spark, root,
+      val retired = IndexStore.maintainManaged(spark, IndexStore.Lexical, root,
         keep = Some(Seq(1L, 101L).toDF("id")), reband = None,
-        afterBuild = () => Dedup.appendNearDupIndexStore(spark, root,
+        afterBuild = () => IndexStore.append(spark, IndexStore.Lexical, root,
           Dedup.nearDupIndex(Seq((150L, late)).toDF("doc_id", "text"),
             "doc_id", "text", n = 3)))
       assert(retired.endsWith("versions/v00001"))
