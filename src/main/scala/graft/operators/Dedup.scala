@@ -869,76 +869,6 @@ object Dedup {
       knownCandCount = Some(candCount))
   }
 
-  /** Bucket-count maintenance rule for a persisted index store (VERDICT
-    * r17 #4): bucket counts ∝ corpus size, between a LISTING floor and a
-    * local-fs cap. The store's per-probe read volume is
-    * `(probed buckets / bandBuckets) × 32n`, flat in `n` only while
-    * buckets track the corpus — but every probe also pays partition
-    * DISCOVERY over all `bandBuckets` directories, so a small store
-    * wants FEW buckets (the r17-measured loss: 512–8192 dirs at a 5k-doc
-    * store made the store probe slower than the in-memory scan). The
-    * rule targets ~32k banded rows per band bucket and ~2k payload
-    * rows per id bucket — the constant is MEASURED, not taste: the
-    * ×100 (500k-row) bucket curve reads 64→3.9s, 512→3.0s, 2048→5.0s,
-    * 8192→14.6s (PROBES_r19), a shallow bowl whose floor sits near 32k
-    * rows/bucket with a steep over-bucketing wall (listing is linear
-    * in directories; read volume grows only gently as buckets shrink),
-    * so the rule errs low:
-    * `bandBuckets = clamp(32n/bandRowsPerBucket, 16, maxBuckets)`,
-    * `idBuckets = clamp(n/idRowsPerBucket, 16, 1024)` — at the defaults
-    * exactly `clamp(n/1024, …)` / `clamp(n/2048, …)`.
-    *
-    * DEPLOYMENT KNOBS (VERDICT r19 #7) — the constants encode a
-    * LISTING-COST MODEL measured on THIS machine's local filesystem
-    * (driver-side directory listing ≈ linear in bucket count at
-    * roughly the cost of reading a few tens of KB per directory;
-    * pruned-read volume per probed bucket ≈ `32n/bandBuckets` rows ×
-    * ~40 B): the 32k-row bowl floor is where those two curves cross
-    * HERE, not a universal constant. A deployment retunes by
-    * re-measuring one bucket curve (the `buckets` and `decade` sections
-    * recorded in PROBES_r19.json / PROBES_r20.json show the method;
-    * [[graft.ScaleProbe]]'s store section times a store probe per
-    * bucket count) and passing its own
-    * floor as `bandRowsPerBucket`. `maxBuckets` defaults to the 8192
-    * local-directory bound, which BINDS past ~8M docs — at 10¹⁰ rows
-    * the clamp leaves ~1.2 M banded rows per bucket vs the measured
-    * 32k optimum (~37× the optimal pruned-read volume per probed
-    * bucket), so an object store with a flat namespace (S3-style
-    * prefix listing, no per-directory inode cost) should raise
-    * `maxBuckets` to keep the count proportional; the listing term it
-    * pays instead is per-probe LIST calls, typically amortized by the
-    * probe's bounded bucket set (≤ batch × bands distinct buckets per
-    * probe, regardless of `maxBuckets`).
-    *
-    * ×1000 DECADE POINT (VERDICT r19 #6, PROBES_r20
-    * `store_decade_x1000`, 5M docs / 160M banded rows): the id clamp
-    * is validated at its first binding decade (unclamping 1024 →
-    * 2441 id buckets slows the probe 22%), the store beats the
-    * in-memory probe 5–7× (11.8 s rule / 8.6 s best vs 59.5 s), but
-    * the 32k-row band constant does NOT extrapolate — half the
-    * rule's buckets (65k rows/bucket) probes 1.37× faster, so the
-    * optimum rows-per-bucket GROWS with n (the listing tax is flat
-    * per directory while per-bucket read volume shrinks). Past ~10⁶
-    * docs raise `bandRowsPerBucket` toward ~64k on listing-heavy
-    * filesystems; the default stays 32k (the miss costs 1.37×, and
-    * write cost moves the other way — 277.7 s at 65k rows/bucket vs
-    * 95.2 s at 16k — so write-heavy pipelines sit nearer the rule).
-    */
-  def recommendedBucketCounts(indexRows: Long,
-                              maxBuckets: Int = 8192,
-                              bandRowsPerBucket: Long = 32768L,
-                              idRowsPerBucket: Long = 2048L): (Int, Int) = {
-    require(indexRows >= 0, s"indexRows must be non-negative, got $indexRows")
-    require(bandRowsPerBucket >= 1 && idRowsPerBucket >= 1,
-      s"rows-per-bucket targets must be positive, got " +
-        s"$bandRowsPerBucket/$idRowsPerBucket")
-    val band = math.min(maxBuckets.toLong,
-      math.max(16L, indexRows * 32 / bandRowsPerBucket)).toInt
-    val id = math.min(1024L,
-      math.max(16L, indexRows / idRowsPerBucket)).toInt
-    (band, id)
-  }
-
   /** Create a managed [[IndexStore.Lexical]] root
     * ([[IndexStore.initManaged]]). */
   def initManagedNearDupIndexStore(spark: SparkSession, root: String,

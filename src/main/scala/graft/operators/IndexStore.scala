@@ -2,7 +2,7 @@ package graft.operators
 
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
+import java.util.concurrent.atomic.{AtomicLong, AtomicReference, AtomicReferenceArray}
 
 import org.apache.hadoop.fs.{FileContext, Options, Path}
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
@@ -32,9 +32,9 @@ import org.apache.spark.sql.functions._
   *     `id_buckets`.
   *
   * Per-probe read volume is `(probed buckets / bandBuckets) × corpus` —
-  * flat in corpus size while the bucket counts track it
-  * ([[Dedup.recommendedBucketCounts]]; [[reband]] is that maintenance
-  * step, and needs no rescan because signatures are stored).
+  * flat in corpus size while the bucket counts track it (callers pass
+  * the counts; [[reband]] is the maintenance step that changes them, and
+  * needs no rescan because signatures are stored).
   *
   * A MANAGED root holds immutable versions, `$root/versions/vNNNNN/`,
   * plus `$root/CURRENT`, a pointer committed by temp file and
@@ -502,37 +502,48 @@ object IndexStore {
 
   private val parallelCalls = new AtomicLong()
 
-  /** Run two independent Spark actions side by side (overlap
-    * independent jobs: their driver-side planning and commit overlap,
-    * and one job's tasks back-fill the slots the other's tail leaves
-    * idle). Leg `a` runs on the calling thread, leg `b` on a fresh
-    * daemon thread, which inherits the caller's Spark local properties
-    * (job group, description, scheduler pool, job tags). No shared pool
-    * is involved, so nested calls (maintain → write → inParallel) cannot
-    * starve one. Each leg tags its jobs; the first failure cancels the
-    * other leg's active jobs, both legs settle, and that first failure
-    * is rethrown (a later one rides along as suppressed). So no write is
-    * left running past the call.
+  /** Run two independent Spark actions side by side ([[inParallel]] over
+    * two legs). */
+  private[graft] def inParallel(a: => Unit, b: => Unit): Unit =
+    inParallel(Seq(() => a, () => b))
+
+  /** Run independent Spark actions side by side and return their results
+    * in leg order (overlap independent jobs: their driver-side planning
+    * and commit overlap, and one job's tasks back-fill the slots another's
+    * tail leaves idle). The first leg runs on the calling thread, every
+    * other leg on a fresh daemon thread, which inherits the caller's
+    * Spark local properties (job group, description, scheduler pool, job
+    * tags). No shared pool is involved, so nested calls (maintain → write
+    * → inParallel) cannot starve one. Each leg tags its jobs; the first
+    * failure cancels every other leg's active jobs, all legs settle, and
+    * that first failure is rethrown (a later one rides along as
+    * suppressed). So no write is left running past the call.
     */
-  private[graft] def inParallel(a: => Unit, b: => Unit): Unit = {
+  private[graft] def inParallel[T](legs: Seq[() => T]): Seq[T] = {
     val sc = SparkSession.active.sparkContext
     val tag = s"graft-parallel-${parallelCalls.incrementAndGet()}"
     val first = new AtomicReference[Throwable]()
-    def leg(mine: String, other: String)(f: => Unit): Unit = {
-      sc.addJobTag(mine)
-      try f
+    val results = new AtomicReferenceArray[Any](legs.size)
+    def leg(i: Int): Unit = {
+      sc.addJobTag(s"$tag-$i")
+      try results.set(i, legs(i)())
       catch { case t: Throwable =>
-        if (first.compareAndSet(null, t)) sc.cancelJobsWithTag(other)
+        if (first.compareAndSet(null, t))
+          legs.indices.filter(_ != i).foreach(j => sc.cancelJobsWithTag(s"$tag-$j"))
         else if (first.get ne t) first.get.addSuppressed(t)
-      } finally sc.removeJobTag(mine)
+      } finally sc.removeJobTag(s"$tag-$i")
     }
-    // created before leg a tags this thread: b inherits the caller's
-    // properties as they are, without a's tag
-    val tb = new Thread(() => leg(s"$tag-b", s"$tag-a")(b), s"$tag-b")
-    tb.setDaemon(true)
-    tb.start()
-    leg(s"$tag-a", s"$tag-b")(a)
-    tb.join()
+    // created before leg 0 tags this thread: the others inherit the
+    // caller's properties as they are, without leg 0's tag
+    val threads = legs.indices.drop(1).map { i =>
+      val t = new Thread(() => leg(i), s"$tag-$i")
+      t.setDaemon(true)
+      t.start()
+      t
+    }
+    if (legs.nonEmpty) leg(0)
+    threads.foreach(_.join())
     Option(first.get).foreach(t => throw t)
+    legs.indices.map(i => results.get(i).asInstanceOf[T])
   }
 }

@@ -1305,8 +1305,8 @@ object Similarity {
     * just widen the probed bucket set; nothing store-sided changes,
     * since candidates still meet on the index's exact keys). The flip
     * decision is the caller's PROBE POLICY, pinned explicitly because it
-    * is part of a graded query's candidate contract — [[storeProbeFlips]]
-    * is the recall-governed derivation a pipeline composes in. Decisions
+    * is part of a graded query's candidate contract
+    * ([[recommendedSemDeltaProbe]] derives one from recall). Decisions
     * are identical to [[deltaSemNearDupFromIndex]] over the full frame
     * at that `(width, flips)`.
     */
@@ -1327,20 +1327,6 @@ object Similarity {
   def storedRowsPerBand(spark: SparkSession, rawPath: String): Int =
     IndexStore.layout(spark, IndexStore.Semantic,
       IndexStore.resolveStoreDir(spark, rawPath)).width
-
-  /** The recall-governed flip decision for probing a persisted store
-    * at its RECORDED width — [[recommendedSemDeltaProbe]]'s probe half
-    * for the store regime, computed from `meta` alone (no index scan,
-    * so it is free to evaluate per batch): engage the 1-flip probe
-    * whenever the plain banding curve at the stored width misses
-    * `recallTarget` at the threshold cosine. A pipeline composes this
-    * into [[deltaSemNearDupFromStore]]; graded queries pin their flips
-    * explicitly because the probe rule is part of the oracle contract.
-    */
-  def storeProbeFlips(spark: SparkSession, rawPath: String, threshold: Double,
-                      recallTarget: Double = 0.9): Int =
-    if (bandingRecall(threshold, storedRowsPerBand(spark, rawPath),
-        flips = 0) >= recallTarget) 0 else 1
 
   /** Read a persisted signature store back as its [[signatureFrame]]
     * — the durability→speed bridge the decade measurement prescribes:

@@ -434,31 +434,32 @@ object CurationJob {
             "dedup_decisions" -> keepList,
             "mixture_report" -> weights,
             "train_shards" -> trainShards)
-          def writeOne(name: String, df: DataFrame): (String, Long) = {
-            val obs = org.apache.spark.sql.Observation(s"graft_curation_$name")
-            df.observe(obs, count(lit(1)).as("n_rows"))
-              .write.mode("overwrite").parquet(s"$outDir/$name")
-            name -> obs.get("n_rows").asInstanceOf[Long]
-          }
-          // corpus_clean FIRST and alone: its plan computes (and fills)
-          // the scored / keepList / corpusClean caches every other
-          // table reads. The remaining four writes are then independent
-          // jobs over warm caches — submitted from driver threads so
-          // each job's tasks back-fill the slots the previous job's
-          // tail would leave idle (guide §2.6). Output tables and row
-          // counts are identical to the sequential loop.
-          val first = writeOne(tables.head._1, tables.head._2)
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.duration.Duration
-          implicit val ec: scala.concurrent.ExecutionContext =
-            scala.concurrent.ExecutionContext.global
-          val rest = tables.tail
-            .map { case (n, df) => Future(writeOne(n, df)) }
-            .map(f => scala.util.Try(Await.result(f, Duration.Inf)))
-          (first +: rest.map(_.get)).toMap
+          writeTables(outDir, tables)
         } finally corpusClean.unpersist()
       } finally keepList.unpersist()
     } finally scored.unpersist()
+  }
+
+  /** Write `tables` as parquet under `outDir` and return each one's row
+    * count. The head table is written FIRST and alone: in [[run]] its plan
+    * computes (and fills) the caches every other table reads. The rest
+    * are then independent jobs over warm caches, written side by side on
+    * [[IndexStore.inParallel]] so each job's tasks back-fill the slots the
+    * previous job's tail would leave idle; the first failed write cancels
+    * the others' jobs and is rethrown. Output tables and row
+    * counts are identical to a sequential loop.
+    */
+  private[graft] def writeTables(outDir: String,
+                                 tables: Seq[(String, DataFrame)]): Map[String, Long] = {
+    def writeOne(name: String, df: DataFrame): (String, Long) = {
+      val obs = org.apache.spark.sql.Observation(s"graft_curation_$name")
+      df.observe(obs, count(lit(1)).as("n_rows"))
+        .write.mode("overwrite").parquet(s"$outDir/$name")
+      name -> obs.get("n_rows").asInstanceOf[Long]
+    }
+    val first = writeOne(tables.head._1, tables.head._2)
+    (first +: IndexStore.inParallel(tables.tail.map { case (n, df) =>
+      () => writeOne(n, df) })).toMap
   }
 
   def main(args: Array[String]): Unit = {

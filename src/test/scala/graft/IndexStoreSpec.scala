@@ -14,7 +14,8 @@ import graft.operators.{Dedup, IndexStore, Similarity}
 import graft.operators.IndexStore.StoreKind
 
 /** The shared store lifecycle ([[IndexStore]]): atomic, validated meta;
-  * failure-first cancellation in [[IndexStore.inParallel]]; and a crash
+  * failure-first cancellation in [[IndexStore.inParallel]], over two legs
+  * and over the table writes of `CurationJob.writeTables`; and a crash
   * between a managed root's green build and its pointer swap, run over
   * both store kinds with one test body.
   */
@@ -70,6 +71,15 @@ class IndexStoreSpec extends SparkSpec {
 
   // --------------------------------------------------------- inParallel
 
+  /** The jobs of `tagged` still active after up to 10 s of settling. */
+  private def activeAfterSettling(tagged: ConcurrentLinkedQueue[Integer]): Set[Int] = {
+    val deadline = System.nanoTime() + 10e9.toLong
+    def stillActive = spark.sparkContext.statusTracker.getActiveJobIds().toSet
+      .intersect(tagged.asScala.map(_.intValue).toSet)
+    while (stillActive.nonEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+    stillActive
+  }
+
   test("inParallel: the first failure cancels the other leg's job and is rethrown") {
     val sc = spark.sparkContext
     val tagged = new ConcurrentLinkedQueue[Integer]()
@@ -103,14 +113,53 @@ class IndexStoreSpec extends SparkSpec {
         val sec = (System.nanoTime() - t0) / 1e9
         assert(e.getMessage == "leg failed")
         assert(sec < 30, f"returned after $sec%.1f s")
-        val deadline = System.nanoTime() + 10e9.toLong
-        def stillActive = sc.statusTracker.getActiveJobIds().toSet
-          .intersect(tagged.asScala.map(_.intValue).toSet)
-        while (stillActive.nonEmpty && System.nanoTime() < deadline)
-          Thread.sleep(50)
-        assert(tagged.size > 0 && stillActive.isEmpty,
-          s"tagged jobs still active: $stillActive")
+        val active = activeAfterSettling(tagged)
+        assert(tagged.size > 0 && active.isEmpty, s"tagged jobs still active: $active")
       }
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("CurationJob.writeTables: a failing write returns promptly and leaves no tagged job active") {
+    import org.apache.spark.sql.functions.{col, udf}
+    val sc = spark.sparkContext
+    val tagged = new ConcurrentLinkedQueue[Integer]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+            .exists(_.contains("graft-parallel"))) {
+          tagged.add(e.jobId); IndexStoreSpec.writesStarted.countDown()
+        }
+    }
+    // one task each, so the three side-by-side writes fit the 4 slots:
+    // two run 60 s unless cancelled, one fails once all three started
+    val slow = udf { (x: Long) =>
+      val tc = TaskContext.get()
+      var i = 0
+      while (i < 600 && !tc.isInterrupted()) { Thread.sleep(100); i += 1 }
+      x
+    }
+    val failing = udf { (x: Long) =>
+      IndexStoreSpec.writesStarted.await(30, TimeUnit.SECONDS)
+      if (x >= 0) throw new IllegalStateException("write failed")
+      x
+    }
+    def one(f: org.apache.spark.sql.expressions.UserDefinedFunction) =
+      spark.range(0, 1, 1, 1).select(f(col("id")).as("id"))
+    IndexStoreSpec.writesStarted = new CountDownLatch(3)
+    sc.addSparkListener(listener)
+    try {
+      val out = tmp("graft_curation_writes")
+      val t0 = System.nanoTime()
+      val e = intercept[Exception](graft.pipelines.CurationJob.writeTables(out,
+        Seq("first" -> spark.range(3).toDF("id"), "slow_a" -> one(slow),
+            "bad" -> one(failing), "slow_b" -> one(slow))))
+      val sec = (System.nanoTime() - t0) / 1e9
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => Option(t.getMessage).exists(_.contains("write failed"))), e)
+      assert(sec < 30, f"returned after $sec%.1f s")
+      val active = activeAfterSettling(tagged)
+      assert(tagged.size >= 3 && active.isEmpty, s"tagged jobs still active: $active")
+      assert(spark.read.parquet(s"$out/first").count() == 3)
     } finally sc.removeSparkListener(listener)
   }
 
@@ -192,4 +241,10 @@ class IndexStoreSpec extends SparkSpec {
     assert(Files.isDirectory(root) && offenders.isEmpty,
       s"one-shot mains belong in PROBES_r*.json, not src/main: $offenders")
   }
+}
+
+object IndexStoreSpec {
+  /** Counts the tagged write jobs started; a task of the failing write
+    * waits on it (tasks run in this JVM under `local[4]`). */
+  @volatile var writesStarted = new CountDownLatch(0)
 }
