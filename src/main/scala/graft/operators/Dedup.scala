@@ -629,12 +629,39 @@ object Dedup {
         element_at(sig, b * lit(rowsPerBand) + lit(r + 1))): _*))
   }
 
+  /** The band keys of a stored 64-way MinHash signature as
+    * `array<struct<band, bh>>` ([[sigBandKeys]] with each key's band):
+    * the [[IndexStore.Lexical]] kind's key function, from which its
+    * `banded/` rows and the small-delta probe's keys both derive. */
+  private[operators] def bandKeyStructs(sig: Column, bands: Int): Column =
+    transform(sigBandKeys(sig, bands), (bh, band) =>
+      struct(band.as("band"), bh.as("bh")))
+
   /** `(id, band, bh)`: one row per band key of a [[nearDupIndex]]
     * frame's signature — the probe side, the index side and the
     * persisted store's `banded/` table all band through it. */
   private[operators] def bandKeyRows(index: DataFrame, bands: Int): DataFrame =
     index.select(col("id"), posexplode(sigBandKeys(col("sig"), bands)))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bh")
+
+  /** The exact-Jaccard verify of candidate pairs (the
+    * [[IndexStore.Lexical]] kind's `verify`): `pairs` carries the
+    * incoming side's `sh_i`/`hs_i` and the standing side's `sh_c`/`hs_c`;
+    * the pairs whose hash Jaccard and then exact Jaccard reach
+    * `threshold` are kept ([[verifiedJaccard]]'s two stages). Both store
+    * probe paths verify through it, so their float arithmetic is the
+    * same by construction. */
+  private[operators] def jaccardVerify(pairs: DataFrame,
+                                       threshold: Double): DataFrame =
+    pairs
+      .withColumn("inter_h", graft.expressions.SortedIntersectCount(
+        col("hs_i"), col("hs_c")).cast("double"))
+      .filter(col("inter_h") /
+        (size(col("sh_i")) + size(col("sh_c")) - col("inter_h")) >= threshold)
+      .withColumn("inter",
+        size(array_intersect(col("sh_i"), col("sh_c"))).cast("double"))
+      .filter(col("inter") /
+        (size(col("sh_i")) + size(col("sh_c")) - col("inter")) >= threshold)
 
   /** The verify fetch of a delta probe core: the `fetched0` rows whose
     * `id_c` is among `candIds`, semi-reduced through a broadcast while
@@ -795,8 +822,6 @@ object Dedup {
     // make the candidate set corpus-scale, and a payload broadcast
     // there is a driver OOM cliff where the shuffle merely degrades
     // (round-17 review).
-    val interH = graft.expressions.SortedIntersectCount(
-      col("hs_i"), col("hs_c")).cast("double")
     // id_i ≠ id_c: a doc is never its own duplicate — inert in normal
     // operation (a standing index and an incoming batch share no ids),
     // load-bearing under foreachBatch REPLAY, where a crashed-after-
@@ -814,17 +839,10 @@ object Dedup {
     // the degraded-but-safe shuffle semi.
     val fetched = candidateFetch(fetched0, candIdsPlan, knownCandCount,
       maxFetchBroadcastIds)
-    val corpusMatch = candPairs
-      .join(broadcast(incIdx.select(col("id").as("id_i"),
-        col("sh").as("sh_i"), col("hs").as("hs_i"))), "id_i")
-      .join(fetched.hint("shuffle_hash"), "id_c")
-      .withColumn("inter_h", interH)
-      .filter(col("inter_h") /
-        (size(col("sh_i")) + size(col("sh_c")) - col("inter_h")) >= threshold)
-      .withColumn("inter",
-        size(array_intersect(col("sh_i"), col("sh_c"))).cast("double"))
-      .filter(col("inter") /
-        (size(col("sh_i")) + size(col("sh_c")) - col("inter")) >= threshold)
+    val corpusMatch = IndexStore.Lexical.verify(candPairs
+        .join(broadcast(incIdx.select(col("id").as("id_i"),
+          col("sh").as("sh_i"), col("hs").as("hs_i"))), "id_i")
+        .join(fetched.hint("shuffle_hash"), "id_c"), threshold)
       .groupBy(col("id_i")).agg(min(col("id_c")).as("__graft_ck"))
     // within-batch leg: the standard banded pair path over the batch only
     val batchKeeper = verifiedJaccard(
@@ -851,17 +869,42 @@ object Dedup {
     IndexStore.resolveStoreDir(spark, path)
 
   /** [[deltaNearDup]] against a persisted [[IndexStore.Lexical]] store —
-    * the corpus-size-independent probe: [[IndexStore.fetchCandidates]]
-    * reads only the band-buckets the batch's keys hash to and the
-    * candidates' id-buckets, and the probe core runs over that pruned
-    * payload at the store's recorded width. Decisions are IDENTICAL to
-    * [[deltaNearDupFromIndex]] over the full index frame.
+    * the corpus-size-independent probe ([[nearDupStoreProbe]]'s
+    * decisions). Decisions equal [[deltaNearDupFromIndex]] over the full
+    * index frame.
     */
   def deltaNearDupFromStore(spark: SparkSession, rawPath: String,
                             incomingIds: DataFrame,
                             incomingIndex: DataFrame, idCol: String,
                             threshold: Double, hotBucketDrop: Int = 0,
-                            hotBucketCap: Int = HotBucketCap): DataFrame = {
+                            hotBucketCap: Int = HotBucketCap): DataFrame =
+    nearDupStoreProbe(spark, rawPath, incomingIds, incomingIndex, idCol,
+      threshold, hotBucketDrop, hotBucketCap).decisions
+
+  /** The lexical store probe on the path [[IndexStore.probe]] picks: a
+    * delta within the small-delta bounds takes the shuffle-free path and
+    * also returns its local admitted rows; any other takes
+    * [[deltaNearDupFromStorePruned]]. */
+  private[graft] def nearDupStoreProbe(spark: SparkSession, rawPath: String,
+      incomingIds: DataFrame, incomingIndex: DataFrame, idCol: String,
+      threshold: Double, hotBucketDrop: Int = 0,
+      hotBucketCap: Int = HotBucketCap): IndexStore.Probe =
+    IndexStore.probe(spark, IndexStore.Lexical, rawPath, incomingIds,
+        incomingIndex, idCol, threshold, hotBucketDrop = hotBucketDrop,
+        hotBucketCap = hotBucketCap)(
+      deltaNearDupFromStorePruned(spark, rawPath, incomingIds, incomingIndex,
+        idCol, threshold, hotBucketDrop, hotBucketCap))
+
+  /** The scale path of [[deltaNearDupFromStore]], and the reference the
+    * small-delta path is tested against: [[IndexStore.fetchCandidates]]
+    * reads only the band-buckets the batch's keys hash to and the
+    * candidates' id-buckets, and the probe core runs over that pruned
+    * payload at the store's recorded width.
+    */
+  private[graft] def deltaNearDupFromStorePruned(spark: SparkSession,
+      rawPath: String, incomingIds: DataFrame, incomingIndex: DataFrame,
+      idCol: String, threshold: Double, hotBucketDrop: Int = 0,
+      hotBucketCap: Int = HotBucketCap): DataFrame = {
     val (pruned, candCount, layout) = IndexStore.fetchCandidates(spark,
       IndexStore.Lexical, rawPath, incomingIndex)
     deltaNearDupFromIndex(pruned, incomingIds, incomingIndex, idCol,

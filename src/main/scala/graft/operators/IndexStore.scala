@@ -4,9 +4,19 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.{AtomicLong, AtomicReference, AtomicReferenceArray}
 
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.{FileContext, Options, Path}
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+import graft.expressions.BroadcastLookup
 
 /** The PROBE-PRUNABLE persisted index store, written once for both
   * near-dup regimes. A [[StoreKind]] names what differs between them;
@@ -34,7 +44,26 @@ import org.apache.spark.sql.functions._
   * Per-probe read volume is `(probed buckets / bandBuckets) × corpus` —
   * flat in corpus size while the bucket counts track it (callers pass
   * the counts; [[reband]] is the maintenance step that changes them, and
-  * needs no rescan because signatures are stored).
+  * needs no rescan because signatures are stored). Every read passes the
+  * kind's schema (ids are BIGINT by store contract), so none runs a
+  * schema-inference job and an empty table reads as empty.
+  *
+  * A probe ([[probe]]) takes one of TWO PATHS, with identical decisions:
+  *
+  *   - the SMALL-DELTA path ([[smallDeltaProbe]]): a delta of at most
+  *     [[MaxDeltaRows]] id rows and index rows (no `hotBucketDrop`) whose
+  *     candidates stay within [[MaxCandidatePairs]] is probed in three
+  *     shuffle-free jobs — collect the delta, scan the probed `banded/`
+  *     buckets, scan the candidate `payload/` buckets and verify — with
+  *     the bookkeeping on the driver, and returns local frames;
+  *   - the SCALE path ([[fetchCandidates]] plus the kind's DataFrame
+  *     probe core): any delta above either bound falls back to it, and
+  *     it is the reference the small-delta path is tested against.
+  *
+  * [[append]] writes a local batch of at most [[MaxDeltaRows]] rows (the
+  * small path's admitted rows) in one job per table with no exchange;
+  * any other frame is repartitioned on the bucket column. Both write one
+  * file per bucket.
   *
   * A MANAGED root holds immutable versions, `$root/versions/vNNNNN/`,
   * plus `$root/CURRENT`, a pointer committed by temp file and
@@ -64,20 +93,30 @@ object IndexStore {
 
   /** What distinguishes one store kind from the other.
     *
-    * @param payload   the stored frame's columns (`id` first, `sig` among them)
-    * @param widthKey  the band width's key in `meta`
-    * @param widthRule the width's validity test and its description
-    * @param bandKeys  `(id, sig)` frame × width × flips →
-    *                  `(id, keyCols…)`; stored rows band at flips = 0,
-    *                  a probe's flips widen its key set
-    * @param keyCols   the band-key join columns; the LAST one is the
-    *                  hash the `bkt` partition is taken from
-    * @param side      a side table maintenance carries along
+    * @param name       the kind's name in job descriptions
+    * @param payload    the stored frame's columns and types (`id BIGINT`
+    *                   first, `sig` among them); every read passes it, so
+    *                   no read infers a schema
+    * @param widthKey   the band width's key in `meta`
+    * @param widthRule  the width's validity test and its description
+    * @param bandKeys   signature × width × flips → the signature's band
+    *                   keys as `array<struct<keyCols…>>`; stored rows
+    *                   band at flips = 0, a probe's flips widen its key
+    *                   set
+    * @param keyCols    the band-key columns and types; the LAST one is
+    *                   the `bigint` hash the `bkt` partition is taken from
+    * @param verifyCols the payload columns a pair's verify reads, as
+    *                   `<col>_i` (incoming) and `<col>_c` (standing)
+    * @param verify     candidate pairs × threshold → the pairs that are
+    *                   near-duplicates
+    * @param side       a side table maintenance carries along
     */
-  final case class StoreKind(payload: Seq[String], widthKey: String,
+  final case class StoreKind(name: String, payload: StructType,
+                             widthKey: String,
                              widthRule: (Int => Boolean, String),
-                             bandKeys: (DataFrame, Int, Int) => DataFrame,
-                             keyCols: Seq[String],
+                             bandKeys: (Column, Int, Int) => Column,
+                             keyCols: StructType, verifyCols: Seq[String],
+                             verify: (DataFrame, Double) => DataFrame,
                              side: Option[SideTable] = None) {
     def checkLayout(l: Layout): Unit = {
       require(widthRule._1(l.width),
@@ -86,21 +125,32 @@ object IndexStore {
         s"bucket counts must be positive, got ${l.bandBuckets}/${l.idBuckets}")
     }
     private[IndexStore] def metaKeys = Seq(widthKey, "band_buckets", "id_buckets")
+    private[IndexStore] def columns: Seq[Column] = payload.fieldNames.toSeq.map(col)
+    /** `(id, keyCols…)`: one row per band key of each `(id, sig)` row. */
+    private[IndexStore] def keyRows(frame: DataFrame, width: Int,
+                                    flips: Int): DataFrame =
+      frame.select(col("id"), inline(bandKeys(col("sig"), width, flips)))
+    private[IndexStore] def payloadSchema: StructType =
+      payload.add("idb", LongType)
+    private[IndexStore] def bandedSchema: StructType =
+      StructType(StructField("id", LongType) +: keyCols.fields)
+        .add("bkt", LongType)
   }
 
-  val Lexical: StoreKind = StoreKind(Seq("id", "sh", "hs", "sig"), "bands",
-    (w => w >= 1 && 64 % w == 0, "a divisor of the 64-hash signature"),
-    (f, w, _) => Dedup.bandKeyRows(f, w), Seq("band", "bh"),
-    Some(Dedup.FingerprintSide))
+  val Lexical: StoreKind = StoreKind("lexical",
+    StructType.fromDDL("id BIGINT, sh ARRAY<STRING>, hs ARRAY<BIGINT>, sig ARRAY<BIGINT>"),
+    "bands", (w => w >= 1 && 64 % w == 0, "a divisor of the 64-hash signature"),
+    (sig, w, _) => Dedup.bandKeyStructs(sig, w),
+    StructType.fromDDL("band INT, bh BIGINT"), Seq("sh", "hs"),
+    Dedup.jaccardVerify, Some(Dedup.FingerprintSide))
 
-  val Semantic: StoreKind = StoreKind(Seq("id", "e_d", "sig", "n"),
+  val Semantic: StoreKind = StoreKind("semantic",
+    StructType.fromDDL("id BIGINT, e_d ARRAY<DOUBLE>, sig ARRAY<INT>, n DOUBLE"),
     "rows_per_band",
     (w => w >= 1 && w <= Similarity.MaxRowsPerBand,
       s"in [1, ${Similarity.MaxRowsPerBand}]"),
-    (f, w, flips) =>
-      if (flips >= 1) Similarity.packedBandProbeKeys(f, w)
-      else Similarity.packedBandKeys(f, w),
-    Seq("key"))
+    Similarity.bandKeyStructs, StructType.fromDDL("key BIGINT"),
+    Seq("e_d", "n"), Similarity.cosineVerify)
 
   // ------------------------------------------------------------- meta
 
@@ -176,15 +226,30 @@ object IndexStore {
 
   // ------------------------------------------------- store directories
 
+  // ids are BIGINT by store contract: rows are written with their id
+  // cast, so `idb` hashes the same value every reader computes it from
+
   private def payloadRows(kind: StoreKind, rows: DataFrame,
                           l: Layout): DataFrame =
-    rows.select(kind.payload.map(col) :+
-      pmod(xxhash64(col("id")), lit(l.idBuckets.toLong)).as("idb"): _*)
+    rows.select(col("id").cast(LongType).as("id") +: kind.columns.tail :+
+      pmod(xxhash64(col("id").cast(LongType)), lit(l.idBuckets.toLong)).as("idb"): _*)
 
   private def bandedRows(kind: StoreKind, rows: DataFrame,
                          l: Layout): DataFrame =
-    kind.bandKeys(rows, l.width, 0).withColumn("bkt",
-      pmod(col(kind.keyCols.last), lit(l.bandBuckets.toLong)))
+    kind.keyRows(rows.withColumn("id", col("id").cast(LongType)), l.width, 0)
+      .withColumn("bkt",
+        pmod(col(kind.keyCols.fieldNames.last), lit(l.bandBuckets.toLong)))
+
+  /** The `payload/` table of the store directory `dir`, read under the
+    * kind's schema (no inference job; an empty table reads as empty). */
+  private def payloadTable(spark: SparkSession, kind: StoreKind,
+                           dir: String): DataFrame =
+    spark.read.schema(kind.payloadSchema).parquet(s"$dir/payload")
+
+  /** The `banded/` table of the store directory `dir` (as [[payloadTable]]). */
+  private def bandedTable(spark: SparkSession, kind: StoreKind,
+                          dir: String): DataFrame =
+    spark.read.schema(kind.bandedSchema).parquet(s"$dir/banded")
 
   /** One partition column's table write: repartitioned on it first so
     * each partition value lands in one task (one file per bucket). */
@@ -202,8 +267,8 @@ object IndexStore {
   private def writeStore(kind: StoreKind, frame: DataFrame, path: String,
                          l: Layout, bandedFromInput: Boolean): Unit = {
     kind.checkLayout(l)
-    require(kind.payload.forall(frame.columns.contains),
-      s"frame must hold (${kind.payload.mkString(", ")}); got " +
+    require(kind.payload.fieldNames.forall(frame.columns.contains),
+      s"frame must hold (${kind.payload.fieldNames.mkString(", ")}); got " +
         frame.columns.mkString(", "))
     val spark = frame.sparkSession
     writeMeta(spark, s"$path/meta", kind.widthKey -> l.width,
@@ -221,36 +286,60 @@ object IndexStore {
       // ONE pass over the caller's plan (at corpus scale a full text or
       // embedding pass): the payload write counts its rows via observe()
       // and banded/ derives from the just-written payload's (id, sig)
-      // columns. A partitioned write of zero rows leaves no file to
-      // infer a schema from, so an empty store bands the empty input.
+      // columns. An empty store bands the empty input (no re-read); its
+      // observation may report nothing, when adaptive execution replaces
+      // the empty plan, observe node included, by an empty relation.
       val obs = Observation()
       land(payloadRows(kind, frame, l).observe(obs, count(lit(1)).as("n_rows")),
         "idb", "overwrite", s"$path/payload")
       banded(
-        if (obs.get("n_rows").asInstanceOf[Long] == 0L)
+        if (obs.get.get("n_rows").forall(_ == 0L))
           frame.select(col("id"), col("sig")).limit(0)
-        else spark.read.parquet(s"$path/payload").select("id", "sig"))
+        else payloadTable(spark, kind, path).select("id", "sig"))
     }
   }
 
   /** The payload frame of the store at `rawPath` (pointer-resolved). */
   def read(spark: SparkSession, kind: StoreKind, rawPath: String): DataFrame =
-    spark.read.parquet(s"${resolveStoreDir(spark, rawPath)}/payload")
-      .select(kind.payload.map(col): _*)
+    payloadTable(spark, kind, resolveStoreDir(spark, rawPath))
+      .select(kind.columns: _*)
 
   /** Append-only maintenance: admitted rows (already computed for the
     * probe — the shared-frame shape) land in both tables under the
     * store's recorded layout. The two writes are independent jobs and
     * run side by side; callers pass a materialized frame, so no lineage
-    * is computed twice. */
+    * is computed twice.
+    *
+    * A LOCAL frame of at most [[MaxDeltaRows]] rows (the small-delta
+    * probe's `admitted` rows) is written in one job per table, one task,
+    * no exchange; any other frame is repartitioned on the bucket column,
+    * one task per bucket ([[land]]). Both write one file per bucket.
+    */
   def append(spark: SparkSession, kind: StoreKind, rawPath: String,
              newRows: DataFrame): Unit = {
     val path = resolveStoreDir(spark, rawPath)
     val l = layout(spark, kind, path)
-    inParallel(
-      land(payloadRows(kind, newRows, l), "idb", "append", s"$path/payload"),
-      land(bandedRows(kind, newRows, l), "bkt", "append", s"$path/banded"))
+    def phase(table: String)(f: => Unit): Unit =
+      withJobDescription(spark, s"store-append ${kind.name}: $table")(f)
+    newRows.queryExecution.optimizedPlan match {
+      case r: LocalRelation if r.data.size <= MaxDeltaRows =>
+        if (r.data.nonEmpty) inParallel(
+          phase("payload")(landLocal(payloadRows(kind, newRows, l), "idb",
+            s"$path/payload")),
+          phase("banded")(landLocal(bandedRows(kind, newRows, l), "bkt",
+            s"$path/banded")))
+      case _ =>
+        inParallel(
+          land(payloadRows(kind, newRows, l), "idb", "append", s"$path/payload"),
+          land(bandedRows(kind, newRows, l), "bkt", "append", s"$path/banded"))
+    }
   }
+
+  /** [[land]] for a bounded local frame: one task (a local frame's
+    * partitions coalesce without an exchange) writes one file per
+    * bucket. */
+  private def landLocal(rows: DataFrame, part: String, dir: String): Unit =
+    rows.coalesce(1).write.mode("append").partitionBy(part).parquet(dir)
 
   /** Idempotent [[append]]: rows already in the store are dropped first
     * — the replay-safe maintenance a `foreachBatch` sink needs, where a
@@ -279,12 +368,12 @@ object IndexStore {
       .distinct().collect()
     def keysOf(t: Int) = keys.filter(_.getInt(0) == t).map(_.getLong(1)).toSeq
     val (idbs, bkts) = (keysOf(0), keysOf(1))
-    val bandedId = "id" +: kind.keyCols
+    val bandedId = "id" +: kind.keyCols.fieldNames.toSeq
     if (idbs.nonEmpty) inParallel(
-      land(payload.join(spark.read.parquet(s"$path/payload")
+      land(payload.join(payloadTable(spark, kind, path)
           .where(col("idb").isin(idbs: _*)).select("id"), Seq("id"), "left_anti"),
         "idb", "append", s"$path/payload"),
-      land(banded.join(spark.read.parquet(s"$path/banded")
+      land(banded.join(bandedTable(spark, kind, path)
           .where(col("bkt").isin(bkts: _*)).select(bandedId.map(col): _*)
           .distinct(), bandedId, "left_anti"),
         "bkt", "append", s"$path/banded"))
@@ -310,20 +399,21 @@ object IndexStore {
                       flips: Int = 0): (DataFrame, Long, Layout) = {
     val path = resolveStoreDir(spark, rawPath)
     val l = layout(spark, kind, path)
-    val payload = spark.read.parquet(s"$path/payload")
-    val none = payload.select(kind.payload.map(col): _*).limit(0)
-    val incK = kind.bandKeys(incoming, l.width, flips)
+    val payload = payloadTable(spark, kind, path)
+    val none = payload.select(kind.columns: _*).limit(0)
+    val keyCols = kind.keyCols.fieldNames.toSeq
+    val incK = kind.keyRows(incoming, l.width, flips)
       .withColumnRenamed("id", "id_i")
     val probeBkts = incK
-      .select(pmod(col(kind.keyCols.last), lit(l.bandBuckets.toLong)).as("bkt"))
+      .select(pmod(col(keyCols.last), lit(l.bandBuckets.toLong)).as("bkt"))
       .distinct().collect().map(_.getLong(0)).toSeq
     val stats =
-      if (probeBkts.isEmpty) Array.empty[org.apache.spark.sql.Row]
+      if (probeBkts.isEmpty) Array.empty[Row]
       else broadcast(incK)
-        .join(spark.read.parquet(s"$path/banded")
+        .join(bandedTable(spark, kind, path)
           .where(col("bkt").isin(probeBkts: _*))
-          .select(col("id").as("id_c") +: kind.keyCols.map(col): _*),
-          kind.keyCols)
+          .select(col("id").as("id_c") +: keyCols.map(col): _*),
+          keyCols)
         .filter(col("id_i") =!= col("id_c"))
         .select(pmod(xxhash64(col("id_c")), lit(l.idBuckets.toLong)).as("idb"),
           col("id_c"))
@@ -333,8 +423,320 @@ object IndexStore {
     val candIdb = stats.map(_.getLong(0)).toSeq
     if (candIdb.isEmpty) (none, 0L, l)
     else (payload.where(col("idb").isin(candIdb: _*))
-      .select(kind.payload.map(col): _*), stats.map(_.getLong(1)).sum, l)
+      .select(kind.columns: _*), stats.map(_.getLong(1)).sum, l)
   }
+
+  // ------------------------------------------------- small-delta path
+
+  /** Row bound of the small-delta path, on a delta's id rows and on its
+    * index rows alike, and of the local [[append]]: [[Dedup.HotBucketCap]],
+    * so no band bucket of a delta within it can pass the within-batch
+    * hot-bucket cap. */
+  val MaxDeltaRows: Int = Dedup.HotBucketCap
+
+  /** Candidate bound of the small-delta path: on the `(pair, band)` rows
+    * its candidate scan returns, and on its distinct within-batch pairs.
+    * Each pair costs the driver a few hundred bytes (its candidate row,
+    * its entry in the pair set, its ids in a partner table, which holds
+    * ids only), so the bound keeps that bookkeeping to tens of megabytes;
+    * a delta with more candidates takes the shuffle path, where they cost
+    * executor memory instead. */
+  val MaxCandidatePairs: Int = 100 * 1000
+
+  /** A store probe's result: the `decisions` `(idCol, status, dup_of)`
+    * and, when the small-delta path ran, the incoming index rows it
+    * classified `new` (`admitted`, the kind's payload columns) ready for
+    * [[append]]; both are then local frames. */
+  final case class Probe(decisions: DataFrame, admitted: Option[DataFrame])
+
+  /** The store probe of a delta against the store at `rawPath`, and the
+    * one place that picks its path: [[smallDeltaProbe]] when the caller's
+    * hot-bucket settings cannot engage on a delta it accepts (no
+    * `hotBucketDrop`, a `hotBucketCap` of at least [[MaxDeltaRows]]) and
+    * the delta is within its bounds; otherwise `pruned`, the kind's
+    * DataFrame path over [[fetchCandidates]]. */
+  private[graft] def probe(spark: SparkSession, kind: StoreKind, rawPath: String,
+                           incomingIds: DataFrame, incomingIndex: DataFrame,
+                           idCol: String, threshold: Double, flips: Int = 0,
+                           hotBucketDrop: Int = 0,
+                           hotBucketCap: Int = MaxDeltaRows)(
+                           pruned: => DataFrame): Probe =
+    (if (hotBucketDrop != 0 || hotBucketCap < MaxDeltaRows) None
+     else smallDeltaProbe(spark, kind, rawPath, incomingIds, incomingIndex,
+       idCol, threshold, flips)).getOrElse(Probe(pruned, None))
+
+  /** The store probe of a SMALL delta: [[fetchCandidates]] plus the probe
+    * core's decisions, in three shuffle-free Spark jobs with all the
+    * bookkeeping on the driver. Under AQE every exchange of the
+    * DataFrame path is a job of its own, re-planned between stages, so
+    * a 48-row delta there costs about a dozen jobs; here each job is a
+    * scan (or a local relation) joined to a broadcast built on the
+    * driver ([[BroadcastLookup]]) and collected, so each is one job:
+    *
+    *   1. `delta` — collect the delta's id rows, its index rows and
+    *      their exact and probe band keys (the kind's `bandKeys`);
+    *   2. `candidates` — scan only the probed `banded/` buckets, look
+    *      each stored key up among the probe keys, and collect the
+    *      `(id_i, id_c, idb)` candidates, self-pairs excluded;
+    *   3. `verify` — scan only the candidate `payload/` id-buckets, look
+    *      up the ids of each stored row's incoming partners and then each
+    *      partner's payload, and verify every pair with the kind's
+    *      `verify` (the reference path's own expressions); the
+    *      within-batch pairs (from the collected keys, at `flips` = 1 the
+    *      ≤1-flip rule) are verified in the same job.
+    *
+    * What this broadcasts is bounded by the delta, not by its pairs:
+    * the probe keys and the partner tables carry ids only, and the
+    * delta's verify columns travel once per index row (≤ [[MaxDeltaRows]]
+    * rows, as the reference path's broadcast incoming side does), however
+    * many candidates share a hot bucket.
+    *
+    * The `min()` keepers and the decisions are then built on the driver.
+    * Decisions equal the reference path's (the callers'
+    * `…FromStorePruned`) row for row, in the same schema.
+    *
+    * Returns None, having started at most jobs 1–2, when the delta holds
+    * more than [[MaxDeltaRows]] id or index rows, the candidates pass
+    * [[MaxCandidatePairs]], or an id column is not integral: the caller
+    * then takes the reference path ([[probe]]). Each job carries a
+    * `spark.job.description` `store-probe <kind>: <step>`.
+    */
+  private[graft] def smallDeltaProbe(spark: SparkSession, kind: StoreKind,
+                                     rawPath: String, incomingIds: DataFrame,
+                                     incomingIndex: DataFrame, idCol: String,
+                                     threshold: Double,
+                                     flips: Int = 0): Option[Probe] = {
+    require(idCol != "status" && idCol != "dup_of",
+      s"idCol '$idCol' collides with an output column")
+    val payloadCols = kind.payload.fieldNames.toSeq
+    require(payloadCols.forall(incomingIndex.columns.contains),
+      s"incomingIndex must hold (${payloadCols.mkString(", ")}); got " +
+        incomingIndex.columns.mkString(", "))
+    val idField = incomingIds.select(col(idCol)).schema.head
+    val indexSchema = incomingIndex.select(payloadCols.map(col): _*).schema
+    if (!integral(idField.dataType) || !integral(indexSchema("id").dataType))
+      return None
+    val path = resolveStoreDir(spark, rawPath)
+    val l = layout(spark, kind, path)
+    def phase[T](step: String)(f: => T): T =
+      withJobDescription(spark, s"store-probe ${kind.name}: $step")(f)
+
+    // 1. the delta: id rows (`__ids`) and index rows with their keys
+    val keys = (f: Int) => kind.bandKeys(col("sig"), l.width, f)
+    val delta = incomingIds.select(lit(true).as("__ids"), col(idCol).as("__id"))
+      .unionByName(incomingIndex.select((lit(false).as("__ids") +:
+          payloadCols.map(col)) ++ Seq(keys(0).as("__exact"),
+          (if (flips == 0) col("__exact") else keys(flips)).as("__probe")): _*),
+        allowMissingColumns = true)
+    val at = delta.schema.fieldIndex _
+    val rows = phase("delta")(collectBounded(delta, 2 * MaxDeltaRows))
+      .getOrElse(return None)
+    val (idRows, indexRows) = rows.partition(_.getBoolean(0))
+    if (idRows.size > MaxDeltaRows || indexRows.size > MaxDeltaRows) return None
+    final case class Delta(id: Long, row: Row) {
+      private def keysAt(i: Int) = if (row.isNullAt(i)) Nil else row.getSeq[Row](i)
+      def exact: Seq[Row] = keysAt(at("__exact"))
+      def probe: Seq[Row] = keysAt(at("__probe"))
+      def get(c: String): Any = row.get(at(c))
+    }
+    val index = indexRows.filterNot(_.isNullAt(at("id")))
+      .map(r => Delta(asLong(r.get(at("id"))), r))
+
+    // within-batch pairs (a < b): some exact key of one is a probe key
+    // of the other
+    val exactIds = mutable.HashMap.empty[Row, mutable.ArrayBuffer[Long]]
+    for (d <- index; k <- d.exact)
+      exactIds.getOrElseUpdate(k, mutable.ArrayBuffer.empty) += d.id
+    val within = mutable.HashSet.empty[(Long, Long)]
+    val met = for (d <- index.iterator; k <- d.probe.iterator;
+                   o <- exactIds.getOrElse(k, Nil).iterator if o != d.id)
+      yield (math.min(o, d.id), math.max(o, d.id))
+    while (met.hasNext && within.size <= MaxCandidatePairs) within += met.next()
+    if (within.size > MaxCandidatePairs) return None
+
+    // 2. candidates: probe key's hash → (other key columns…, id_i)
+    val keyNames = kind.keyCols.fieldNames.toSeq
+    val entryType = StructType(kind.keyCols.fields.init :+
+      StructField("id_i", LongType, nullable = false))
+    val probeTable = lookupTable(entryType, for (d <- index; k <- d.probe)
+      yield k.getLong(k.length - 1) -> Row.fromSeq(k.toSeq.init :+ d.id))
+    val candidates =
+      if (probeTable.isEmpty) Seq.empty[Row]
+      else withBroadcast(spark, probeTable) { bc =>
+        val probed = probeTable.keySet.asScala
+          .map(k => Math.floorMod(k.longValue, l.bandBuckets.toLong)).toSeq
+        val hits = bandedTable(spark, kind, path)
+          .where(col("bkt").isin(probed: _*))
+          .select(col("id").as("id_c") +: keyNames.init.map(col) :+
+            explode(BroadcastLookup(col(keyNames.last), bc, entryType)).as("p"): _*)
+          .where(keyNames.init.map(k => col(k) === col(s"p.$k"))
+            .foldLeft(col("p.id_i") =!= col("id_c"))(_ && _))
+          .select(col("p.id_i"), col("id_c"),
+            pmod(xxhash64(col("id_c")), lit(l.idBuckets.toLong)).as("idb"))
+        phase("candidates")(collectBounded(hits, MaxCandidatePairs))
+      }.getOrElse(return None)
+    val cross = candidates.map(r => (r.getLong(0), r.getLong(1))).distinct
+
+    // 3. verify both legs in one job: each standing-side row (`_c`) looks
+    // up the ids of its incoming partners (`id_i`) — a stored row for the
+    // cross pairs, the smaller batch id of a within-batch pair — and then
+    // each partner's verify columns, by id, in one table of the delta's
+    // own rows (the batch leg's standing side reads them there too)
+    val vCols = kind.verifyCols
+    val idType = StructType(Seq(StructField("id_i", LongType, nullable = false)))
+    val rowType = StructType(vCols.map(indexSchema(_)))
+    def partners(pairs: Iterable[(Long, Long)]) =
+      lookupTable(idType, pairs.iterator.map { case (i, c) => c -> Row(i) }.toSeq)
+    def lookup(key: String, bc: Broadcast[LookupTable], t: StructType) =
+      explode(BroadcastLookup(col(key), bc, t)).as("__l")
+    val verified =
+      if (cross.isEmpty && within.isEmpty) Seq.empty[Row]
+      else {
+        val paired = cross.iterator.map(_._1).toSet ++
+          within.iterator.flatMap { case (a, b) => Iterator(a, b) }
+        val rowsById = lookupTable(rowType, index.filter(d => paired(d.id))
+          .map(d => d.id -> Row.fromSeq(vCols.map(d.get))))
+        withBroadcast(spark, rowsById) { rowsBc =>
+        withBroadcast(spark, partners(cross)) { crossBc =>
+        withBroadcast(spark, partners(within.map(_.swap))) { withinBc =>
+          val cCols = ("id_c" +: vCols.map(c => s"${c}_c")).map(col)
+          def legOf(leg: Int, side: DataFrame, bc: Broadcast[LookupTable]) =
+            side.select(lit(leg).as("leg") +: cCols :+ lookup("id_c", bc, idType): _*)
+              .select(col("leg") +: cCols :+ col("__l.id_i").as("id_i"): _*)
+              .select(col("*"), lookup("id_i", rowsBc, rowType))
+              .select((col("leg") +: cCols :+ col("id_i")) ++
+                vCols.map(c => col(s"__l.$c").as(s"${c}_i")): _*)
+          val stored = payloadTable(spark, kind, path)
+            .where(col("idb").isin(candidates.map(_.getLong(2)).distinct: _*))
+            .select(col("id").as("id_c") +: vCols.map(c => col(c).as(s"${c}_c")): _*)
+          val batch = spark.createDataFrame(
+              within.iterator.map(_._1).toSeq.distinct.map(Row(_)).asJava,
+              StructType(Seq(StructField("id_c", LongType, nullable = false))))
+            .select(col("id_c"), lookup("id_c", rowsBc, rowType))
+            .select(col("id_c") +: vCols.map(c =>
+              col(s"__l.$c").cast(kind.payload(c).dataType).as(s"${c}_c")): _*)
+          val pairs =
+            if (cross.isEmpty) legOf(1, batch, withinBc)
+            else legOf(0, stored, crossBc).unionByName(legOf(1, batch, withinBc))
+          // one row per pair of rows: bounded by the candidates
+          phase("verify")(collectAll(kind.verify(pairs, threshold)
+            .select("leg", "id_i", "id_c")))
+        }
+        }
+        }
+      }
+
+    // the min() keepers and the decisions, on the driver
+    val keepers = Seq(mutable.HashMap.empty[Long, Long], mutable.HashMap.empty[Long, Long])
+    for (r <- verified) {
+      val (m, i, c) = (keepers(r.getInt(0)), r.getLong(1), r.getLong(2))
+      m(i) = m.get(i).fold(c)(math.min(_, c))
+    }
+    val Seq(corpusKeeper, batchKeeper) = keepers.toSeq
+    val decided = idRows.map { r =>
+      val v = r.get(at("__id"))
+      val k = Option(v).map(asLong)
+      k.flatMap(corpusKeeper.get).map(c => Row(v, "dup_of_corpus", c))
+        .orElse(k.flatMap(batchKeeper.get).map(b => Row(v, "dup_in_batch", b)))
+        .getOrElse(Row(v, "new", null))
+    }
+    val newIds = decided.collect { case Row(v, "new", _) if v != null => asLong(v) }.toSet
+    Some(Probe(
+      spark.createDataFrame(decided.asJava, StructType(Seq(
+        idField,
+        StructField("status", StringType, nullable = false),
+        StructField("dup_of", LongType, nullable = true)))),
+      Some(spark.createDataFrame(index.filter(d => newIds(d.id))
+        .map(d => Row.fromSeq(payloadCols.map(d.get))).asJava, indexSchema))))
+  }
+
+  private def integral(t: DataType): Boolean = t match {
+    case ByteType | ShortType | IntegerType | LongType => true
+    case _ => false
+  }
+
+  private def asLong(v: Any): Long = v.asInstanceOf[Number].longValue
+
+  private type LookupTable = java.util.Map[java.lang.Long, ArrayData]
+
+  /** A [[BroadcastLookup]] table: each key's rows, in catalyst form. */
+  private def lookupTable(rowType: StructType,
+                          entries: Iterable[(Long, Row)]): LookupTable = {
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(rowType)
+    val table = new java.util.HashMap[java.lang.Long, ArrayData]()
+    entries.groupBy(_._1).foreach { case (k, es) =>
+      table.put(k, new GenericArrayData(es.map(e => toCatalyst(e._2)).toArray))
+    }
+    table
+  }
+
+  /** Run `f` over a broadcast of `table`, destroyed afterwards. */
+  private def withBroadcast[T](spark: SparkSession, table: LookupTable)(
+      f: Broadcast[LookupTable] => T): T = {
+    val bc = spark.sparkContext.broadcast(table)
+    try f(bc) finally bc.destroy()
+  }
+
+  /** `df`'s rows if it holds at most `max`, else None. A local frame
+    * costs no Spark job; any other costs one (two when a partition holds
+    * more than its share of `max`), and at most `max` rows ever reach the
+    * driver: each task stops reading past `max` and returns its rows only
+    * within its share. The job runs the frame's own optimized plan (no
+    * re-planned deserializing query, no SQL execution event); rows are
+    * converted on the driver. */
+  private def collectBounded(df: DataFrame, max: Int): Option[Seq[Row]] = {
+    val qe = df.queryExecution
+    val toRow = CatalystTypeConverters.createToScalaConverter(df.schema)
+    def rows(internal: Iterable[InternalRow]) =
+      Some(internal.map(r => toRow(r).asInstanceOf[Row]).toSeq)
+    qe.optimizedPlan match {
+      case r: LocalRelation => if (r.data.size <= max) rows(r.data) else None
+      case _ =>
+        val rdd = qe.toRdd
+        val sc = rdd.sparkContext
+        val share = math.max(1, max / math.max(1, rdd.getNumPartitions))
+        val parts = sc.runJob(rdd, (it: Iterator[InternalRow]) => {
+          val kept = mutable.ArrayBuffer.empty[InternalRow]
+          var n = 0
+          while (n <= max && it.hasNext) {
+            val r = it.next()
+            if (n < share) kept += r.copy()
+            n += 1
+          }
+          (n, if (n <= share) kept.toArray else Array.empty[InternalRow])
+        })
+        if (parts.map(_._1.toLong).sum > max) None
+        else {
+          val over = parts.indices.filter(parts(_)._1 > share)
+          val rest: Map[Int, Array[InternalRow]] = over.zip(
+            if (over.isEmpty) Array.empty[Array[InternalRow]]
+            else sc.runJob(rdd, (it: Iterator[InternalRow]) => it.map(_.copy()).toArray,
+              over)).toMap
+          rows(parts.indices.flatMap(i => rest.getOrElse(i, parts(i)._2).toSeq))
+        }
+    }
+  }
+
+  /** All of `df`'s rows in one Spark job over its own optimized plan
+    * ([[collectBounded]] without the bound, for a frame whose size the
+    * caller has already bounded). */
+  private def collectAll(df: DataFrame): Seq[Row] = {
+    val toRow = CatalystTypeConverters.createToScalaConverter(df.schema)
+    val rdd = df.queryExecution.toRdd
+    rdd.sparkContext.runJob(rdd, (it: Iterator[InternalRow]) => it.map(_.copy()).toArray)
+      .toSeq.flatten.map(r => toRow(r).asInstanceOf[Row])
+  }
+
+  /** Run `f` with `spark.job.description` set to `desc` on this thread's
+    * local properties, restoring the caller's value afterwards. */
+  private def withJobDescription[T](spark: SparkSession, desc: String)(f: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty(JobDescription)
+    sc.setLocalProperty(JobDescription, desc)
+    try f finally sc.setLocalProperty(JobDescription, prev)
+  }
+
+  private val JobDescription = "spark.job.description"
 
   private def keepSet(keepIds: DataFrame): DataFrame =
     keepIds.select(col(keepIds.columns.head).as("id")).distinct()
@@ -463,7 +865,7 @@ object IndexStore {
     val l = reband.getOrElse(layout(spark, kind, blue))
     val keeps = keep.map(keepSet)
     val snapshot = keep.map(_ =>
-      spark.read.parquet(s"$blue/payload").select("id").localCheckpoint())
+      payloadTable(spark, kind, blue).select("id").localCheckpoint())
     try {
       val base = read(spark, kind, blue)
       val side = kind.side.filter(_.exists(spark, blue))
@@ -480,8 +882,8 @@ object IndexStore {
       withStoreLock(root) {
         inParallel(
           {
-            val lateIds = spark.read.parquet(s"$blue/payload").select("id")
-              .join(spark.read.parquet(s"$green/payload").select("id"),
+            val lateIds = payloadTable(spark, kind, blue).select("id")
+              .join(payloadTable(spark, kind, green).select("id"),
                 Seq("id"), "left_anti")
             val catchUp = dropped.fold(lateIds)(d =>
               lateIds.join(d, Seq("id"), "left_anti")).localCheckpoint()

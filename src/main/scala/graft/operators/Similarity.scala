@@ -800,14 +800,35 @@ object Similarity {
     * self-join pair path and the incremental probe path so both sides
     * of a delta run band IDENTICALLY by construction.
     */
-  private[operators] def packedBandKeys(sigF: DataFrame, rows: Int): DataFrame = {
-    val bands = Bits / rows
-    sigF.select(col("id"), explode(
-      transform(sequence(lit(0), lit(bands - 1)), b =>
-        aggregate(sequence(lit(0), lit(rows - 1)),
-          b.cast("long") + lit(1L),
-          (a, r) => a * 2 + element_at(col("sig"), b * rows + r + 1))))
-      .as("key"))
+  private[operators] def packedBandKeys(sigF: DataFrame, rows: Int): DataFrame =
+    sigF.select(col("id"), explode(packedKeys(col("sig"), rows)).as("key"))
+
+  /** The packed band keys of one signature, `array<bigint>` — the one
+    * key formula every banded consumer derives from. */
+  private def packedKeys(sig: Column, rows: Int): Column =
+    transform(sequence(lit(0), lit(Bits / rows - 1)), b =>
+      aggregate(sequence(lit(0), lit(rows - 1)),
+        b.cast("long") + lit(1L),
+        (a, r) => a * 2 + element_at(sig, b * rows + r + 1)))
+
+  /** A packed key and its `rows` single-plane flips: plane `j` of the
+    * block is bit `rows-1-j`, flipped by XOR with `1L << (rows-1-j)` —
+    * an integer shift, exact at any width; the `(band+1)·2^w` prefix is
+    * untouched, so flipped keys stay within their band's keyspace. */
+  private def withFlips(key: Column, rows: Int): Column =
+    concat(array(key), transform(sequence(lit(0), lit(rows - 1)), j =>
+      key.bitwiseXOR(call_function("shiftleft", lit(1L),
+        (lit(rows - 1) - j).cast("int")))))
+
+  /** The [[IndexStore.Semantic]] kind's key function: a signature's
+    * packed keys as `array<struct<key>>`, each widened by its ≤1-flip
+    * neighbors when `flips` ≥ 1. */
+  private[operators] def bandKeyStructs(sig: Column, rows: Int,
+                                        flips: Int): Column = {
+    val keys = packedKeys(sig, rows)
+    transform(
+      if (flips >= 1) flatten(transform(keys, k => withFlips(k, rows))) else keys,
+      k => struct(k.as("key")))
   }
 
   /** [[packedBandKeys]] plus every 1-plane-flipped neighbor key — the
@@ -818,30 +839,25 @@ object Similarity {
     * other side to meet halfway), and a batch/index pair differing in
     * ≤ 1 plane of some band meets on an exact index key. `w+1` keys per
     * (vector, band), batch-side only — the index side never widens.
-    * Bit `j` of the packed block flips by XOR with `1L << (w-1-j)` —
-    * an integer shift, exact by construction at any width (the earlier
-    * `pow(2.0, ·)` double round-trip was exact only because
-    * [[MaxRowsPerBand]] kept the exponent under the double mantissa
-    * bound, an implicit coupling — round-18 ADVICE); the `(band+1)·2^w`
-    * prefix is untouched, so flipped keys stay within their band's
-    * keyspace.
     */
-  private[operators] def packedBandProbeKeys(sigF: DataFrame, rows: Int): DataFrame = {
+  private[operators] def packedBandProbeKeys(sigF: DataFrame, rows: Int): DataFrame =
     // TWO projections (optimization round 21, guide §1.2 order-of-work):
     // fold each band's exact key ONCE into a scalar column, then derive
-    // the w flip keys from the packed key by bit arithmetic. The
-    // previous single-expression form captured the `exact` fold inside
-    // the flip-transform lambda, and higher-order-function lambdas
-    // re-evaluate captured subtrees PER ELEMENT (the documented O(w²)
-    // interpreted-HOF gotcha) — w extra fold evaluations per band.
-    // Key values are bit-identical: flipping plane j of the packed
-    // block is XOR with `1L << (rows-1-j)` either way.
+    // the w flip keys from it — a lambda that captured the fold would
+    // re-evaluate it per element (the interpreted-HOF O(w²) gotcha)
     packedBandKeys(sigF, rows)
-      .select(col("id"), explode(concat(array(col("key")),
-        transform(sequence(lit(0), lit(rows - 1)), j =>
-          col("key").bitwiseXOR(call_function("shiftleft", lit(1L),
-            (lit(rows - 1) - j).cast("int")))))).as("key"))
-  }
+      .select(col("id"), explode(withFlips(col("key"), rows)).as("key"))
+
+  /** The exact-cosine verify of candidate pairs (the
+    * [[IndexStore.Semantic]] kind's `verify`): `pairs` carries the
+    * incoming side's `e_d_i`/`n_i` and the standing side's `e_d_c`/`n_c`;
+    * the pairs at cosine ≥ `threshold` are kept. Both store probe paths
+    * verify through it, so their float arithmetic is the same by
+    * construction. */
+  private[operators] def cosineVerify(pairs: DataFrame,
+                                      threshold: Double): DataFrame =
+    pairs.filter(VectorFns.dot(col("e_d_i"), col("e_d_c")) /
+      (col("n_i") * col("n_c")) >= threshold)
 
   /** INCREMENTAL plane-signature near-dup — [[graft.operators.Dedup.deltaNearDup]]'s
     * contract for the SEMANTIC regime: classify every `incoming` vector
@@ -1236,16 +1252,14 @@ object Similarity {
       .filter(col("id_i") =!= col("id_c"))
       .select("id_i", "id_c")
     val candIdsPlan = candPairs.select(col("id_c")).distinct()
-    val fetched0 = index.select(col("id").as("id_c"), col("e_d").as("e_c"),
+    val fetched0 = index.select(col("id").as("id_c"), col("e_d").as("e_d_c"),
       col("n").as("n_c"))
     val fetched = Dedup.candidateFetch(fetched0, candIdsPlan, knownCandCount,
       maxFetchBroadcastIds)
-    val corpusMatch = candPairs
-      .join(broadcast(incIdx.select(col("id").as("id_i"),
-        col("e_d").as("e_i"), col("n").as("n_i"))), "id_i")
-      .join(fetched.hint("shuffle_hash"), "id_c")
-      .filter(VectorFns.dot(col("e_i"), col("e_c")) /
-        (col("n_i") * col("n_c")) >= threshold)
+    val corpusMatch = IndexStore.Semantic.verify(candPairs
+        .join(broadcast(incIdx.select(col("id").as("id_i"),
+          col("e_d").as("e_d_i"), col("n").as("n_i"))), "id_i")
+        .join(fetched.hint("shuffle_hash"), "id_c"), threshold)
       .groupBy(col("id_i")).agg(min(col("id_c")).as("__graft_ck"))
     // the within-batch leg engages the same probe repair: at flips=1
     // its banding rule is the identical ≤1-flip set, so one oracle
@@ -1306,15 +1320,31 @@ object Similarity {
     * since candidates still meet on the index's exact keys). The flip
     * decision is the caller's PROBE POLICY, pinned explicitly because it
     * is part of a graded query's candidate contract
-    * ([[recommendedSemDeltaProbe]] derives one from recall). Decisions
-    * are identical to [[deltaSemNearDupFromIndex]] over the full frame
-    * at that `(width, flips)`.
+    * ([[recommendedSemDeltaProbe]] derives one from recall). A delta
+    * takes the path [[IndexStore.probe]] picks, with
+    * [[deltaSemNearDupFromStorePruned]] as its scale path; decisions are
+    * identical to [[deltaSemNearDupFromIndex]] over the full frame at
+    * that `(width, flips)` either way.
     */
   def deltaSemNearDupFromStore(spark: SparkSession, rawPath: String,
                                incomingIds: DataFrame,
                                incomingIndex: DataFrame, idCol: String,
                                threshold: Double,
                                flips: Int = 0): DataFrame = {
+    require(flips == 0 || flips == 1,
+      s"flips must be 0 (exact keys) or 1 (1-plane probes), got $flips")
+    IndexStore.probe(spark, IndexStore.Semantic, rawPath, incomingIds,
+        incomingIndex, idCol, threshold, flips)(
+      deltaSemNearDupFromStorePruned(spark, rawPath, incomingIds,
+        incomingIndex, idCol, threshold, flips)).decisions
+  }
+
+  /** The scale path of [[deltaSemNearDupFromStore]] and the reference
+    * the small-delta path is tested against: the bucket-pruned
+    * [[IndexStore.fetchCandidates]] fetch, then the probe core. */
+  private[graft] def deltaSemNearDupFromStorePruned(spark: SparkSession,
+      rawPath: String, incomingIds: DataFrame, incomingIndex: DataFrame,
+      idCol: String, threshold: Double, flips: Int = 0): DataFrame = {
     val (pruned, candCount, layout) = IndexStore.fetchCandidates(spark,
       IndexStore.Semantic, rawPath, incomingIndex, flips)
     deltaSemNearDupFromIndex(pruned, incomingIds, incomingIndex, idCol,

@@ -143,9 +143,10 @@ object CurationJob {
     *      (`status = new`) — exactly the rows a downstream writer
     *      lands.
     *
-    * The decisions are `localCheckpoint`ed before the append so the
-    * returned frame is stable against the store growth it itself
-    * caused. A pipeline bootstraps the store once from its existing
+    * The decisions are local (the small-delta probe) or
+    * `localCheckpoint`ed before the append, so the returned frame is
+    * stable against the store growth it itself caused. A pipeline
+    * bootstraps the store once from its existing
     * corpus via [[graft.operators.IndexStore.write]] (the
     * q183-graded write path) and periodically runs the
     * `recommendedRowsPerBand`-style reband/compaction maintenance
@@ -224,8 +225,11 @@ object CurationJob {
       .filter(col("keep") === 1L && col("__graft_sh").isNotNull)
       .select(col(idCol).as("id"), col("__graft_sh").as("sh"),
         col("__graft_hs").as("hs"), col("__graft_sig").as("sig"))
-    val decNear = Dedup.deltaNearDupFromStore(spark, storePath,
-        kept.select(col(idCol)), idx, idCol, threshold)
+    // a small delta takes the shuffle-free probe, whose decisions and
+    // admitted rows come back as local frames (IndexStore.probe)
+    val probe = Dedup.nearDupStoreProbe(spark, storePath,
+      kept.select(col(idCol)), idx, idCol, threshold)
+    val decNear = probe.decisions
     // the exact-leg decisions (shortDocExact) are computed here but the
     // fingerprint append is DEFERRED to run concurrently with the
     // near-dup admit below (guide §2.6 — the two appends touch disjoint
@@ -245,7 +249,7 @@ object CurationJob {
         Some((short, exactDec))
       }
     val dec = exactLeg match {
-      case None => decNear.localCheckpoint()
+      case None => if (probe.admitted.isDefined) decNear else decNear.localCheckpoint()
       case Some((short, exactDec)) =>
         decNear
           .join(short.select(col("id").as(idCol)), Seq(idCol), "left_anti")
@@ -258,8 +262,9 @@ object CurationJob {
     // own rows (decisions converge — the delta cross leg excludes
     // self-pairs), and must not append them twice. Graded/batch callers
     // keep the plain append (fresh stores, no replay, one less read).
-    val admit = idx.join(dec.filter(col("status") === "new")
-      .select(col(idCol).as("id")), "id")
+    // the exact leg decides only shingle-less ids, which idx never holds
+    val admit = probe.admitted.getOrElse(idx.join(dec.filter(col("status") === "new")
+      .select(col(idCol).as("id")), "id"))
     IndexStore.inParallel(
       if (idempotent)
         IndexStore.appendIdempotent(spark, IndexStore.Lexical, storePath, admit)

@@ -1,12 +1,10 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.util.UUID
-import java.util.concurrent.{Callable, ConcurrentLinkedQueue, CountDownLatch, Executors, TimeUnit}
+import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
@@ -24,37 +22,10 @@ class TablesSpec extends SparkSpec {
 
   private def tmp(prefix: String) = Files.createTempDirectory(prefix).toString
 
-  /** Run `body` and count the Spark jobs it starts on this thread. The
-    * jobs carry a fresh tag; a tagged sentinel job after `body` marks the
-    * end of its events on the listener bus. */
-  private def jobsStartedBy[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val tag = s"graft-tables-${UUID.randomUUID()}"
-    val started = new ConcurrentLinkedQueue[Integer]()
-    val sentinelSeen = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val props = Option(e.properties)
-        if (props.flatMap(p => Option(p.getProperty("spark.job.tags"))).exists(_.contains(tag))) {
-          if (props.flatMap(p => Option(p.getProperty("spark.job.description")))
-              .contains(s"$tag-sentinel")) sentinelSeen.countDown()
-          else started.add(e.jobId)
-        }
-      }
-    }
-    sc.addSparkListener(listener)
-    sc.addJobTag(tag)
-    try {
-      val out = body
-      sc.setJobDescription(s"$tag-sentinel")
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setJobDescription(null)
-      assert(sentinelSeen.await(30, TimeUnit.SECONDS), "sentinel job never seen")
-      (out, started.size)
-    } finally {
-      sc.removeJobTag(tag)
-      sc.removeSparkListener(listener)
-    }
+  /** Run `body` and count the Spark jobs it starts on this thread. */
+  private def jobCount[T](body: => T): (T, Int) = {
+    val (out, jobs) = jobsStartedBy(body)
+    (out, jobs.size)
   }
 
   private def rows(df: DataFrame): Seq[Row] = df.orderBy("id").collect().toSeq
@@ -72,8 +43,8 @@ class TablesSpec extends SparkSpec {
     val dir = tmp("graft_tables_memo")
     Seq((1L, "a", 1.5), (2L, "b", 2.5), (3L, "c", 3.5)).toDF("id", "name", "x")
       .coalesce(1).write.parquet(s"$dir/t.parquet")
-    val (first, firstJobs) = jobsStartedBy(Tables.load(spark, dir, "t"))
-    val (second, secondJobs) = jobsStartedBy(Tables.load(spark, dir, "t"))
+    val (first, firstJobs) = jobCount(Tables.load(spark, dir, "t"))
+    val (second, secondJobs) = jobCount(Tables.load(spark, dir, "t"))
     // the first load infers the schema in a job: the counter sees jobs
     assert(firstJobs >= 1, "the inference job of the first load was not counted")
     assert(secondJobs == 0, s"a repeat load started $secondJobs Spark job(s)")
