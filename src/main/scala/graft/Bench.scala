@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.Harness.materialize
 /** Benchmark main: times every registry query at SPARK_GRAFT_SF_DIR and
   * prints the JSON contract the driver parses — once in full precision
   * (also written to `bench_queries.json`), then once compacted as the
@@ -24,20 +24,10 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def materialize(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.mode("overwrite").format("noop").save()
+    val spark = Harness.session(Harness.envCpus(4))
     // Untimed warmup at the smallest SF: generated code depends on plan
     // shape, not data size, so this compiles each query's codegen/JIT
     // once (worth ~9 s on the heaviest expression trees) without paying
@@ -124,10 +114,7 @@ object Bench {
             false
           }
         val dt = (System.nanoTime() - t0) / 1e9
-        val walk = java.nio.file.Files.walk(out)
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => java.nio.file.Files.deleteIfExists(p))
-        finally walk.close()
+        Harness.deleteTree(out)
         if (ok) Some(dt) else None
       }
       if (jobTimes.nonEmpty) results :+ ("curation_job" -> jobTimes.min)

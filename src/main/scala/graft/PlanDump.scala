@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Write `.explain("formatted")` output for registry queries to files —
   * the plans/r21 artifact generator. Usage:
   *
@@ -20,22 +18,14 @@ import org.apache.spark.sql.SparkSession
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val tag = sys.env.getOrElse("SPARK_GRAFT_PLAN_TAG", "before")
     val outDir = sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "plans/r21")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.envCpus(32))
     val names = args.headOption.map(_.split(",").toSet).getOrElse(Set.empty)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     SparkEntry.registry.filter(q => names.contains(q.name)).foreach { q =>
       val df = q.spark(spark, sfDir)
-      df.write.mode("overwrite").format("noop").save()
+      Harness.materialize(df)
       val plan = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
       java.nio.file.Files.write(

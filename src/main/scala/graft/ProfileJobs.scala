@@ -1,17 +1,14 @@
 package graft
 
-import scala.collection.mutable.ArrayBuffer
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
-
 /** Job-level wall-clock attribution for one registry query: runs the
-  * query through the noop sink with a listener that records every Spark
-  * job's wall time, call site, stage count and task count — so a
+  * query through the noop sink and records every Spark job's wall time,
+  * label, stage count and task count ([[Harness.jobsOf]]) — so a
   * multi-job sequence query (the store/maintenance family, where one
   * "query" is bootstrap + probe + append + probe) can be decomposed
   * into the jobs its seconds actually live in, instead of guessed at
-  * from the total.
+  * from the total. A job is labelled by its `spark.job.description`
+  * (the engine names its store and curation phases), else by its call
+  * site.
   *
   * Usage:
   *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
@@ -22,74 +19,20 @@ import org.apache.spark.sql.SparkSession
   * jobs — planning, file listing, commit protocol).
   */
 object ProfileJobs {
-  private case class JobRow(id: Int, site: String, var wallMs: Long = -1,
-                            var stages: Int = 0, var tasks: Int = 0,
-                            var taskTimeMs: Long = 0, start: Long = 0)
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.envCpus(32))
     val names = args.headOption.map(_.split(",").toSet)
       .getOrElse(Set("q183_store_probe_neardup"))
-    def materialize(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.mode("overwrite").format("noop").save()
-
-    val jobs = ArrayBuffer.empty[JobRow]
-    val byId = scala.collection.mutable.Map.empty[Int, JobRow]
-    val stageTasks = scala.collection.mutable.Map.empty[Int, (Int, Long)]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
-        val site = Option(e.properties)
-          .flatMap { p =>
-            Option(p.getProperty("callSite.short"))
-              .orElse(Option(p.getProperty("spark.job.description")))
-              .orElse(Option(p.getProperty("spark.sql.execution.root.id"))
-                .map("sqlRoot=" + _))
-          }
-          .getOrElse("?")
-        val row = JobRow(e.jobId, site, start = e.time)
-        row.stages = e.stageInfos.size
-        jobs += row; byId(e.jobId) = row
-        e.stageIds.foreach(sid => stageTasks(sid) = (e.jobId, 0L))
-      }
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-        synchronized {
-          stageTasks.get(e.stageInfo.stageId).foreach { case (jid, _) =>
-            byId.get(jid).foreach { r =>
-              r.tasks += e.stageInfo.numTasks
-              r.taskTimeMs += e.stageInfo.taskMetrics.executorRunTime
-            }
-          }
-        }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
-        byId.get(e.jobId).foreach(r => r.wallMs = e.time - r.start)
-      }
-    }
 
     // `curation_job` profiles the composed CurationJob.run through its
     // real parquet writes (the bench's non-registry entry), same
-    // warmup + listener discipline as a registry query
-    def jobBody(sf: String): Unit = {
-      val out = java.nio.file.Files.createTempDirectory("graft_profile_job")
-      try graft.pipelines.CurationJob.run(spark, sf, out.toString)
-      finally {
-        val walk = java.nio.file.Files.walk(out)
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => java.nio.file.Files.deleteIfExists(p))
-        finally walk.close()
-      }
-    }
+    // warmup discipline as a registry query
+    def jobBody(sf: String): Unit = Harness.withTempDir("graft_profile_job")(out =>
+      graft.pipelines.CurationJob.run(spark, sf, out.toString))
     val selected: Seq[(String, String => Unit)] =
       SparkEntry.registry.filter(q => names.contains(q.name))
-        .map(q => q.name -> ((sf: String) => materialize(q.spark(spark, sf)))) ++
+        .map(q => q.name -> ((sf: String) => Harness.materialize(q.spark(spark, sf)))) ++
       (if (names.contains("curation_job"))
         Seq("curation_job" -> ((sf: String) => jobBody(sf)))
       else Nil)
@@ -104,25 +47,23 @@ object ProfileJobs {
       val tw2 = System.nanoTime()
       println(f"[profile] $name warmup ${(tw1 - tw0) / 1e9}%.2f s, " +
         f"warm full-size ${(tw2 - tw1) / 1e9}%.2f s")
-      jobs.clear(); byId.clear(); stageTasks.clear()
-      spark.sparkContext.addSparkListener(listener)
       System.gc()
-      val t0 = System.nanoTime()
-      run(sfDir)
-      val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(500) // let the listener bus drain
-      spark.sparkContext.removeSparkListener(listener)
+      val (wall, jobs) = Harness.jobsOf(spark) {
+        val t0 = System.nanoTime()
+        run(sfDir)
+        (System.nanoTime() - t0) / 1e9
+      }
       println(s"========== $name: wall ${f"$wall%.2f"} s ==========")
-      val sorted = jobs.sortBy(_.start)
-      sorted.foreach { r =>
-        println(f"  job ${r.id}%3d  ${r.wallMs}%6d ms  stages=${r.stages}%2d " +
-          f"tasks=${r.tasks}%4d  taskTime=${r.taskTimeMs}%6d ms  ${r.site}")
+      val sorted = jobs.sortBy(_.startMs)
+      sorted.foreach { j =>
+        println(f"  job ${j.id}%3d  ${j.wallMs}%6d ms  stages=${j.stages}%2d " +
+          f"tasks=${j.tasks}%4d  taskTime=${j.taskTimeMs}%6d ms  " +
+          j.description.getOrElse(j.callSite))
       }
       val jobSum = sorted.map(_.wallMs.max(0)).sum / 1e3
       // gap = wall minus job wall minus overlaps; approximate with
       // union of job intervals to avoid double-counting concurrency
-      val intervals = sorted.map(r => (r.start, r.start + r.wallMs.max(0)))
-        .sortBy(_._1)
+      val intervals = sorted.map(j => (j.startMs, j.startMs + j.wallMs.max(0)))
       var covered = 0L; var curS = Long.MinValue; var curE = Long.MinValue
       intervals.foreach { case (s, e) =>
         if (s > curE) { covered += (curE - curS).max(0); curS = s; curE = e }

@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+
+import graft.Harness.{deleteTree, materialize, minSeconds, withTempDir}
 
 /** Scale-probe main: measures how two headline operators scale when the
   * SAME corpus grows k× in row count — one measured data point behind the
@@ -31,18 +33,10 @@ import org.apache.spark.sql.functions._
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val k = sys.env.getOrElse("SPARK_GRAFT_SCALE_K", "10").toInt
     val k2 = sys.env.getOrElse("SPARK_GRAFT_SCALE_K2", "100").toInt
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.envCpus(32))
 
     val docs = graft.sources.Tables.documents(spark, sfDir)
       .select("doc_id", "lang", "text")
@@ -76,13 +70,7 @@ object ScaleProbe {
       out
     }
 
-    def time(df: => DataFrame): Double =
-      (1 to iters).map { _ =>
-        System.gc()
-        val t0 = System.nanoTime()
-        df.write.mode("overwrite").format("noop").save()
-        (System.nanoTime() - t0) / 1e9
-      }.min
+    def time(df: => DataFrame): Double = minSeconds(iters)(materialize(df))
 
     val passRules: Seq[(String, Column)] = Seq(
       "too_short" -> (col("n_tokens") < 20),
@@ -105,8 +93,8 @@ object ScaleProbe {
     // ratio < 1 and the scaling signal is pure noise
     locally {
       val warm = replicate(1)
-      pass(warm).write.mode("overwrite").format("noop").save()
-      minhash(warm).write.mode("overwrite").format("noop").save()
+      materialize(pass(warm))
+      materialize(minhash(warm))
     }
 
     val results = Seq(1, k).map { times =>
@@ -151,7 +139,7 @@ object ScaleProbe {
         corpus, "vec_id", "embedding", threshold = 0.4,
         rowsPerBand = rowsPerBand)
     val emb1 = replicateEmb(1)
-    lsh(emb1, 8).write.mode("overwrite").format("noop").save() // warmup
+    materialize(lsh(emb1, 8)) // warmup
     val tLsh1 = time(lsh(emb1, 8))
     val embK = replicateEmb(k)
     val tLshK = time(lsh(embK, 8))
@@ -286,12 +274,7 @@ object ScaleProbe {
     val tStoreK2 = storeProbe(storeK2)
     lexBatchIds.unpersist(); lexBatchIdx.unpersist()
     microIds.unpersist(); microIdx.unpersist()
-    Seq(store1, storeK, storeK2).foreach { p =>
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(p))
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => java.nio.file.Files.deleteIfExists(f))
-      finally walk.close()
-    }
+    Seq(store1, storeK, storeK2).foreach(p => deleteTree(java.nio.file.Paths.get(p)))
 
     // ×k2 (default ×100) auto-curve design point: the next decade of the
     // band-width rule. At 200k rolled vectors the occupancy curve
@@ -345,7 +328,7 @@ object ScaleProbe {
       graft.operators.Dedup.connectedComponents(pairs)
     val corpus1 = replicate(1)
     val pairs1 = ccPairs(corpus1)
-    cc(pairs1).write.mode("overwrite").format("noop").save() // warmup
+    materialize(cc(pairs1)) // warmup
     val tCc1 = time(cc(pairs1))
     val corpusK = replicate(k)
     val pairsK = ccPairs(corpusK)
@@ -364,7 +347,7 @@ object ScaleProbe {
     def bm25(corpus: DataFrame): DataFrame =
       graft.functions.Bm25.topK(corpus, "doc_id", "text",
         bmQueries, "doc_id", "text", k = 5)
-    bm25(corpus1).write.mode("overwrite").format("noop").save() // warmup
+    materialize(bm25(corpus1)) // warmup
     val tBm1 = time(bm25(corpus1))
     val tBmK = time(bm25(corpusK))
 
@@ -377,7 +360,7 @@ object ScaleProbe {
     def winnow(corpus: DataFrame): DataFrame =
       graft.operators.Dedup.winnowOverlap(corpus, "doc_id", "text",
         k = 3, w = 4, dfCap = 20, minShared = 2)
-    winnow(corpus1).write.mode("overwrite").format("noop").save() // warmup
+    materialize(winnow(corpus1)) // warmup
     val tWin1 = time(winnow(corpus1))
     val tWinK = time(winnow(corpusK))
 
@@ -388,7 +371,7 @@ object ScaleProbe {
     // would implicate the chunk-hash window's partition skew handling.
     def cdc(corpus: DataFrame): DataFrame =
       graft.operators.Dedup.cdcChunkStats(corpus, "doc_id", "text")
-    cdc(corpus1).write.mode("overwrite").format("noop").save() // warmup
+    materialize(cdc(corpus1)) // warmup
     val tCdc1 = time(cdc(corpus1))
     val tCdcK = time(cdc(corpusK))
 
@@ -397,7 +380,7 @@ object ScaleProbe {
     // the repo; ideal ~linear.
     def hashEmbed(corpus: DataFrame): DataFrame =
       graft.operators.Similarity.hashEmbed(corpus, "doc_id", "text")
-    hashEmbed(corpus1).write.mode("overwrite").format("noop").save()
+    materialize(hashEmbed(corpus1))
     val tHe1 = time(hashEmbed(corpus1))
     val tHeK = time(hashEmbed(corpusK))
 
@@ -408,24 +391,20 @@ object ScaleProbe {
     // startsWith (replicas decorate tokens with a _copy suffix, so the
     // exact-keyword seed of the graded queries would go one-class here;
     // the per-doc boolean costs the same either way).
-    def clfRun(corpus: DataFrame): Double = {
+    def clfRun(corpus: DataFrame): Unit = {
       import graft.operators.Curation
       val feats = corpus.select(col("doc_id"),
         exists(split(col("text"), " "), t => t.startsWith("spark")).as("y"),
         graft.expressions.HashEmbedVec(
           graft.functions.TextFns.tokens(col("text")), 64).as("embedding"))
-      System.gc()
-      val t0 = System.nanoTime()
       val w = Curation.rocchioTrain(feats, "embedding", col("y"))
-      Curation.paretoGate(
+      materialize(Curation.paretoGate(
           Curation.logisticScore(feats, "embedding", w), "doc_id", "score")
-        .select("doc_id", "score", "gate", "kept")
-        .write.mode("overwrite").format("noop").save()
-      (System.nanoTime() - t0) / 1e9
+        .select("doc_id", "score", "gate", "kept"))
     }
     clfRun(corpus1) // warmup
-    val tClf1 = (1 to iters).map(_ => clfRun(corpus1)).min
-    val tClfK = (1 to iters).map(_ => clfRun(corpusK)).min
+    val tClf1 = minSeconds(iters)(clfRun(corpus1))
+    val tClfK = minSeconds(iters)(clfRun(corpusK))
 
     // q160 composite probe (VERDICT r14 #6): nearDupPairsAutoFromSig —
     // bias-aware width × recall cap × multi-probe × shared signature
@@ -454,7 +433,7 @@ object ScaleProbe {
       graft.operators.Similarity.nearDupPairsAutoFromSig(
         sigF, threshold = 0.8, recallTarget = 0.9)
     val sig1 = sigFrame(corpus1)
-    q160Run(sig1).write.mode("overwrite").format("noop").save() // warmup
+    materialize(q160Run(sig1)) // warmup
     val w160x1 = q160Width(sig1)
     val t160x1 = time(q160Run(sig1))
     val sigK = sigFrame(corpusK)
@@ -472,25 +451,16 @@ object ScaleProbe {
     def uniTrain(corpus: DataFrame): DataFrame =
       graft.operators.Curation.unigramLmTrain(corpus, "text", rounds = 2,
         vocabTarget = 64, maxPieceLen = 4, seedSize = 256)
-    def timeAction(body: => Unit): Double =
-      (1 to iters).map { _ =>
-        System.gc()
-        val t0 = System.nanoTime()
-        body
-        (System.nanoTime() - t0) / 1e9
-      }.min
-    uniTrain(corpus1).write.mode("overwrite").format("noop").save() // warmup
-    val tUt1 = timeAction(
-      uniTrain(corpus1).write.mode("overwrite").format("noop").save())
-    val tUtK = timeAction(
-      uniTrain(corpusK).write.mode("overwrite").format("noop").save())
+    materialize(uniTrain(corpus1)) // warmup
+    val tUt1 = time(uniTrain(corpus1))
+    val tUtK = time(uniTrain(corpusK))
     val vocab1 = uniTrain(corpus1).localCheckpoint()
     val vocabK = uniTrain(corpusK).localCheckpoint()
     vocab1.count(); vocabK.count()
     def uniSamp(corpus: DataFrame, vocabF: DataFrame): DataFrame =
       graft.operators.Curation.unigramSampleEncodeFromVocab(
         corpus, "doc_id", "text", vocabF)
-    uniSamp(corpus1, vocab1).write.mode("overwrite").format("noop").save()
+    materialize(uniSamp(corpus1, vocab1))
     val tUs1 = time(uniSamp(corpus1, vocab1))
     val tUsK = time(uniSamp(corpusK, vocabK))
     // the ROWWISE kernel's decade point — the contrast datum for the
@@ -499,7 +469,7 @@ object ScaleProbe {
     def uniSampRow(corpus: DataFrame, vocabF: DataFrame): DataFrame =
       graft.operators.Curation.unigramSampleEncodeRowwiseFromVocab(
         corpus, "doc_id", "text", vocabF)
-    uniSampRow(corpus1, vocab1).write.mode("overwrite").format("noop").save()
+    materialize(uniSampRow(corpus1, vocab1))
     val tUr1 = time(uniSampRow(corpus1, vocab1))
     val tUrK = time(uniSampRow(corpusK, vocabK))
     // CONSTANT-LENGTH ×k leg (VERDICT r15 #3): the suffixed replicas
@@ -550,32 +520,17 @@ object ScaleProbe {
         .write.mode("overwrite").parquet(s"$base/documents.parquet")
       base
     }
-    def rmTree(p: java.nio.file.Path): Unit = {
-      val walk = java.nio.file.Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => java.nio.file.Files.deleteIfExists(f))
-      finally walk.close()
-    }
-    def timeJob(dir: java.nio.file.Path): Double =
-      (1 to iters).map { _ =>
-        System.gc()
-        val out = java.nio.file.Files.createTempDirectory("graft_scale_job_out")
-        val t0 = System.nanoTime()
-        graft.pipelines.CurationJob.run(spark, dir.toString, out.toString)
-        val dt = (System.nanoTime() - t0) / 1e9
-        rmTree(out)
-        dt
-      }.min
+    // each run writes to a fresh output tree, deleted outside its timing
+    def runJob(dir: java.nio.file.Path): Double =
+      withTempDir("graft_scale_job_out")(out =>
+        minSeconds(1)(graft.pipelines.CurationJob.run(spark, dir.toString, out.toString)))
+    def timeJob(dir: java.nio.file.Path): Double = (1 to iters).map(_ => runJob(dir)).min
     val jobDir1 = jobCorpusDir(1)
-    val jobWarmOut = // untimed warmup; its output tree is deleted like
-      java.nio.file.Files.createTempDirectory("graft_scale_job_warm")
-    graft.pipelines.CurationJob.run(spark, jobDir1.toString, // the timed ones'
-      jobWarmOut.toString)
-    rmTree(jobWarmOut)
+    runJob(jobDir1) // untimed warmup
     val tJob1 = timeJob(jobDir1)
     val jobDirK = jobCorpusDir(k)
     val tJobK = timeJob(jobDirK)
-    rmTree(jobDir1); rmTree(jobDirK)
+    deleteTree(jobDir1); deleteTree(jobDirK)
 
     // BPE trainer batching probe (VERDICT r11 #5): the trainer's scale
     // ceiling is the per-round driver scheduling floor — merges=64 at
@@ -586,18 +541,11 @@ object ScaleProbe {
     // finish a round short when candidates overlap.
     val bpeDocs = replicate(1)
     val bpeMerges = 64
-    def bpeRun(batch: Int): Unit =
+    def bpeRun(batch: Int): DataFrame =
       graft.operators.Curation.bpeWordSymbols(bpeDocs, "text", bpeMerges, batch)
-        .write.mode("overwrite").format("noop").save()
-    bpeRun(8) // untimed warmup (codegen + word-census JIT)
-    def bpeTime(batch: Int): Double = {
-      System.gc()
-      val t0 = System.nanoTime()
-      bpeRun(batch)
-      (System.nanoTime() - t0) / 1e9
-    }
-    val tBpe1 = bpeTime(1)
-    val tBpe8 = bpeTime(8)
+    materialize(bpeRun(8)) // untimed warmup (codegen + word-census JIT)
+    val tBpe1 = minSeconds(1)(materialize(bpeRun(1)))
+    val tBpe8 = minSeconds(1)(materialize(bpeRun(8)))
     bpeDocs.unpersist()
 
     def j(x1: Double, xk: Double) =

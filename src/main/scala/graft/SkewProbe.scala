@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+
+import graft.Harness.{deleteTree, materialize, minSeconds, withTempDir}
 
 /** Skew-probe main: measures the heavy bucketed paths under HOT-KEY skew,
   * not just scale. Every ScaleProbe ×k point uses shingle/term-disjoint
@@ -59,17 +61,9 @@ object SkewProbe {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val k = sys.env.getOrElse("SPARK_GRAFT_SKEW_K", "2").toInt
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.envCpus(32))
     import spark.implicits._
 
     val docs = graft.sources.Tables.documents(spark, sfDir)
@@ -90,23 +84,17 @@ object SkewProbe {
       val out = r.localCheckpoint(); out.count(); out
     }
 
-    def materialize(df: DataFrame): DataFrame = {
+    def pinned(df: DataFrame): DataFrame = {
       val out = df.localCheckpoint(); out.count(); out
     }
 
-    def time(df: => DataFrame, n: Int = iters): Double =
-      (1 to n).map { _ =>
-        System.gc()
-        val t0 = System.nanoTime()
-        df.write.mode("overwrite").format("noop").save()
-        (System.nanoTime() - t0) / 1e9
-      }.min
+    def time(df: => DataFrame, n: Int = iters): Double = minSeconds(n)(materialize(df))
 
     // ------------------------------------------------------------ corpora
     val benign = replicate(k) // 10k docs at sf0.1, k=2
     // template skew: every even doc becomes TEMPLATE + a ~40-token tail of
     // its own (still-unique) tokens — 50% of the corpus shares a hot head
-    val templated = materialize(benign.select(
+    val templated = pinned(benign.select(
       col("doc_id"), col("lang"),
       when(col("doc_id") % 2 === 0,
         concat(lit(SkewProbe.Template), lit(" "),
@@ -118,7 +106,7 @@ object SkewProbe {
       graft.operators.Dedup.minHashPairs(
         corpus, "doc_id", "text", n = 3, threshold = 0.6,
         hotBucketDrop = drop, hotBucketCap = cap)
-    minhash(benign).write.mode("overwrite").format("noop").save() // warmup
+    materialize(minhash(benign)) // warmup
     val mhBenign = time(minhash(benign))
     val mhSkew = time(minhash(templated))
     // corpus-scaled cap (128 ≈ n/box at probe scale): the salted
@@ -134,7 +122,7 @@ object SkewProbe {
     val mhPairsBenign = minhash(benign).count()
 
     // --------------------------------------------------- q37 lsh family
-    val emb = materialize(
+    val emb = pinned(
       graft.sources.Tables.embeddings(spark, sfDir)
         .filter(col("embedding").isNotNull).select("vec_id", "embedding"))
     val dim = 64
@@ -149,7 +137,7 @@ object SkewProbe {
     val noise = transform(sequence(lit(0), lit(dim - 1)), i =>
       (pmod(xxhash64(col("vec_id") * dim + i), lit(2000001)).cast("double")
         / lit(1000000.0)) - lit(1.0))
-    val clustered = materialize(emb.select(col("vec_id"),
+    val clustered = pinned(emb.select(col("vec_id"),
       when(col("vec_id") % 2 === 0,
         zip_with(tLit,
           transform(noise, x =>
@@ -159,7 +147,7 @@ object SkewProbe {
     def lsh(corpus: DataFrame, rows: Int): DataFrame =
       graft.operators.Similarity.lshNearDupPairs(
         corpus, "vec_id", "embedding", threshold = 0.8, rowsPerBand = rows)
-    lsh(emb, 8).write.mode("overwrite").format("noop").save() // warmup
+    materialize(lsh(emb, 8)) // warmup
     val lshBenign = time(lsh(emb, 8))
     val lshSkew = time(lsh(clustered, 8))
     val lshSkewAuto = time(lsh(clustered, 0))
@@ -179,7 +167,7 @@ object SkewProbe {
       graft.operators.Similarity.lshNearDupPairsMultiProbe(
         corpus, "vec_id", "embedding", threshold = 0.8,
         rowsPerBand = autoWidth)
-    mp(clustered).write.mode("overwrite").format("noop").save() // warmup
+    materialize(mp(clustered)) // warmup
     val lshSkewMp = time(mp(clustered))
     val lshPairsMp = mp(clustered).select("id_a", "id_b")
       .as[(Long, Long)].collect().toSet
@@ -187,14 +175,14 @@ object SkewProbe {
     // ------------------------------------------------------- q49 cc star
     val nNodes = 20000L
     // benign: disjoint 4-cliques over all node ids
-    val cliques = materialize(
+    val cliques = pinned(
       spark.range(nNodes / 4).select(explode(expr(
         "transform(flatten(transform(sequence(0,2), i -> " +
           "transform(sequence(i+1,3), j -> struct(i, j)))), " +
           "p -> struct(id*4 + p.i as id_a, id*4 + p.j as id_b))")).as("p"))
         .select(col("p.id_a"), col("p.id_b")))
     // skew: one star whose hub label covers 50% of nodes + 4-cliques
-    val star = materialize(
+    val star = pinned(
       spark.range(1, nNodes / 2).select(lit(0L).as("id_a"), col("id").as("id_b"))
         .unionByName(
           spark.range(nNodes / 8).select(explode(expr(
@@ -205,24 +193,24 @@ object SkewProbe {
             .select(col("p.id_a"), col("p.id_b"))))
     def cc(pairs: DataFrame): DataFrame =
       graft.operators.Dedup.connectedComponents(pairs)
-    cc(cliques).write.mode("overwrite").format("noop").save() // warmup
+    materialize(cc(cliques)) // warmup
     val ccBenign = time(cc(cliques))
     val ccSkew = time(cc(star))
 
     // -------------------------------------------------- q101 bm25 hot term
     val hotTerm = "zzhotterm"
-    val bmHot = materialize(benign.select(
+    val bmHot = pinned(benign.select(
       col("doc_id"), col("lang"),
       when(col("doc_id") % 10 < 3, concat(lit(hotTerm + " "), col("text")))
         .otherwise(col("text")).as("text")))
     val bmQueriesBenign = benign.filter(col("doc_id") < 10)
-    val bmQueriesHot = materialize(bmQueriesBenign.select(col("doc_id"),
+    val bmQueriesHot = pinned(bmQueriesBenign.select(col("doc_id"),
       when(col("doc_id") === 0, concat(lit(hotTerm + " "), col("text")))
         .otherwise(col("text")).as("text")))
     def bm25(corpus: DataFrame, queries: DataFrame): DataFrame =
       graft.functions.Bm25.topK(corpus, "doc_id", "text",
         queries, "doc_id", "text", k = 5)
-    bm25(benign, bmQueriesBenign).write.mode("overwrite").format("noop").save()
+    materialize(bm25(benign, bmQueriesBenign))
     val bmBenign = time(bm25(benign, bmQueriesBenign))
     val bmSkew = time(bm25(bmHot, bmQueriesHot))
 
@@ -238,7 +226,7 @@ object SkewProbe {
     def ngram(corpus: DataFrame, rarity: Boolean = false): DataFrame =
       graft.operators.Dedup.ngramJaccardPairs(corpus, "doc_id", "text",
         n = 3, threshold = 0.6, rarityOrder = rarity)
-    ngram(benign).write.mode("overwrite").format("noop").save() // warmup
+    materialize(ngram(benign)) // warmup
     val ngBenign = time(ngram(benign))
     val ngSkew = time(ngram(templated))
     // the named fix: classic PPJoin rarity (df-ascending) prefix order —
@@ -256,7 +244,7 @@ object SkewProbe {
     def sem(corpus: DataFrame, maxCell: Int = 0): DataFrame =
       graft.operators.Similarity.semDedup(
         corpus, "vec_id", "embedding", threshold = 0.8, maxCell = maxCell)
-    sem(emb).write.mode("overwrite").format("noop").save() // warmup
+    materialize(sem(emb)) // warmup
     val semBenign = time(sem(emb))
     val semSkew = time(sem(clustered))
     // the named fix: plane-bit sub-split of over-bound cells (the cell
@@ -282,11 +270,11 @@ object SkewProbe {
     val (semBig, semBigSplit, semBigAuto) =
       if (!bigCell) (0.0, 0.0, 0.0)
       else {
-        val embBig = materialize(emb
+        val embBig = pinned(emb
           .select(col("*"), explode(sequence(lit(0), lit(4))).as("copy"))
           .select((col("vec_id") * 5 + col("copy")).as("vec_id"),
             col("embedding")))
-        val clusteredBig = materialize(embBig.select(col("vec_id"),
+        val clusteredBig = pinned(embBig.select(col("vec_id"),
           when(col("vec_id") % 2 === 0,
             zip_with(tLit,
               transform(noise, x =>
@@ -308,12 +296,6 @@ object SkewProbe {
     // near-benign instead of paying the measured 4.4x hash-order tax.
     // Benign = the sf dir itself; skew = the same docs templated, same
     // size, written as a real parquet corpus (the job reads tables).
-    def rmTree(p: java.nio.file.Path): Unit = {
-      val walk = java.nio.file.Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => java.nio.file.Files.deleteIfExists(f))
-      finally walk.close()
-    }
     val fullDocs = graft.sources.Tables.documents(spark, sfDir)
     val skewJobFrame = fullDocs.select(
       col("doc_id"),
@@ -325,27 +307,20 @@ object SkewProbe {
     val skewJobDir = java.nio.file.Files.createTempDirectory("graft_skewjob")
     skewJobFrame.write.mode("overwrite")
       .parquet(s"$skewJobDir/documents.parquet")
+    // each run writes to a fresh output tree, deleted outside its timing
     def timedJob(dir: String): (Double, Map[String, Long]) = {
       var counts = Map.empty[String, Long]
-      val t = (1 to iters).map { _ =>
-        System.gc()
-        val out = java.nio.file.Files.createTempDirectory("graft_skewjob_out")
-        val t0 = System.nanoTime()
-        counts = graft.pipelines.CurationJob.run(spark, dir, out.toString)
-        val dt = (System.nanoTime() - t0) / 1e9
-        rmTree(out)
-        dt
-      }.min
+      val t = (1 to iters).map(_ => withTempDir("graft_skewjob_out")(out =>
+        minSeconds(1) {
+          counts = graft.pipelines.CurationJob.run(spark, dir, out.toString)
+        })).min
       (t, counts)
     }
-    { // untimed warmup
-      val out = java.nio.file.Files.createTempDirectory("graft_skewjob_warm")
-      graft.pipelines.CurationJob.run(spark, sfDir, out.toString)
-      rmTree(out)
-    }
+    withTempDir("graft_skewjob_warm")(out => // untimed warmup
+      graft.pipelines.CurationJob.run(spark, sfDir, out.toString))
     val (jobBenign, jobBenignCounts) = timedJob(sfDir)
     val (jobSkew, jobSkewCounts) = timedJob(skewJobDir.toString)
-    rmTree(skewJobDir)
+    deleteTree(skewJobDir)
     // the census decision the job made on each corpus (reported so the
     // ratio names its mechanism): sampled hot-shingle share vs the
     // engage threshold
@@ -358,7 +333,7 @@ object SkewProbe {
     def winnow(corpus: DataFrame): DataFrame =
       graft.operators.Dedup.winnowOverlap(corpus, "doc_id", "text",
         k = 3, w = 4, dfCap = 20, minShared = 2)
-    winnow(benign).write.mode("overwrite").format("noop").save() // warmup
+    materialize(winnow(benign)) // warmup
     val winBenign = time(winnow(benign))
     val winSkew = time(winnow(templated))
 

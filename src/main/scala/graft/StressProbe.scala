@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Memory-pressure probe: the "spill-aware" claim, measured instead of
@@ -30,20 +30,14 @@ import org.apache.spark.sql.functions._
 object StressProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Harness.envCpus(32)
     val k = sys.env.getOrElse("SPARK_GRAFT_STRESS_K", "5").toInt
 
     def run(tight: Boolean): (Double, Long, Long, Long) = {
-      val b = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", if (tight) "8" else cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
       val spark =
-        (if (tight) b.config("spark.memory.fraction", "0.1") else b)
-          .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+        if (tight) Harness.session(cpus, "spark.sql.shuffle.partitions" -> "8",
+          "spark.memory.fraction" -> "0.1")
+        else Harness.session(cpus)
       @volatile var spilled = 0L
       spark.sparkContext.addSparkListener(new SparkListener {
         override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
@@ -72,11 +66,10 @@ object StressProbe {
         (nPairs, nComps)
       }
       pipeline() // untimed warmup (codegen/JIT)
-      System.gc()
       spilled = 0L
-      val t0 = System.nanoTime()
-      val (nPairs, nComps) = pipeline()
-      val sec = (System.nanoTime() - t0) / 1e9
+      var counts = (0L, 0L)
+      val sec = Harness.minSeconds(1) { counts = pipeline() }
+      val (nPairs, nComps) = counts
       spark.stop()
       SparkSession.clearActiveSession()
       SparkSession.clearDefaultSession()

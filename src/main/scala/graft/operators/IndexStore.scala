@@ -16,6 +16,7 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Harness
 import graft.expressions.BroadcastLookup
 
 /** The PROBE-PRUNABLE persisted index store, written once for both
@@ -273,15 +274,17 @@ object IndexStore {
     val spark = frame.sparkSession
     writeMeta(spark, s"$path/meta", kind.widthKey -> l.width,
       "band_buckets" -> l.bandBuckets, "id_buckets" -> l.idBuckets)
-    def banded(src: DataFrame): Unit =
-      land(bandedRows(kind, src, l), "bkt", "overwrite", s"$path/banded")
+    def phase(table: String)(f: => Unit): Unit =
+      Harness.phase(spark, s"store-write ${kind.name}: $table")(f)
+    def banded(src: DataFrame): Unit = phase("banded")(
+      land(bandedRows(kind, src, l), "bkt", "overwrite", s"$path/banded"))
     if (bandedFromInput) {
       // maintenance rewrites: the frame is itself a cheap materialized
       // read (a payload scan, at most joined against a checkpointed keep
       // set), so banded/ derives from it directly and the two writes run
       // side by side — a read-back would serialize write → read → write
-      inParallel(land(payloadRows(kind, frame, l), "idb", "overwrite",
-        s"$path/payload"), banded(frame.select("id", "sig")))
+      inParallel(phase("payload")(land(payloadRows(kind, frame, l), "idb",
+        "overwrite", s"$path/payload")), banded(frame.select("id", "sig")))
     } else {
       // ONE pass over the caller's plan (at corpus scale a full text or
       // embedding pass): the payload write counts its rows via observe()
@@ -290,8 +293,8 @@ object IndexStore {
       // observation may report nothing, when adaptive execution replaces
       // the empty plan, observe node included, by an empty relation.
       val obs = Observation()
-      land(payloadRows(kind, frame, l).observe(obs, count(lit(1)).as("n_rows")),
-        "idb", "overwrite", s"$path/payload")
+      phase("payload")(land(payloadRows(kind, frame, l)
+        .observe(obs, count(lit(1)).as("n_rows")), "idb", "overwrite", s"$path/payload"))
       banded(
         if (obs.get.get("n_rows").forall(_ == 0L))
           frame.select(col("id"), col("sig")).limit(0)
@@ -320,7 +323,7 @@ object IndexStore {
     val path = resolveStoreDir(spark, rawPath)
     val l = layout(spark, kind, path)
     def phase(table: String)(f: => Unit): Unit =
-      withJobDescription(spark, s"store-append ${kind.name}: $table")(f)
+      Harness.phase(spark, s"store-append ${kind.name}: $table")(f)
     newRows.queryExecution.optimizedPlan match {
       case r: LocalRelation if r.data.size <= MaxDeltaRows =>
         if (r.data.nonEmpty) inParallel(
@@ -330,8 +333,10 @@ object IndexStore {
             s"$path/banded")))
       case _ =>
         inParallel(
-          land(payloadRows(kind, newRows, l), "idb", "append", s"$path/payload"),
-          land(bandedRows(kind, newRows, l), "bkt", "append", s"$path/banded"))
+          phase("payload")(land(payloadRows(kind, newRows, l), "idb", "append",
+            s"$path/payload")),
+          phase("banded")(land(bandedRows(kind, newRows, l), "bkt", "append",
+            s"$path/banded")))
     }
   }
 
@@ -355,29 +360,30 @@ object IndexStore {
     * buckets its signature derives), so their volume is batch-bounded.
     */
   def appendIdempotent(spark: SparkSession, kind: StoreKind, rawPath: String,
-                       newRows: DataFrame): Unit = {
-    val path = resolveStoreDir(spark, rawPath)
-    val l = layout(spark, kind, path)
-    val rows = newRows.localCheckpoint()
-    val payload = payloadRows(kind, rows, l)
-    val banded = bandedRows(kind, rows, l)
-    // both tables' pruning key sets from one driver job (≤ idBuckets and
-    // ≤ min(keys per row × batch, bandBuckets) values)
-    val keys = payload.select(lit(0).as("t"), col("idb").as("k"))
-      .union(banded.select(lit(1).as("t"), col("bkt").as("k")))
-      .distinct().collect()
-    def keysOf(t: Int) = keys.filter(_.getInt(0) == t).map(_.getLong(1)).toSeq
-    val (idbs, bkts) = (keysOf(0), keysOf(1))
-    val bandedId = "id" +: kind.keyCols.fieldNames.toSeq
-    if (idbs.nonEmpty) inParallel(
-      land(payload.join(payloadTable(spark, kind, path)
-          .where(col("idb").isin(idbs: _*)).select("id"), Seq("id"), "left_anti"),
-        "idb", "append", s"$path/payload"),
-      land(banded.join(bandedTable(spark, kind, path)
-          .where(col("bkt").isin(bkts: _*)).select(bandedId.map(col): _*)
-          .distinct(), bandedId, "left_anti"),
-        "bkt", "append", s"$path/banded"))
-  }
+                       newRows: DataFrame): Unit =
+    Harness.phase(spark, s"store-append ${kind.name}: replay-safe") {
+      val path = resolveStoreDir(spark, rawPath)
+      val l = layout(spark, kind, path)
+      val rows = newRows.localCheckpoint()
+      val payload = payloadRows(kind, rows, l)
+      val banded = bandedRows(kind, rows, l)
+      // both tables' pruning key sets from one driver job (≤ idBuckets and
+      // ≤ min(keys per row × batch, bandBuckets) values)
+      val keys = payload.select(lit(0).as("t"), col("idb").as("k"))
+        .union(banded.select(lit(1).as("t"), col("bkt").as("k")))
+        .distinct().collect()
+      def keysOf(t: Int) = keys.filter(_.getInt(0) == t).map(_.getLong(1)).toSeq
+      val (idbs, bkts) = (keysOf(0), keysOf(1))
+      val bandedId = "id" +: kind.keyCols.fieldNames.toSeq
+      if (idbs.nonEmpty) inParallel(
+        land(payload.join(payloadTable(spark, kind, path)
+            .where(col("idb").isin(idbs: _*)).select("id"), Seq("id"), "left_anti"),
+          "idb", "append", s"$path/payload"),
+        land(banded.join(bandedTable(spark, kind, path)
+            .where(col("bkt").isin(bkts: _*)).select(bandedId.map(col): _*)
+            .distinct(), bandedId, "left_anti"),
+          "bkt", "append", s"$path/banded"))
+    }
 
   /** The bucket-pruned candidate fetch of a probe against the store at
     * `rawPath`: the batch's probe keys resolve a bounded bucket set
@@ -463,7 +469,8 @@ object IndexStore {
                            pruned: => DataFrame): Probe =
     (if (hotBucketDrop != 0 || hotBucketCap < MaxDeltaRows) None
      else smallDeltaProbe(spark, kind, rawPath, incomingIds, incomingIndex,
-       idCol, threshold, flips)).getOrElse(Probe(pruned, None))
+       idCol, threshold, flips)).getOrElse(Probe(
+      Harness.phase(spark, s"store-probe ${kind.name}: pruned")(pruned), None))
 
   /** The store probe of a SMALL delta: [[fetchCandidates]] plus the probe
     * core's decisions, in three shuffle-free Spark jobs with all the
@@ -519,7 +526,7 @@ object IndexStore {
     val path = resolveStoreDir(spark, rawPath)
     val l = layout(spark, kind, path)
     def phase[T](step: String)(f: => T): T =
-      withJobDescription(spark, s"store-probe ${kind.name}: $step")(f)
+      Harness.phase(spark, s"store-probe ${kind.name}: $step")(f)
 
     // 1. the delta: id rows (`__ids`) and index rows with their keys
     val keys = (f: Int) => kind.bandKeys(col("sig"), l.width, f)
@@ -657,11 +664,11 @@ object IndexStore {
 
   private def asLong(v: Any): Long = v.asInstanceOf[Number].longValue
 
-  private type LookupTable = java.util.Map[java.lang.Long, ArrayData]
+  private[graft] type LookupTable = java.util.Map[java.lang.Long, ArrayData]
 
   /** A [[BroadcastLookup]] table: each key's rows, in catalyst form. */
-  private def lookupTable(rowType: StructType,
-                          entries: Iterable[(Long, Row)]): LookupTable = {
+  private[graft] def lookupTable(rowType: StructType,
+                                 entries: Iterable[(Long, Row)]): LookupTable = {
     val toCatalyst = CatalystTypeConverters.createToCatalystConverter(rowType)
     val table = new java.util.HashMap[java.lang.Long, ArrayData]()
     entries.groupBy(_._1).foreach { case (k, es) =>
@@ -726,17 +733,6 @@ object IndexStore {
     rdd.sparkContext.runJob(rdd, (it: Iterator[InternalRow]) => it.map(_.copy()).toArray)
       .toSeq.flatten.map(r => toRow(r).asInstanceOf[Row])
   }
-
-  /** Run `f` with `spark.job.description` set to `desc` on this thread's
-    * local properties, restoring the caller's value afterwards. */
-  private def withJobDescription[T](spark: SparkSession, desc: String)(f: => T): T = {
-    val sc = spark.sparkContext
-    val prev = sc.getLocalProperty(JobDescription)
-    sc.setLocalProperty(JobDescription, desc)
-    try f finally sc.setLocalProperty(JobDescription, prev)
-  }
-
-  private val JobDescription = "spark.job.description"
 
   private def keepSet(keepIds: DataFrame): DataFrame =
     keepIds.select(col(keepIds.columns.head).as("id")).distinct()
@@ -862,24 +858,26 @@ object IndexStore {
     val blue = s"$root/versions/$curV"
     val newV = nextVersion(curV)
     val green = s"$root/versions/$newV"
+    def phase[T](step: String)(f: => T): T =
+      Harness.phase(spark, s"store-maintain ${kind.name}: $step")(f)
     val l = reband.getOrElse(layout(spark, kind, blue))
-    val keeps = keep.map(keepSet)
-    val snapshot = keep.map(_ =>
-      payloadTable(spark, kind, blue).select("id").localCheckpoint())
+    val keeps = phase("build")(keep.map(keepSet))
+    val snapshot = phase("build")(keep.map(_ =>
+      payloadTable(spark, kind, blue).select("id").localCheckpoint()))
     try {
       val base = read(spark, kind, blue)
       val side = kind.side.filter(_.exists(spark, blue))
       // green's payload/banded build and its side table touch disjoint
       // tables — side by side
-      inParallel(
+      phase("build")(inParallel(
         writeStore(kind, keeps.fold(base)(k => base.join(k, "id")), green, l,
           bandedFromInput = true),
-        side.foreach(_.rebuild(spark, blue, green, keeps)))
+        side.foreach(_.rebuild(spark, blue, green, keeps))))
       // lazy: both inputs are checkpointed id frames, so the anti-join
       // re-derives cheaply inside each catch-up plan
       val dropped = keeps.map(k => snapshot.get.join(k, Seq("id"), "left_anti"))
       afterBuild()
-      withStoreLock(root) {
+      withStoreLock(root)(phase("catch-up") {
         inParallel(
           {
             val lateIds = payloadTable(spark, kind, blue).select("id")
@@ -893,7 +891,7 @@ object IndexStore {
           },
           side.foreach(_.catchUp(spark, blue, green, dropped)))
         replaceFile(spark, s"$root/CURRENT", newV)
-      }
+      })
     } finally {
       keeps.foreach(_.unpersist()); snapshot.foreach(_.unpersist())
     }

@@ -3,6 +3,7 @@ package graft.pipelines
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Harness
 import graft.operators.{Anomaly, Quality}
 import graft.queries.CoreQueries
 import graft.sources.{Tables, TableSink}
@@ -101,14 +102,7 @@ object BatchJob {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.envCpus(4))
     val counts = run(spark, sfDir, outDir)
     counts.toSeq.sortBy(_._1).foreach { case (t, n) => println(s"[batchjob] $t: $n rows") }
     spark.stop()

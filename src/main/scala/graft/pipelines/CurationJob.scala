@@ -1,8 +1,11 @@
 package graft.pipelines
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
+import graft.Harness
+import graft.expressions.BroadcastLookup
 import graft.operators.{Curation, Dedup, IndexStore, Redact, Splits}
 import graft.sources.Tables
 
@@ -202,9 +205,11 @@ object CurationJob {
     // no shingles carries a null `__graft_sh` — exactly the rows
     // nearDupIndex's size>0 filter drops — which also hands the
     // shortDocExact leg its routing split without the old anti-join.
+    def phase[T](step: String)(f: => T): T =
+      Harness.phase(spark, s"store-step ${IndexStore.Lexical.name}: $step")(f)
     val sh0 = graft.functions.TextFns.shingles(col(textCol), n)
-    val fused = Curation.curationPass(batch, benchmark, idCol, textCol,
-        rules)
+    val fused = phase("pass")(Curation.curationPass(batch, benchmark, idCol,
+        textCol, rules)
       // hash-spread on the id BEFORE the index kernels: the pass plan
       // inherits the scan's few input partitions, and the 64-hash
       // MinHash kernel needs the same spread shingleFrame's
@@ -218,7 +223,7 @@ object CurationJob {
         sort_array(graft.expressions.XxHash64Array(col("__graft_sh")))))
       .withColumn("__graft_sig", when(col("__graft_sh").isNotNull,
         graft.expressions.MinHashSig(col("__graft_sh"), 64)))
-      .localCheckpoint()
+      .localCheckpoint())
     val pass = fused.drop("__graft_sh", "__graft_hs", "__graft_sig")
     val kept = pass.filter(col("keep") === 1L)
     val idx = fused
@@ -239,7 +244,7 @@ object CurationJob {
     // shingles), so it needs no checkpoint of its own.
     val exactLeg =
       if (!shortDocExact) None
-      else {
+      else phase("exact") {
         val short = fused
           .filter(col("keep") === 1L && col("__graft_sh").isNull)
           .select(col(idCol).as("id"),
@@ -248,13 +253,32 @@ object CurationJob {
           storePath, short).localCheckpoint()
         Some((short, exactDec))
       }
-    val dec = exactLeg match {
-      case None => if (probe.admitted.isDefined) decNear else decNear.localCheckpoint()
-      case Some((short, exactDec)) =>
-        decNear
-          .join(short.select(col("id").as(idCol)), Seq(idCol), "left_anti")
-          .unionByName(exactDec.withColumnRenamed("id", idCol))
-          .localCheckpoint()
+    val dec = exactLeg.fold(decNear) { case (short, exactDec) =>
+      decNear
+        .join(short.select(col("id").as(idCol)), Seq(idCol), "left_anti")
+        .unionByName(exactDec.withColumnRenamed("id", idCol))
+    }
+    // the decisions are fixed before the append grows the store. The
+    // small path's (at most MaxDeltaRows) become a lookup table, so the
+    // result is one scan of the pass checkpoint in one job (a join would
+    // broadcast them in a job of its own); others are checkpointed.
+    val base = pass.select(col(idCol), col("keep"), col("reasons"))
+    val (decided, admit) = probe.admitted match {
+      case Some(admitted) =>
+        val rows = phase("decisions")(dec.select(col(idCol).cast(LongType),
+          col("status"), col("dup_of").cast(LongType)).collect())
+        val table = spark.sparkContext.broadcast(IndexStore.lookupTable(
+          DecisionType, rows.collect { case Row(id: Long, status, dupOf) =>
+            id -> Row(status, dupOf) }))
+        (base.select(col("*"), explode_outer(BroadcastLookup(
+            col(idCol).cast(LongType), table, DecisionType)).as("__dec"))
+          .select(col("*"), col("__dec.*")), admitted)
+      case None =>
+        val fixed = phase("decisions")(dec.localCheckpoint())
+        // the exact leg decides only shingle-less ids, which idx never holds
+        (base.join(fixed, Seq(idCol), "left"),
+          idx.join(fixed.filter(col("status") === "new")
+            .select(col(idCol).as("id")), "id"))
     }
     // `idempotent` buys replay safety for foreachBatch sinks (the
     // [[graft.streaming.CurationStream]] path): a batch that crashed
@@ -262,27 +286,26 @@ object CurationJob {
     // own rows (decisions converge — the delta cross leg excludes
     // self-pairs), and must not append them twice. Graded/batch callers
     // keep the plain append (fresh stores, no replay, one less read).
-    // the exact leg decides only shingle-less ids, which idx never holds
-    val admit = probe.admitted.getOrElse(idx.join(dec.filter(col("status") === "new")
-      .select(col(idCol).as("id")), "id"))
     IndexStore.inParallel(
       if (idempotent)
         IndexStore.appendIdempotent(spark, IndexStore.Lexical, storePath, admit)
       else
         IndexStore.append(spark, IndexStore.Lexical, storePath, admit),
       exactLeg.foreach { case (short, exactDec) =>
-        Dedup.appendFingerprintStore(spark, storePath,
+        phase("exact")(Dedup.appendFingerprintStore(spark, storePath,
           short.join(exactDec.filter(col("status") === "new")
             .select("id"), "id"),
-          idempotent)
+          idempotent))
       })
-    pass.select(col(idCol), col("keep"), col("reasons"))
-      .join(dec, Seq(idCol), "left")
-      .select(col(idCol), col("keep"), col("reasons"), col("status"),
+    decided.select(col(idCol), col("keep"), col("reasons"), col("status"),
         col("dup_of"),
         when(col("keep") === 1L && col("status") === "new", 1L)
           .otherwise(0L).as("curated"))
   }
+
+  /** A decision as [[incrementalStep]] attaches it to a pass row. */
+  private val DecisionType = StructType(Seq(
+    StructField("status", StringType), StructField("dup_of", LongType)))
 
   /** Execute the full build over `documents`: `benchCut` ids below this
     * bound play the held-out eval set (decontamination benchmark), the
@@ -469,14 +492,7 @@ object CurationJob {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.envCpus(4))
     val counts = run(spark, sfDir, outDir)
     counts.toSeq.sortBy(_._1).foreach { case (t, n) => println(s"[curationjob] $t: $n rows") }
     spark.stop()

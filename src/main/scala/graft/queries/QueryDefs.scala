@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Harness
+
 /** Shared shapes for the declared query surface (SURVEY §2.11).
   *
   * Each query is a named pair: a Spark implementation
@@ -61,21 +63,13 @@ object QueryDefs {
   private val storeDirs =
     new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
 
-  private def deleteTree(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) {
-      val walk = java.nio.file.Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => { java.nio.file.Files.deleteIfExists(f); () })
-      finally walk.close()
-    }
-
   private lazy val storeDirHook: Unit =
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      storeDirs.values.forEach(p => deleteTree(p))))
+      storeDirs.values.forEach(p => Harness.deleteTree(p))))
 
   def tempStoreDir(prefix: String): String = {
     storeDirHook
-    Option(storeDirs.remove(prefix)).foreach(deleteTree)
+    Option(storeDirs.remove(prefix)).foreach(Harness.deleteTree)
     val p = java.nio.file.Files.createTempDirectory(prefix)
     storeDirs.put(prefix, p)
     p.toString

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -274,24 +275,25 @@ class PipelineJobSpec extends SparkSpec {
     p
   }
 
-  test("incrementalStep ≡ the standalone operator sequence; store grows by exactly the admitted rows") {
-    import graft.operators.{Curation, Dedup}
+  /** The step fixture: (benchmark docs, corpus index, batch). */
+  private def stepFixture() = {
     val docs = graft.sources.Tables.documents(spark, sf)
-    val bench = docs.filter(col("doc_id") < 25L)
     val nonBench = docs.filter(col("doc_id") >= 25L)
-    val corpusIdx = Dedup.nearDupIndex(
+    val corpusIdx = graft.operators.Dedup.nearDupIndex(
         nonBench.filter(col("doc_id") % 5 < 3), "doc_id", "text", n = 3)
       .localCheckpoint()
-    val batchA = nonBench.filter(col("doc_id") % 5 === 3)
-      .select("doc_id", "text")
-    val store = freshStore(corpusIdx)
-    val rows0 = spark.read.parquet(s"$store/payload").count()
-    val banded0 = spark.read.parquet(s"$store/banded").count()
-    val got = CurationJob.incrementalStep(spark, store, batchA, bench)
+    (docs.filter(col("doc_id") < 25L), corpusIdx,
+      nonBench.filter(col("doc_id") % 5 === 3).select("doc_id", "text"))
+  }
 
-    // the scaladoc's standalone sequence over a SECOND copy of the store
+  /** The scaladoc's standalone sequence for [[CurationJob.incrementalStep]]
+    * over a fresh copy of the store: the pass joined to its decisions,
+    * and the kept rows' index. */
+  private def standaloneStep(corpusIdx: DataFrame, batch: DataFrame,
+                             bench: DataFrame) = {
+    import graft.operators.{Curation, Dedup}
     val store2 = freshStore(corpusIdx)
-    val pass = Curation.curationPass(batchA, bench, "doc_id", "text",
+    val pass = Curation.curationPass(batch, bench, "doc_id", "text",
       CurationJob.DefaultRules)
     val kept = pass.filter(col("keep") === 1L)
     val idx = Dedup.nearDupIndex(kept, "doc_id", "text", n = 3)
@@ -304,6 +306,18 @@ class PipelineJobSpec extends SparkSpec {
         col("dup_of"),
         when(col("keep") === 1L && col("status") === "new", 1L)
           .otherwise(0L).as("curated"))
+    (want, idx)
+  }
+
+  test("incrementalStep ≡ the standalone operator sequence; store grows by exactly the admitted rows") {
+    val (bench, corpusIdx, batchA) = stepFixture()
+    val store = freshStore(corpusIdx)
+    val rows0 = spark.read.parquet(s"$store/payload").count()
+    val banded0 = spark.read.parquet(s"$store/banded").count()
+    val got = CurationJob.incrementalStep(spark, store, batchA, bench)
+
+    // the scaladoc's standalone sequence over a SECOND copy of the store
+    val (want, idx) = standaloneStep(corpusIdx, batchA, bench)
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
       "step decisions must equal the standalone pass→delta→curated chain")
 
@@ -329,6 +343,30 @@ class PipelineJobSpec extends SparkSpec {
     assert(grownIds == baseIds ++ admittedIds,
       "store ids must be base ids plus exactly the admitted ids")
     corpusIdx.unpersist(); idx.unpersist()
+  }
+
+  test("incrementalStep (small path) names every job it starts; its result collects in one job and equals the join") {
+    val (bench, corpusIdx, batch) = stepFixture()
+    val store = freshStore(corpusIdx)
+    val ((got, restored), jobs) = Harness.jobsOf(spark) {
+      Harness.phase(spark, "the caller's description") {
+        (CurationJob.incrementalStep(spark, store, batch, bench),
+          spark.sparkContext.getLocalProperty("spark.job.description"))
+      }
+    }
+    assert(restored == "the caller's description", "the caller's description must be restored")
+    info(s"${jobs.size} jobs: ${jobs.flatMap(_.description).distinct.mkString("; ")}")
+    assert(jobs.nonEmpty && jobs.forall(_.description.exists(_.startsWith("store-"))),
+      s"an unnamed job: ${jobs.map(j => j.description.getOrElse(j.callSite))}")
+    assert(jobs.exists(_.description.contains("store-probe lexical: delta")) &&
+      !jobs.exists(_.description.contains("store-probe lexical: pruned")),
+      "the step must take the small-delta path")
+    val (rows, collectJobs) = Harness.jobsOf(spark)(got.collect())
+    assert(collectJobs.size == 1, s"collecting the step's result started $collectJobs")
+    val want = standaloneStep(corpusIdx, batch, bench)._1
+    val rowsOf = (rs: Seq[Row]) => rs.map(_.toSeq.mkString("|")).sorted
+    assert(rowsOf(rows.toSeq) == rowsOf(want.collect().toSeq))
+    corpusIdx.unpersist()
   }
 
   test("incrementalStep rerun determinism: same batch + same store state → identical decisions and growth") {

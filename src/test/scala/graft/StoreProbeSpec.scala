@@ -152,7 +152,7 @@ class StoreProbeSpec extends SparkSpec {
         (IndexStore.Semantic, semIndex(sems), 8, sems.select("vec_id"),
           semIndex(sems), "vec_id", 0.4))) {
       val path = store(kind, empty, width)
-      val (read, jobs) = jobsStartedBy(IndexStore.read(spark, kind, path))
+      val (read, jobs) = Harness.jobsOf(spark)(IndexStore.read(spark, kind, path))
       assert(jobs.isEmpty, s"${kind.name}: reading a store started $jobs")
       assert(read.schema("id").dataType == org.apache.spark.sql.types.LongType)
       assert(read.count() == 0)
@@ -239,18 +239,18 @@ class StoreProbeSpec extends SparkSpec {
       }
       val before = Seq("payload", "banded").map(files)
       val rows0 = IndexStore.read(spark, kind, path).count()
-      val ((admitted, restored), jobs) = jobsStartedBy {
-        val sc = spark.sparkContext
-        sc.setJobDescription("the caller's description")
-        val probe = IndexStore.smallDeltaProbe(spark, kind, path, ids, idx, idCol,
-          threshold).get
-        IndexStore.append(spark, kind, path, probe.admitted.get)
-        (probe.admitted.get, sc.getLocalProperty("spark.job.description"))
+      val ((admitted, restored), jobs) = Harness.jobsOf(spark) {
+        Harness.phase(spark, "the caller's description") {
+          val probe = IndexStore.smallDeltaProbe(spark, kind, path, ids, idx, idCol,
+            threshold).get
+          IndexStore.append(spark, kind, path, probe.admitted.get)
+          (probe.admitted.get, spark.sparkContext.getLocalProperty("spark.job.description"))
+        }
       }
       assert(restored == "the caller's description", "the caller's description must be restored")
-      info(s"${kind.name}: ${jobs.size} jobs: ${jobs.flatten.mkString("; ")}")
+      info(s"${kind.name}: ${jobs.size} jobs: ${jobs.flatMap(_.description).mkString("; ")}")
       assert(jobs.size <= 5, s"${kind.name}: ${jobs.size} jobs: $jobs")
-      assert(jobs.forall(_.exists(_.startsWith(s"store-"))),
+      assert(jobs.forall(_.description.exists(_.startsWith(s"store-"))),
         s"${kind.name}: an undescribed job: $jobs")
       val n = admitted.count()
       assert(n > 0 && IndexStore.read(spark, kind, path).count() == rows0 + n)
@@ -258,6 +258,49 @@ class StoreProbeSpec extends SparkSpec {
       Seq("payload", "banded").map(files).zip(before).foreach { case (after, was) =>
         assert(after.forall { case (b, n) => n - was.getOrElse(b, 0) <= 1 }, after)
       }
+    }
+  }
+
+  test("the reference path names every store job per kind: initManaged, pruned probe, non-local append, compactManaged") {
+    val cases = Seq(
+      (IndexStore.Lexical, lexIndex(docs.filter($"doc_id" % 5 < 3)), 32,
+        docs.filter($"doc_id" % 5 === 3), "doc_id", 0.6),
+      (IndexStore.Semantic, semIndex(emb.filter($"vec_id" % 5 < 3)), 8,
+        emb.filter($"vec_id" % 5 === 3), "vec_id", 0.4))
+    for ((kind, base, width, batch, idCol, threshold) <- cases) {
+      val root = tmp(s"graft_named_${kind.name}")
+      val ids = batch.select(idCol)
+      val idx = if (kind == IndexStore.Lexical) lexIndex(batch) else semIndex(batch)
+      /** `body`'s jobs, each named `store-…`, under a caller's own name. */
+      def named[T](call: String)(body: => T): T = {
+        val ((out, restored), jobs) = Harness.jobsOf(spark) {
+          Harness.phase(spark, "the caller's description") {
+            (body, spark.sparkContext.getLocalProperty("spark.job.description"))
+          }
+        }
+        assert(restored == "the caller's description", s"${kind.name} $call")
+        assert(jobs.nonEmpty && jobs.forall(_.description.exists(_.startsWith("store-"))),
+          s"${kind.name} $call: ${jobs.map(j => j.description.getOrElse(j.callSite))}")
+        out
+      }
+      named("initManaged")(IndexStore.initManaged(spark, kind, root, base, width,
+        bandBuckets = 16, idBuckets = 16))
+      // a hot-bucket cap below the row bound asks for the reference path
+      val probe = named("probe")(IndexStore.probe(spark, kind, root, ids, idx, idCol,
+          threshold, hotBucketCap = 8)(
+        if (kind == IndexStore.Lexical)
+          Dedup.deltaNearDupFromStorePruned(spark, root, ids, idx, idCol, threshold,
+            hotBucketCap = 8)
+        else Similarity.deltaSemNearDupFromStorePruned(spark, root, ids, idx, idCol,
+          threshold)))
+      assert(probe.admitted.isEmpty)
+      val rows0 = IndexStore.read(spark, kind, root).count()
+      val admit = idx.join(probe.decisions.filter($"status" === "new")
+        .select(col(idCol).as("id")), "id")
+      named("append")(IndexStore.append(spark, kind, root, admit))
+      assert(IndexStore.read(spark, kind, root).count() > rows0)
+      named("compactManaged")(IndexStore.compactManaged(spark, kind, root,
+        IndexStore.read(spark, kind, root).select("id").filter($"id" % 2 === 0)))
     }
   }
 }

@@ -24,7 +24,7 @@ class TablesSpec extends SparkSpec {
 
   /** Run `body` and count the Spark jobs it starts on this thread. */
   private def jobCount[T](body: => T): (T, Int) = {
-    val (out, jobs) = jobsStartedBy(body)
+    val (out, jobs) = Harness.jobsOf(spark)(body)
     (out, jobs.size)
   }
 
