@@ -70,8 +70,8 @@ object Dedup {
     require(idCol != "status" && idCol != "dup_of",
       s"idCol '$idCol' collides with an output column")
     val corpusKeys = existing
-      .select(keyExpr.as("__graft_fp"), col(idCol).as("__graft_ck"))
-      .groupBy("__graft_fp").agg(min(col("__graft_ck")).as("__graft_ck"))
+      .select(keyExpr.as("__graft_fp"), col(idCol).as("__graft_keeper"))
+      .groupBy("__graft_fp").agg(min(col("__graft_keeper")).as("__graft_keeper"))
     val batchKeeper = min(col(idCol)).over(
       org.apache.spark.sql.expressions.Window.partitionBy(col("__graft_fp")))
     incoming
@@ -79,10 +79,10 @@ object Dedup {
       .join(corpusKeys, Seq("__graft_fp"), "left")
       .withColumn("__graft_bk", batchKeeper)
       .select(col(idCol),
-        when(col("__graft_ck").isNotNull, lit("dup_of_corpus"))
+        when(col("__graft_keeper").isNotNull, lit("dup_of_corpus"))
           .when(col(idCol) === col("__graft_bk"), lit("new"))
           .otherwise(lit("dup_in_batch")).as("status"),
-        when(col("__graft_ck").isNotNull, col("__graft_ck"))
+        when(col("__graft_keeper").isNotNull, col("__graft_keeper"))
           .when(col(idCol) =!= col("__graft_bk"), col("__graft_bk"))
           .as("dup_of"))
   }
@@ -304,18 +304,6 @@ object Dedup {
     * one hot bucket's pair output is spread over this many tasks. */
   private[graft] val HotSplitDefault = 8
 
-  /** Candidate-count bound for the incremental cross leg's verify-fetch
-    * BROADCAST (round-17 ADVICE): the candidate-id semi-reduction is the
-    * least-bytes thing that can prune the streamed index, but a
-    * broadcast still collects those ids to the driver — a template-hot
-    * STANDING bucket can make the set corpus-scale, and 4M longs
-    * (~32 MB, well under the driver's broadcast comfort zone) is where
-    * the delta probes fall back to a shuffle-hash left-semi instead:
-    * a bounded id-side exchange plus one per-batch index exchange —
-    * degraded, never a driver OOM.
-    */
-  private[graft] val MaxFetchBroadcastIds = 4L * 1000 * 1000
-
   /** Candidate pairs from an inverted index: group by bucket key, collect
     * the (sorted, distinct) doc ids per bucket, enumerate each bucket's
     * pairs inline. Prefix filtering / LSH banding bounds the AVERAGE
@@ -487,8 +475,8 @@ object Dedup {
     * templated corpora (10⁵–10⁶ candidates for 10²–10³ true pairs) this
     * removes the dominant stage cost.
     */
-  private def verifiedJaccard(cand: DataFrame, sh: DataFrame,
-                              threshold: Double): DataFrame = {
+  private[operators] def verifiedJaccard(cand: DataFrame, sh: DataFrame,
+                                         threshold: Double): DataFrame = {
     def side(s: String): DataFrame = sh.select(
       col("id").as(s"id_$s"), col("sh").as(s"sh_$s"),
       sort_array(graft.expressions.XxHash64Array(col("sh"))).as(s"hs_$s"))
@@ -637,13 +625,6 @@ object Dedup {
     transform(sigBandKeys(sig, bands), (bh, band) =>
       struct(band.as("band"), bh.as("bh")))
 
-  /** `(id, band, bh)`: one row per band key of a [[nearDupIndex]]
-    * frame's signature — the probe side, the index side and the
-    * persisted store's `banded/` table all band through it. */
-  private[operators] def bandKeyRows(index: DataFrame, bands: Int): DataFrame =
-    index.select(col("id"), posexplode(sigBandKeys(col("sig"), bands)))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bh")
-
   /** The exact-Jaccard verify of candidate pairs (the
     * [[IndexStore.Lexical]] kind's `verify`): `pairs` carries the
     * incoming side's `sh_i`/`hs_i` and the standing side's `sh_c`/`hs_c`;
@@ -663,27 +644,6 @@ object Dedup {
       .filter(col("inter") /
         (size(col("sh_i")) + size(col("sh_c")) - col("inter")) >= threshold)
 
-  /** The verify fetch of a delta probe core: the `fetched0` rows whose
-    * `id_c` is among `candIds`, semi-reduced through a broadcast while
-    * the distinct candidate count stays under `maxIds`, else through a
-    * shuffle-hash left-semi. Without `knownCount` the candidate ids are
-    * checkpointed and counted first (two sequential jobs); with it, the
-    * broadcast build evaluates the candidate-scale banding join lazily
-    * (the r17 shape, measured flat). */
-  private[operators] def candidateFetch(fetched0: DataFrame,
-                                        candIds: DataFrame,
-                                        knownCount: Option[Long],
-                                        maxIds: Long): DataFrame = {
-    val (ids, n) = knownCount match {
-      case Some(n) => (candIds, n)
-      case None =>
-        val c = candIds.localCheckpoint()
-        (c, c.count())
-    }
-    if (n <= maxIds) fetched0.join(broadcast(ids), "id_c")
-    else fetched0.join(ids.hint("shuffle_hash"), Seq("id_c"), "left_semi")
-  }
-
   /** INCREMENTAL banded near-dup — [[deltaDedup]]'s contract for the
     * NEAR-duplicate regime: classify every `incoming` document against
     * the standing corpus represented by a persisted [[nearDupIndex]]
@@ -696,30 +656,24 @@ object Dedup {
     *   - `new` — neither (these rows, and their [[nearDupIndex]] rows,
     *     are what an append pass admits).
     *
+    * The probe is [[IndexStore.deltaProbe]] over the lexical kind.
     * Candidates come from the same (band, band-hash) bucket join
-    * [[minHashPairs]] uses — the corpus side banded from the STORED
-    * signature (a narrow projection of the index; the plan guard in
-    * PlanSpec pins that no corpus TEXT re-scan occurs) — so per batch
-    * the cost is O(batch × bands) broadcast probe keys against
-    * streaming narrow scans of the index (banding + candidate-id fetch;
-    * the index is never shuffled, sorted, or broadcast), plus the
+    * [[minHashPairs]] uses, the corpus side banded from the STORED
+    * signature (the plan guard in PlanSpec pins that no corpus TEXT
+    * re-scan occurs), so per batch the cost is O(batch × bands) broadcast
+    * probe keys against streaming narrow scans of the index, plus the
     * within-batch pair generation — never a corpus×corpus term, and
     * never an O(index) exchange. The residual per-batch O(index)
     * STREAMING-scan term is what [[deltaNearDupFromStore]] removes via
     * bucket-pruned reads of a persisted store. Every candidate is
-    * exact-verified (hash
-    * upper-bound prefilter, then true Jaccard on the stored shingle
-    * sets), so output decisions are exact wherever banding recalls the
-    * pair — identical to [[minHashPairs]]' guarantee. Duplicate
-    * candidates from multi-band collisions are collapsed AFTER the
-    * verify by the min() aggregates themselves (the post-verify-dedup
-    * lesson). `hotBucketDrop`/`hotBucketCap` carry [[candidatePairs]]'
+    * exact-verified (hash upper-bound prefilter, then true Jaccard on the
+    * stored shingle sets), so output decisions are exact wherever banding
+    * recalls the pair — identical to [[minHashPairs]]' guarantee.
+    * `hotBucketDrop`/`hotBucketCap` carry [[candidatePairs]]'
     * template-skew mitigations onto the within-batch leg, and
     * `hotBucketDrop` ALSO drops template-hot STANDING buckets from the
-    * cross leg (round-17 verdict #2 — a hot corpus bucket otherwise
-    * inflates the candidate-id set to O(hot-bucket) the moment one
-    * batch doc probes it); the cross leg's verify fetch is further
-    * size-guarded by [[MaxFetchBroadcastIds]].
+    * cross leg; the cross leg's verify fetch is size-guarded by
+    * [[IndexStore.MaxFetchBroadcastIds]].
     *
     * BEHAVIOR CHANGE (round 18): `hotBucketDrop > 0` previously bounded
     * the WITHIN-BATCH leg only; it now also excises hot standing
@@ -735,10 +689,9 @@ object Dedup {
                    textCol: String, n: Int, threshold: Double,
                    bands: Int = 32, hotBucketDrop: Int = 0,
                    hotBucketCap: Int = HotBucketCap): DataFrame =
-    deltaNearDupFromIndex(index,
-      incoming.select(col(idCol)),
-      nearDupIndex(incoming, idCol, textCol, n),
-      idCol, threshold, bands, hotBucketDrop, hotBucketCap)
+    IndexStore.deltaProbe(IndexStore.Lexical, index, incoming.select(col(idCol)),
+      nearDupIndex(incoming, idCol, textCol, n), idCol, threshold, bands,
+      hotBucketDrop = hotBucketDrop, hotBucketCap = hotBucketCap)
 
   /** [[deltaNearDup]] from a pre-built incoming-batch [[nearDupIndex]]
     * frame — the shared-frame entry point the ADMIT-THEN-PROBE sequence
@@ -757,110 +710,12 @@ object Dedup {
                             hotBucketDrop: Int = 0,
                             hotBucketCap: Int = HotBucketCap,
                             maxFetchBroadcastIds: Long =
-                              MaxFetchBroadcastIds,
-                            knownCandCount: Option[Long] = None): DataFrame = {
-    require(idCol != "status" && idCol != "dup_of",
-      s"idCol '$idCol' collides with an output column")
-    require(bands >= 1 && 64 % bands == 0,
-      s"bands must divide the 64-hash signature, got $bands")
-    require(Seq("id", "sh", "hs", "sig").forall(index.columns.contains),
-      s"index must be a nearDupIndex frame (id, sh, hs, sig); got " +
-        index.columns.mkString(", "))
-    require(Seq("id", "sh", "hs", "sig").forall(incomingIndex.columns.contains),
-      s"incomingIndex must be a nearDupIndex frame (id, sh, hs, sig); got " +
-        incomingIndex.columns.mkString(", "))
-    val incIdx = incomingIndex
-    val incB = bandKeyRows(incIdx, bands).withColumnRenamed("id", "id_i")
-    val corpusB0 = bandKeyRows(index, bands).withColumnRenamed("id", "id_c")
-    // cross-leg hot-bucket relief valve (round-17 verdict #2):
-    // `hotBucketDrop` now applies to the STANDING side too — one batch
-    // doc landing in a template-hot corpus bucket otherwise makes the
-    // candidate set O(hot-bucket). The census runs only over the
-    // buckets the batch probes (broadcast semi of the batch's keys —
-    // candidate-scale, not index-scale) and drops those whose
-    // INDEX-side occupancy exceeds the bound; decisions are identical
-    // whenever no bucket exceeds it (the within-batch dropOver
-    // contract, test-pinned).
-    val corpusB =
-      if (hotBucketDrop <= 0) corpusB0
-      else {
-        val hot = corpusB0
-          .join(broadcast(incB.select("band", "bh").distinct()),
-            Seq("band", "bh"))
-          .groupBy(col("band"), col("bh")).agg(count(lit(1)).as("__n"))
-          .filter(col("__n") > hotBucketDrop).select("band", "bh")
-        corpusB0.join(broadcast(hot), Seq("band", "bh"), "left_anti")
-      }
-    // cross leg: batch probes × corpus banded keys, verified exactly;
-    // multi-band duplicates ride the candidate stream into the min()
-    // (map-side-combined) instead of paying a pre-verify distinct.
-    //
-    // The INDEX side only ever STREAMS — never shuffles, sorts, or
-    // broadcasts. Every batch-derived frame is broadcast() by contract
-    // (batch ≪ index; the checkpointed index enters as a LogicalRDD
-    // whose size estimate is garbage-small — measured: a 50k-doc index
-    // reporting ~340 KB — so left to the static planner the INDEX got
-    // broadcast and a ×100-grown index OOM'd the driver, round 17).
-    // The verify fetch is a SEMI-reduction of candidate corpus IDS ONLY
-    // (8 bytes/row, the least-bytes thing that can prune the index)
-    // against the streamed index, so the fat payload columns (sh, hs)
-    // of non-candidates never leave their partitions: BROADCAST while
-    // the candidate count stays under [[MaxFetchBroadcastIds]], else a
-    // shuffle-hash left-semi (round-17 ADVICE — a corpus-scale id set
-    // still collects to the driver on its way into a broadcast; the
-    // fallback degrades to one per-batch index exchange instead of an
-    // OOM). ONLY candIds is materialized for that guard — one eager
-    // banding+distinct job whose output is id-sized; the r18 cut also
-    // checkpointed the full candidate PAIR set "to run the banding join
-    // once", but a same-session A/B (BASELINE.md round 19) measured the
-    // pair-store serialization + extra jobs at 1.5× across the whole
-    // delta/store family, where re-running the banding scan lazily
-    // inside the verify subtree (the r17 shape, measured flat to ×100)
-    // costs one narrow index pass. The fetched candidate payload then
-    // joins the pair stream via SHUFFLE_HASH (candidate-scale exchanges
-    // on both sides), NOT a broadcast: a template-hot corpus band can
-    // make the candidate set corpus-scale, and a payload broadcast
-    // there is a driver OOM cliff where the shuffle merely degrades
-    // (round-17 review).
-    // id_i ≠ id_c: a doc is never its own duplicate — inert in normal
-    // operation (a standing index and an incoming batch share no ids),
-    // load-bearing under foreachBatch REPLAY, where a crashed-after-
-    // append batch re-probes a store already holding its own rows and
-    // must converge instead of self-matching (CurationStream)
-    val candPairs = broadcast(incB).join(corpusB, Seq("band", "bh"))
-      .filter(col("id_i") =!= col("id_c"))
-      .select("id_i", "id_c")
-    val candIdsPlan = candPairs.select(col("id_c")).distinct()
-    val fetched0 = index.select(col("id").as("id_c"), col("sh").as("sh_c"),
-      col("hs").as("hs_c"))
-    // `knownCandCount` comes from the store probe's bucket-pruning
-    // collect (optimization round 21). A count taken before hot-bucket
-    // dropping can only over-estimate, which only flips the guard toward
-    // the degraded-but-safe shuffle semi.
-    val fetched = candidateFetch(fetched0, candIdsPlan, knownCandCount,
-      maxFetchBroadcastIds)
-    val corpusMatch = IndexStore.Lexical.verify(candPairs
-        .join(broadcast(incIdx.select(col("id").as("id_i"),
-          col("sh").as("sh_i"), col("hs").as("hs_i"))), "id_i")
-        .join(fetched.hint("shuffle_hash"), "id_c"), threshold)
-      .groupBy(col("id_i")).agg(min(col("id_c")).as("__graft_ck"))
-    // within-batch leg: the standard banded pair path over the batch only
-    val batchKeeper = verifiedJaccard(
-        candidatePairs(incB.select(col("id_i").as("id"), col("band"),
-          col("bh")), Seq("band", "bh"), cap = hotBucketCap,
-          dropOver = hotBucketDrop),
-        incIdx, threshold)
-      .groupBy(col("id_b")).agg(min(col("id_a")).as("__graft_bk"))
-    incomingIds.select(col(idCol))
-      .join(corpusMatch.withColumnRenamed("id_i", idCol), Seq(idCol), "left")
-      .join(batchKeeper.withColumnRenamed("id_b", idCol), Seq(idCol), "left")
-      .select(col(idCol),
-        when(col("__graft_ck").isNotNull, lit("dup_of_corpus"))
-          .when(col("__graft_bk").isNotNull, lit("dup_in_batch"))
-          .otherwise(lit("new")).as("status"),
-        when(col("__graft_ck").isNotNull, col("__graft_ck"))
-          .otherwise(col("__graft_bk")).as("dup_of"))
-  }
+                              IndexStore.MaxFetchBroadcastIds,
+                            knownCandCount: Option[Long] = None): DataFrame =
+    IndexStore.deltaProbe(IndexStore.Lexical, index, incomingIds, incomingIndex,
+      idCol, threshold, bands, hotBucketDrop = hotBucketDrop,
+      hotBucketCap = hotBucketCap, maxFetchBroadcastIds = maxFetchBroadcastIds,
+      knownCandCount = knownCandCount)
 
   // ---------------------------------------- persisted near-dup index store
 
@@ -869,8 +724,8 @@ object Dedup {
     IndexStore.resolveStoreDir(spark, path)
 
   /** [[deltaNearDup]] against a persisted [[IndexStore.Lexical]] store —
-    * the corpus-size-independent probe ([[nearDupStoreProbe]]'s
-    * decisions). Decisions equal [[deltaNearDupFromIndex]] over the full
+    * the corpus-size-independent probe, on the path [[IndexStore.probe]]
+    * picks. Decisions equal [[deltaNearDupFromIndex]] over the full
     * index frame.
     */
   def deltaNearDupFromStore(spark: SparkSession, rawPath: String,
@@ -878,39 +733,9 @@ object Dedup {
                             incomingIndex: DataFrame, idCol: String,
                             threshold: Double, hotBucketDrop: Int = 0,
                             hotBucketCap: Int = HotBucketCap): DataFrame =
-    nearDupStoreProbe(spark, rawPath, incomingIds, incomingIndex, idCol,
-      threshold, hotBucketDrop, hotBucketCap).decisions
-
-  /** The lexical store probe on the path [[IndexStore.probe]] picks: a
-    * delta within the small-delta bounds takes the shuffle-free path and
-    * also returns its local admitted rows; any other takes
-    * [[deltaNearDupFromStorePruned]]. */
-  private[graft] def nearDupStoreProbe(spark: SparkSession, rawPath: String,
-      incomingIds: DataFrame, incomingIndex: DataFrame, idCol: String,
-      threshold: Double, hotBucketDrop: Int = 0,
-      hotBucketCap: Int = HotBucketCap): IndexStore.Probe =
     IndexStore.probe(spark, IndexStore.Lexical, rawPath, incomingIds,
-        incomingIndex, idCol, threshold, hotBucketDrop = hotBucketDrop,
-        hotBucketCap = hotBucketCap)(
-      deltaNearDupFromStorePruned(spark, rawPath, incomingIds, incomingIndex,
-        idCol, threshold, hotBucketDrop, hotBucketCap))
-
-  /** The scale path of [[deltaNearDupFromStore]], and the reference the
-    * small-delta path is tested against: [[IndexStore.fetchCandidates]]
-    * reads only the band-buckets the batch's keys hash to and the
-    * candidates' id-buckets, and the probe core runs over that pruned
-    * payload at the store's recorded width.
-    */
-  private[graft] def deltaNearDupFromStorePruned(spark: SparkSession,
-      rawPath: String, incomingIds: DataFrame, incomingIndex: DataFrame,
-      idCol: String, threshold: Double, hotBucketDrop: Int = 0,
-      hotBucketCap: Int = HotBucketCap): DataFrame = {
-    val (pruned, candCount, layout) = IndexStore.fetchCandidates(spark,
-      IndexStore.Lexical, rawPath, incomingIndex)
-    deltaNearDupFromIndex(pruned, incomingIds, incomingIndex, idCol,
-      threshold, layout.width, hotBucketDrop, hotBucketCap,
-      knownCandCount = Some(candCount))
-  }
+      incomingIndex, idCol, threshold, hotBucketDrop = hotBucketDrop,
+      hotBucketCap = hotBucketCap).decisions
 
   /** Create a managed [[IndexStore.Lexical]] root
     * ([[IndexStore.initManaged]]). */

@@ -57,9 +57,15 @@ import graft.expressions.BroadcastLookup
   *     shuffle-free jobs — collect the delta, scan the probed `banded/`
   *     buckets, scan the candidate `payload/` buckets and verify — with
   *     the bookkeeping on the driver, and returns local frames;
-  *   - the SCALE path ([[fetchCandidates]] plus the kind's DataFrame
-  *     probe core): any delta above either bound falls back to it, and
-  *     it is the reference the small-delta path is tested against.
+  *   - the SCALE path ([[prunedProbe]]): [[fetchCandidates]] plus
+  *     [[deltaProbe]] at the store's width. Any delta above either bound
+  *     falls back to it, and it is the one reference path the small-delta
+  *     path is tested against.
+  *
+  * [[deltaProbe]] is the one DataFrame probe core of both kinds; the
+  * in-memory entry points (`Dedup.deltaNearDup…`,
+  * `Similarity.deltaSemNearDup…`) call it over a standing frame, and
+  * only its within-batch leg (`StoreKind.batchPairs`) differs by kind.
   *
   * [[append]] writes a local batch of at most [[MaxDeltaRows]] rows (the
   * small path's admitted rows) in one job per table with no exchange;
@@ -110,6 +116,12 @@ object IndexStore {
     *                   `<col>_i` (incoming) and `<col>_c` (standing)
     * @param verify     candidate pairs × threshold → the pairs that are
     *                   near-duplicates
+    * @param batchPairs the within-batch leg of [[deltaProbe]]:
+    *                   `(batch, batchKeys, threshold, width, flips,
+    *                   hotBucketDrop, hotBucketCap)` → the verified pairs
+    *                   `(id_a, id_b)`, `id_a < id_b`, among a delta's own
+    *                   index rows; `batchKeys` are the core's probe-side
+    *                   key rows `(id, keyCols…)`
     * @param side       a side table maintenance carries along
     */
   final case class StoreKind(name: String, payload: StructType,
@@ -118,10 +130,13 @@ object IndexStore {
                              bandKeys: (Column, Int, Int) => Column,
                              keyCols: StructType, verifyCols: Seq[String],
                              verify: (DataFrame, Double) => DataFrame,
+                             batchPairs: (DataFrame, DataFrame, Double, Int, Int,
+                               Int, Int) => DataFrame,
                              side: Option[SideTable] = None) {
+    def checkWidth(width: Int): Unit =
+      require(widthRule._1(width), s"$widthKey must be ${widthRule._2}, got $width")
     def checkLayout(l: Layout): Unit = {
-      require(widthRule._1(l.width),
-        s"$widthKey must be ${widthRule._2}, got ${l.width}")
+      checkWidth(l.width)
       require(l.bandBuckets >= 1 && l.idBuckets >= 1,
         s"bucket counts must be positive, got ${l.bandBuckets}/${l.idBuckets}")
     }
@@ -143,7 +158,11 @@ object IndexStore {
     "bands", (w => w >= 1 && 64 % w == 0, "a divisor of the 64-hash signature"),
     (sig, w, _) => Dedup.bandKeyStructs(sig, w),
     StructType.fromDDL("band INT, bh BIGINT"), Seq("sh", "hs"),
-    Dedup.jaccardVerify, Some(Dedup.FingerprintSide))
+    Dedup.jaccardVerify,
+    // the core's own batch key rows, not a second banding of the batch
+    (batch, keys, t, _, _, drop, cap) => Dedup.verifiedJaccard(
+      Dedup.candidatePairs(keys, Seq("band", "bh"), cap, dropOver = drop), batch, t),
+    Some(Dedup.FingerprintSide))
 
   val Semantic: StoreKind = StoreKind("semantic",
     StructType.fromDDL("id BIGINT, e_d ARRAY<DOUBLE>, sig ARRAY<INT>, n DOUBLE"),
@@ -151,7 +170,12 @@ object IndexStore {
     (w => w >= 1 && w <= Similarity.MaxRowsPerBand,
       s"in [1, ${Similarity.MaxRowsPerBand}]"),
     Similarity.bandKeyStructs, StructType.fromDDL("key BIGINT"),
-    Seq("e_d", "n"), Similarity.cosineVerify)
+    Seq("e_d", "n"), Similarity.cosineVerify,
+    // at flips = 1 the batch leg bands by the same ≤1-flip rule as the
+    // cross leg; band width is its only bucket control (no hotBucketDrop)
+    (batch, _, t, w, flips, _, _) =>
+      if (flips >= 1) Similarity.lshNearDupPairsMultiProbeFromSig(batch, t, w, flips)
+      else Similarity.lshNearDupPairsFromSig(batch, t, w))
 
   // ------------------------------------------------------------- meta
 
@@ -432,6 +456,152 @@ object IndexStore {
       .select(kind.columns: _*), stats.map(_.getLong(1)).sum, l)
   }
 
+  // ------------------------------------------------ the DataFrame probe
+
+  /** Candidate-count bound for the cross leg's verify-fetch BROADCAST in
+    * [[deltaProbe]]: the candidate-id semi-reduction is the least-bytes
+    * thing that can prune the streamed index, but a broadcast still
+    * collects those ids to the driver — a template-hot STANDING bucket
+    * can make the set corpus-scale, and 4M longs (~32 MB, well under the
+    * driver's broadcast comfort zone) is where the probe falls back to a
+    * shuffle-hash left-semi instead: a bounded id-side exchange plus one
+    * per-batch index exchange — degraded, never a driver OOM.
+    */
+  private[graft] val MaxFetchBroadcastIds = 4L * 1000 * 1000
+
+  /** A probe's input checks, on the DataFrame core and the small path
+    * alike: the id column must not collide with an output column, flips
+    * must be 0 or 1, and every frame must hold the kind's payload. */
+  private def checkProbe(kind: StoreKind, idCol: String, flips: Int,
+                         frames: (String, DataFrame)*): Unit = {
+    require(idCol != "status" && idCol != "dup_of",
+      s"idCol '$idCol' collides with an output column")
+    require(flips == 0 || flips == 1,
+      s"flips must be 0 (exact keys) or 1 (1-plane probes), got $flips")
+    val cols = kind.payload.fieldNames.toSeq
+    for ((name, f) <- frames)
+      require(cols.forall(f.columns.contains),
+        s"$name must hold (${cols.mkString(", ")}); got ${f.columns.mkString(", ")}")
+  }
+
+  /** The verify fetch of [[deltaProbe]]: the `fetched0` rows whose `id_c`
+    * is among `candIds`, semi-reduced through a broadcast while the
+    * distinct candidate count stays under `maxIds`, else through a
+    * shuffle-hash left-semi. Without `knownCount` the candidate ids are
+    * checkpointed and counted first (two sequential jobs); with it, the
+    * broadcast build evaluates the candidate-scale banding join lazily
+    * (the r17 shape, measured flat). */
+  private def candidateFetch(fetched0: DataFrame, candIds: DataFrame,
+                             knownCount: Option[Long],
+                             maxIds: Long): DataFrame = {
+    val (ids, n) = knownCount match {
+      case Some(n) => (candIds, n)
+      case None =>
+        val c = candIds.localCheckpoint()
+        (c, c.count())
+    }
+    if (n <= maxIds) fetched0.join(broadcast(ids), "id_c")
+    else fetched0.join(ids.hint("shuffle_hash"), Seq("id_c"), "left_semi")
+  }
+
+  /** The DataFrame delta probe of either kind: classify every id of
+    * `incomingIds` (one `idCol` column) against the standing `index` (a
+    * `kind` payload frame), given the delta's own index rows
+    * `incomingIndex`, at band `width`. Statuses (the q74 contract):
+    *
+    *   - `dup_of_corpus` — some standing row verifies with it (`dup_of`
+    *     = the smallest such standing id);
+    *   - `dup_in_batch` — no standing match, but a smaller-id delta row
+    *     verifies with it (`dup_of` = the smallest such id);
+    *   - `new` — neither, including ids without an index row.
+    *
+    * The CROSS leg joins the delta's probe keys (`kind.keyRows` at
+    * `flips`) against the index's exact keys, self-pairs excluded,
+    * fetches the candidates' verify columns and runs `kind.verify`; the
+    * WITHIN-BATCH leg is `kind.batchPairs`, handed the same delta key
+    * rows. Multi-band duplicate candidates ride the candidate stream into
+    * the two `min()` keepers (map-side combined) instead of paying a
+    * pre-verify distinct.
+    *
+    * The INDEX side only ever STREAMS — never shuffles, sorts, or
+    * broadcasts. Every delta-derived frame is broadcast by contract
+    * (delta ≪ index; a checkpointed index enters as a LogicalRDD whose
+    * size estimate is garbage-small — measured: a 50k-doc index reporting
+    * ~340 KB — so left to the static planner the INDEX got broadcast and
+    * a ×100-grown index OOM'd the driver, round 17). The verify fetch is
+    * a SEMI-reduction of candidate ids only (8 bytes a row) against the
+    * streamed index, so the payload of non-candidates never leaves its
+    * partitions: broadcast while the candidate count stays under
+    * `maxFetchBroadcastIds`, else a shuffle-hash left-semi
+    * ([[candidateFetch]]). Only the candidate ids are materialized for
+    * that guard (or `knownCandCount`, the store fetch's count, stands
+    * in): checkpointing the full candidate PAIR set measured 1.5× across
+    * the delta/store family (round 19), where re-running the banding scan
+    * lazily inside the verify subtree costs one narrow index pass. The
+    * fetched payload then joins the pair stream via SHUFFLE_HASH, not a
+    * broadcast: a template-hot band can make the candidate set
+    * corpus-scale, and a payload broadcast there is a driver OOM cliff.
+    * Excluding self-pairs is inert in normal operation (a standing index
+    * and a delta share no ids) and load-bearing under `foreachBatch`
+    * replay, where a batch re-probes a store already holding its rows
+    * and must converge instead of self-matching.
+    *
+    * `hotBucketDrop` > 0 drops the standing buckets the delta probes
+    * whose index occupancy exceeds it (a census over `kind.keyCols`,
+    * only over the probed keys, so candidate-scale): one delta row in a
+    * template-hot bucket otherwise makes the candidate set O(bucket).
+    * Decisions are unchanged whenever no probed bucket exceeds the
+    * bound. `hotBucketDrop` and `hotBucketCap` also reach
+    * `kind.batchPairs` (the lexical leg's [[Dedup.candidatePairs]]
+    * mitigations; the semantic leg ignores them).
+    */
+  private[graft] def deltaProbe(kind: StoreKind, index: DataFrame,
+                                incomingIds: DataFrame, incomingIndex: DataFrame,
+                                idCol: String, threshold: Double, width: Int,
+                                flips: Int = 0, hotBucketDrop: Int = 0,
+                                hotBucketCap: Int = Dedup.HotBucketCap,
+                                maxFetchBroadcastIds: Long = MaxFetchBroadcastIds,
+                                knownCandCount: Option[Long] = None): DataFrame = {
+    checkProbe(kind, idCol, flips, "index" -> index, "incomingIndex" -> incomingIndex)
+    kind.checkWidth(width)
+    val keyCols = kind.keyCols.fieldNames.toSeq
+    val keys = keyCols.map(col)
+    val batchKeys = kind.keyRows(incomingIndex, width, flips)
+    val incB = batchKeys.withColumnRenamed("id", "id_i")
+    val corB0 = kind.keyRows(index, width, 0).withColumnRenamed("id", "id_c")
+    val corB =
+      if (hotBucketDrop <= 0) corB0
+      else {
+        val hot = corB0.join(broadcast(incB.select(keys: _*).distinct()), keyCols)
+          .groupBy(keys: _*).agg(count(lit(1)).as("__n"))
+          .filter(col("__n") > hotBucketDrop).select(keys: _*)
+        corB0.join(broadcast(hot), keyCols, "left_anti")
+      }
+    val candPairs = broadcast(incB).join(corB, keyCols)
+      .filter(col("id_i") =!= col("id_c"))
+      .select("id_i", "id_c")
+    def side(frame: DataFrame, s: String) = frame.select(col("id").as(s"id_$s") +:
+      kind.verifyCols.map(c => col(c).as(s"${c}_$s")): _*)
+    val fetched = candidateFetch(side(index, "c"),
+      candPairs.select(col("id_c")).distinct(), knownCandCount, maxFetchBroadcastIds)
+    val corpusMatch = kind.verify(candPairs
+        .join(broadcast(side(incomingIndex, "i")), "id_i")
+        .join(fetched.hint("shuffle_hash"), "id_c"), threshold)
+      .groupBy(col("id_i")).agg(min(col("id_c")).as("__graft_ck"))
+    val batchKeeper = kind.batchPairs(incomingIndex, batchKeys, threshold, width,
+        flips, hotBucketDrop, hotBucketCap)
+      .groupBy(col("id_b")).agg(min(col("id_a")).as("__graft_bk"))
+    incomingIds.select(col(idCol))
+      .join(corpusMatch.withColumnRenamed("id_i", idCol), Seq(idCol), "left")
+      .join(batchKeeper.withColumnRenamed("id_b", idCol), Seq(idCol), "left")
+      .select(col(idCol),
+        when(col("__graft_ck").isNotNull, lit("dup_of_corpus"))
+          .when(col("__graft_bk").isNotNull, lit("dup_in_batch"))
+          .otherwise(lit("new")).as("status"),
+        when(col("__graft_ck").isNotNull, col("__graft_ck"))
+          .otherwise(col("__graft_bk")).as("dup_of"))
+  }
+
   // ------------------------------------------------- small-delta path
 
   /** Row bound of the small-delta path, on a delta's id rows and on its
@@ -459,22 +629,42 @@ object IndexStore {
     * one place that picks its path: [[smallDeltaProbe]] when the caller's
     * hot-bucket settings cannot engage on a delta it accepts (no
     * `hotBucketDrop`, a `hotBucketCap` of at least [[MaxDeltaRows]]) and
-    * the delta is within its bounds; otherwise `pruned`, the kind's
-    * DataFrame path over [[fetchCandidates]]. */
+    * the delta is within its bounds; otherwise [[prunedProbe]]. */
   private[graft] def probe(spark: SparkSession, kind: StoreKind, rawPath: String,
                            incomingIds: DataFrame, incomingIndex: DataFrame,
                            idCol: String, threshold: Double, flips: Int = 0,
                            hotBucketDrop: Int = 0,
-                           hotBucketCap: Int = MaxDeltaRows)(
-                           pruned: => DataFrame): Probe =
+                           hotBucketCap: Int = MaxDeltaRows): Probe =
     (if (hotBucketDrop != 0 || hotBucketCap < MaxDeltaRows) None
      else smallDeltaProbe(spark, kind, rawPath, incomingIds, incomingIndex,
        idCol, threshold, flips)).getOrElse(Probe(
-      Harness.phase(spark, s"store-probe ${kind.name}: pruned")(pruned), None))
+      Harness.phase(spark, s"store-probe ${kind.name}: pruned")(
+        prunedProbe(spark, kind, rawPath, incomingIds, incomingIndex, idCol,
+          threshold, flips, hotBucketDrop, hotBucketCap)), None))
 
-  /** The store probe of a SMALL delta: [[fetchCandidates]] plus the probe
-    * core's decisions, in three shuffle-free Spark jobs with all the
-    * bookkeeping on the driver. Under AQE every exchange of the
+  /** The reference store probe, taken by any delta above the small
+    * path's bounds and the one the small path is tested against:
+    * [[fetchCandidates]] reads only the band-buckets the delta's probe
+    * keys hash to and the candidates' id-buckets, and [[deltaProbe]] runs
+    * over that pruned payload at the store's recorded width, its fetch
+    * guard taking the fetch's candidate count. Decisions equal
+    * [[deltaProbe]] over the store's full payload frame. */
+  private[graft] def prunedProbe(spark: SparkSession, kind: StoreKind,
+                                 rawPath: String, incomingIds: DataFrame,
+                                 incomingIndex: DataFrame, idCol: String,
+                                 threshold: Double, flips: Int = 0,
+                                 hotBucketDrop: Int = 0,
+                                 hotBucketCap: Int = Dedup.HotBucketCap): DataFrame = {
+    checkProbe(kind, idCol, flips, "incomingIndex" -> incomingIndex)
+    val (pruned, candCount, l) = fetchCandidates(spark, kind, rawPath,
+      incomingIndex, flips)
+    deltaProbe(kind, pruned, incomingIds, incomingIndex, idCol, threshold,
+      l.width, flips, hotBucketDrop, hotBucketCap, knownCandCount = Some(candCount))
+  }
+
+  /** The store probe of a SMALL delta: [[prunedProbe]]'s decisions, in
+    * three shuffle-free Spark jobs with all the bookkeeping on the
+    * driver. Under AQE every exchange of the
     * DataFrame path is a job of its own, re-planned between stages, so
     * a 48-row delta there costs about a dozen jobs; here each job is a
     * scan (or a local relation) joined to a broadcast built on the
@@ -499,13 +689,13 @@ object IndexStore {
     * many candidates share a hot bucket.
     *
     * The `min()` keepers and the decisions are then built on the driver.
-    * Decisions equal the reference path's (the callers'
-    * `…FromStorePruned`) row for row, in the same schema.
+    * Decisions equal the reference path's ([[prunedProbe]]) row for row,
+    * in the same schema.
     *
     * Returns None, having started at most jobs 1–2, when the delta holds
     * more than [[MaxDeltaRows]] id or index rows, the candidates pass
-    * [[MaxCandidatePairs]], or an id column is not integral: the caller
-    * then takes the reference path ([[probe]]). Each job carries a
+    * [[MaxCandidatePairs]], or an id column is not integral: [[probe]]
+    * then takes the reference path. Each job carries a
     * `spark.job.description` `store-probe <kind>: <step>`.
     */
   private[graft] def smallDeltaProbe(spark: SparkSession, kind: StoreKind,
@@ -513,12 +703,8 @@ object IndexStore {
                                      incomingIndex: DataFrame, idCol: String,
                                      threshold: Double,
                                      flips: Int = 0): Option[Probe] = {
-    require(idCol != "status" && idCol != "dup_of",
-      s"idCol '$idCol' collides with an output column")
+    checkProbe(kind, idCol, flips, "incomingIndex" -> incomingIndex)
     val payloadCols = kind.payload.fieldNames.toSeq
-    require(payloadCols.forall(incomingIndex.columns.contains),
-      s"incomingIndex must hold (${payloadCols.mkString(", ")}); got " +
-        incomingIndex.columns.mkString(", "))
     val idField = incomingIds.select(col(idCol)).schema.head
     val indexSchema = incomingIndex.select(payloadCols.map(col): _*).schema
     if (!integral(idField.dataType) || !integral(indexSchema("id").dataType))
@@ -740,29 +926,46 @@ object IndexStore {
 
   /** RETENTION maintenance: rewrite the store at `rawPath` to `outPath`
     * keeping only the ids in `keepIds` (one id column — typically a
-    * dedup keep list or a recency cut). The banded table is rebuilt from
-    * the surviving signatures, so expired rows stop generating
-    * candidates; an append-only store otherwise grows monotonically and
-    * its dropped rows keep paying probe-side verify work. The old store
-    * stays probe-able until the caller retires it (blue/green). */
+    * dedup keep list or a recency cut), the kind's side table included.
+    * The banded table is rebuilt from the surviving signatures, so
+    * expired rows stop generating candidates; an append-only store
+    * otherwise grows monotonically and its dropped rows keep paying
+    * probe-side verify work. The old store stays probe-able until the
+    * caller retires it (blue/green). */
   def compact(spark: SparkSession, kind: StoreKind, rawPath: String,
               outPath: String, keepIds: DataFrame): Unit = {
     val path = resolveStoreDir(spark, rawPath)
     val l = layout(spark, kind, path)
     val keeps = keepSet(keepIds)
-    try writeStore(kind, read(spark, kind, path).join(keeps, "id"), outPath, l,
-      bandedFromInput = true)
+    try rebuild(spark, kind, path, outPath, l, Some(keeps))
     finally keeps.unpersist()
   }
 
   /** Re-band / re-bucket the store at `rawPath` into `outPath` from its
     * STORED signatures — no text or embedding rescan; band width and
-    * bucket counts both track corpus size. Blue/green like [[compact]]. */
+    * bucket counts both track corpus size. The side table is carried
+    * along. Blue/green like [[compact]]. */
   def reband(spark: SparkSession, kind: StoreKind, rawPath: String,
              outPath: String, width: Int, bandBuckets: Int,
              idBuckets: Int): Unit =
-    writeStore(kind, read(spark, kind, rawPath), outPath,
-      Layout(width, bandBuckets, idBuckets), bandedFromInput = true)
+    rebuild(spark, kind, resolveStoreDir(spark, rawPath), outPath,
+      Layout(width, bandBuckets, idBuckets), keeps = None)
+
+  /** Write the store directory `to` from the store directory `from`'s
+    * payload, restricted to `keeps` and laid out at `l`, together with
+    * the kind's side table when `from` has one (returned). The two touch
+    * disjoint tables and run side by side. */
+  private def rebuild(spark: SparkSession, kind: StoreKind, from: String,
+                      to: String, l: Layout,
+                      keeps: Option[DataFrame]): Option[SideTable] = {
+    val base = read(spark, kind, from)
+    val side = kind.side.filter(_.exists(spark, from))
+    inParallel(
+      writeStore(kind, keeps.fold(base)(k => base.join(k, "id")), to, l,
+        bandedFromInput = true),
+      side.foreach(_.rebuild(spark, from, to, keeps)))
+    side
+  }
 
   // ---------------------------------------------------- managed roots
 
@@ -865,14 +1068,7 @@ object IndexStore {
     val snapshot = phase("build")(keep.map(_ =>
       payloadTable(spark, kind, blue).select("id").localCheckpoint()))
     try {
-      val base = read(spark, kind, blue)
-      val side = kind.side.filter(_.exists(spark, blue))
-      // green's payload/banded build and its side table touch disjoint
-      // tables — side by side
-      phase("build")(inParallel(
-        writeStore(kind, keeps.fold(base)(k => base.join(k, "id")), green, l,
-          bandedFromInput = true),
-        side.foreach(_.rebuild(spark, blue, green, keeps))))
+      val side = phase("build")(rebuild(spark, kind, blue, green, l, keeps))
       // lazy: both inputs are checkpointed id frames, so the anti-join
       // re-derives cheaply inside each catch-up plan
       val dropped = keeps.map(k => snapshot.get.join(k, Seq("id"), "left_anti"))

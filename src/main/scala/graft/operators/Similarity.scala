@@ -796,11 +796,11 @@ object Similarity {
         VectorFns.norm(col("e_d")).as("n"))
 
   /** The packed-long band-bucket projection `(id, key)` of a
-    * [[signatureFrame]] — `key = (band+1)·2^w + bits` — shared by the
-    * self-join pair path and the incremental probe path so both sides
-    * of a delta run band IDENTICALLY by construction.
+    * [[signatureFrame]] — `key = (band+1)·2^w + bits` — for the
+    * self-join pair path; [[bandKeyStructs]], the store kind's keys,
+    * derives from the same [[packedKeys]], so both band IDENTICALLY.
     */
-  private[operators] def packedBandKeys(sigF: DataFrame, rows: Int): DataFrame =
+  private def packedBandKeys(sigF: DataFrame, rows: Int): DataFrame =
     sigF.select(col("id"), explode(packedKeys(col("sig"), rows)).as("key"))
 
   /** The packed band keys of one signature, `array<bigint>` — the one
@@ -831,23 +831,6 @@ object Similarity {
       k => struct(k.as("key")))
   }
 
-  /** [[packedBandKeys]] plus every 1-plane-flipped neighbor key — the
-    * ONE-SIDED multi-probe projection for the incremental cross leg:
-    * the standing index carries only exact keys, so the BATCH side must
-    * probe all `w` single-flip neighbors of each band (both 0→1 and
-    * 1→0 — unlike the self-join path's zeros-only trick, there is no
-    * other side to meet halfway), and a batch/index pair differing in
-    * ≤ 1 plane of some band meets on an exact index key. `w+1` keys per
-    * (vector, band), batch-side only — the index side never widens.
-    */
-  private[operators] def packedBandProbeKeys(sigF: DataFrame, rows: Int): DataFrame =
-    // TWO projections (optimization round 21, guide §1.2 order-of-work):
-    // fold each band's exact key ONCE into a scalar column, then derive
-    // the w flip keys from it — a lambda that captured the fold would
-    // re-evaluate it per element (the interpreted-HOF O(w²) gotcha)
-    packedBandKeys(sigF, rows)
-      .select(col("id"), explode(withFlips(col("key"), rows)).as("key"))
-
   /** The exact-cosine verify of candidate pairs (the
     * [[IndexStore.Semantic]] kind's `verify`): `pairs` carries the
     * incoming side's `e_d_i`/`n_i` and the standing side's `e_d_c`/`n_c`;
@@ -872,16 +855,15 @@ object Similarity {
     * such corpus id), `dup_in_batch` (no corpus match but a smaller-id
     * batch vector is threshold-similar), `new`.
     *
-    * Per batch the cost is the batch-side signature pass plus
+    * The probe is [[IndexStore.deltaProbe]] over the semantic kind. Per
+    * batch the cost is the batch-side signature pass plus
     * O(batch × bands) broadcast probe keys against streaming narrow
-    * scans of the index (banding from the stored signatures +
-    * candidate-id fetch; the index is never shuffled, sorted, or
-    * broadcast — never an O(index) exchange), plus the within-batch
-    * [[lshNearDupPairsFromSig]] leg — never a corpus×corpus term or an
-    * embedding re-scan (plan-guarded in PlanSpec). Every candidate is
-    * exact-cosine verified against the stored widened vectors, so
-    * decisions are exact wherever banding recalls the pair — identical
-    * to the batch family's guarantee at the same `rowsPerBand`;
+    * scans of the index (never an O(index) exchange), plus the
+    * within-batch [[lshNearDupPairsFromSig]] leg — never a corpus×corpus
+    * term or an embedding re-scan (plan-guarded in PlanSpec). Every
+    * candidate is exact-cosine verified against the stored widened
+    * vectors, so decisions are exact wherever banding recalls the pair —
+    * identical to the batch family's guarantee at the same `rowsPerBand`;
     * multi-band duplicate candidates collapse AFTER the verify inside
     * the min() keeper aggregates (the post-verify-dedup lesson).
     */
@@ -897,267 +879,9 @@ object Similarity {
     // batch signatures are MATERIALIZED once — which is also the
     // deployment shape: an incremental run writes the batch's signature
     // rows anyway, because the admitted `new` rows append to the index
-    deltaSemNearDupFromIndex(index, incoming.select(col(idCol)),
+    IndexStore.deltaProbe(IndexStore.Semantic, index, incoming.select(col(idCol)),
       signatureFrame(incoming, idCol, embCol).localCheckpoint(),
       idCol, threshold, rowsPerBand, flips, hotBucketDrop)
-
-  /** [[deltaSemNearDup]] with the probe configuration AUTO-resolved
-    * from the standing index itself — the deployment default that keeps
-    * the width-tracks-corpus-size rule without a caller-side knob, now
-    * RECALL-GOVERNED exactly like the batch composite
-    * [[nearDupPairsAuto]] (the round-17 `weak`: the first cut widened
-    * with index growth but carried neither the recall cap nor the
-    * multi-probe repair, so banding recall silently degraded precisely
-    * where the volume knob engaged — 0.738 at 12 unprobed bits on the
-    * corpus that forced the cap into the batch family). The resolved
-    * width is `min(biasAwareRowsPerBand, recallCapRowsPerBand)` and the
-    * 1-flip probe leg engages past the 8-bit floor (or AT the floor
-    * when the plain curve misses `recallTarget`) — see
-    * [[recommendedSemDeltaProbe]], which is this decision exposed for
-    * AMORTIZATION: it costs one index count + the 128-plane agreement
-    * aggregate (two O(index) jobs), a price that only changes as the
-    * corpus grows decades, so a pipeline resolves it at maintenance
-    * time, persists it next to the frame, and calls [[deltaSemNearDup]]
-    * with the stored `(rowsPerBand, flips)` per batch instead of paying
-    * the aggregates per probe (VERDICT r17 #7). The wrapper itself now
-    * MEMOIZES the decision per standing frame (r18 #6 — see
-    * [[semProbeDecisionCached]]), so repeated probes against one frame
-    * pay the aggregates once even without the explicit split.
-    */
-  def deltaSemNearDupAuto(index: DataFrame, incoming: DataFrame,
-                          idCol: String, embCol: String,
-                          threshold: Double,
-                          recallTarget: Double = 0.9,
-                          maxCandidatesPerVector: Double =
-                            SemProbeMaxCandidatesPerVector): DataFrame = {
-    val d = semProbeDecisionCached(index, threshold, recallTarget,
-      maxCandidatesPerVector)
-    deltaSemNearDup(index, incoming, idCol, embCol, threshold,
-      d.rowsPerBand, d.flips)
-  }
-
-  /** JVM-side memo of [[recommendedSemDeltaProbe]] decisions (VERDICT
-    * r18 #6): the deployment-default wrapper otherwise re-pays the
-    * decision's two O(index) jobs on EVERY probe batch. Keyed by the
-    * index's CANONICALIZED logical plan (+ the decision inputs), so a
-    * maintenance event that produces a new standing frame — a
-    * checkpoint of the grown index after appends, a reband — yields a
-    * new key and re-resolution happens exactly when the decision could
-    * change; repeated probes against the SAME frame (the steady-state
-    * batch loop) reuse the stored pair with zero Spark jobs.
-    * Plan-identity caveat: two reads of the same parquet path
-    * canonicalize equal, so a caller that re-reads a path it appended
-    * to IN THE SAME JVM keeps the pre-append decision until the frame
-    * object changes — within tolerance, since the width moves on
-    * decade-scale growth (and the store path re-resolves from `meta/`
-    * anyway). Keys are the plan's `semanticHash` DIGEST, not the plan
-    * object (round-19 review: a LogicalRDD key strongly pins the
-    * retired frame's checkpointed corpus-scale blocks until the memo
-    * clears — the digest holds three numbers; a 32-bit collision's
-    * worst case is reusing a neighbor frame's still-valid width, not a
-    * wrong answer). Bounded: cleared past [[SemProbeMemoMax]] entries.
-    * The resolve runs OUTSIDE the map lock (two O(index) Spark jobs
-    * inside `computeIfAbsent` would stall concurrent resolvers on the
-    * bin); a racing duplicate resolve is benign — both compute the
-    * same pair. [[semProbeResolves]] counts true resolutions (test
-    * hook).
-    */
-  private final case class SemProbeMemoEntry(
-      plan: java.lang.ref.WeakReference[
-        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan],
-      decision: SemProbeDecision)
-  private val semProbeMemo = new java.util.concurrent.ConcurrentHashMap[
-    (Int, Double, Double, Double), SemProbeMemoEntry]()
-  private val SemProbeMemoMax = 256
-  private[graft] val semProbeResolves =
-    new java.util.concurrent.atomic.AtomicLong(0L)
-
-  private[graft] def semProbeDecisionCached(
-      index: DataFrame, threshold: Double, recallTarget: Double,
-      maxCandidatesPerVector: Double =
-        SemProbeMaxCandidatesPerVector): SemProbeDecision = {
-    val analyzed = index.queryExecution.analyzed
-    val key = (analyzed.semanticHash(), threshold, recallTarget,
-      maxCandidatesPerVector)
-    val hit = semProbeMemo.get(key)
-    // a 32-bit semanticHash collision between two DIFFERENT standing
-    // frames would silently return the other frame's decision (a width
-    // resolved for a small corpus can undershoot the recall target on a
-    // large one — round-19 ADVICE), so a hit must CONFIRM plan identity
-    // via sameResult against the stored plan. The plan is held through
-    // a WeakReference — a strong reference would pin a retired
-    // checkpointed frame's corpus-scale blocks (the r19 LogicalRDD-key
-    // lesson); a cleared referent degrades to a re-resolve, never to a
-    // wrong answer.
-    if (hit != null &&
-        Option(hit.plan.get()).exists(_.sameResult(analyzed)))
-      hit.decision
-    else {
-      semProbeResolves.incrementAndGet()
-      val dec = recommendedSemDeltaProbeBudgeted(index, threshold,
-        recallTarget, maxCandidatesPerVector)
-      if (semProbeMemo.size > SemProbeMemoMax) semProbeMemo.clear()
-      semProbeMemo.put(key, SemProbeMemoEntry(
-        new java.lang.ref.WeakReference(analyzed.canonicalized), dec))
-      dec
-    }
-  }
-
-  /** The incremental probe's `(rowsPerBand, flips)` decision, closed
-    * over a standing [[signatureFrame]] — [[nearDupPairsAuto]]'s two
-    * auto knobs applied to the delta family: band width =
-    * `min(volume width from biasAwareRowsPerBand, recall width from
-    * recallCapRowsPerBand)`, and the 1-flip probe engages whenever the
-    * plain banding curve at the resolved width misses `recallTarget`.
-    * Exposed as the separable decision so its two O(index) aggregates
-    * amortize across probes: resolve on maintenance (append/reband
-    * cycles — the [[recommendedRowsPerBand]] convention), store the
-    * pair, probe with [[deltaSemNearDup]] at the stored configuration.
-    */
-  def recommendedSemDeltaProbe(index: DataFrame, threshold: Double,
-                               recallTarget: Double = 0.9): (Int, Int) = {
-    val d = recommendedSemDeltaProbeBudgeted(index, threshold, recallTarget,
-      maxCandidatesPerVector = Double.PositiveInfinity)
-    (d.rowsPerBand, d.flips)
-  }
-
-  /** A resolved incremental-probe configuration with its predicted
-    * recall/cost book-keeping — what [[recommendedSemDeltaProbeBudgeted]]
-    * returns so a degraded decision is EXPLICIT, never silent:
-    * `recallShortfall > 0` means the cost budget forced the width past
-    * the requested recall target (`predictedRecall` is the banding-curve
-    * prediction for a pair AT the threshold cosine — pairs above it do
-    * better); `expectedCandidatesPerVector` is the census-estimated
-    * probe-leg fanout the budget bounded. A pipeline alerts on the
-    * shortfall (or re-runs at a raised budget) instead of discovering a
-    * 37× probe bill in production.
-    */
-  final case class SemProbeDecision(rowsPerBand: Int, flips: Int,
-                                    predictedRecall: Double,
-                                    recallShortfall: Double,
-                                    expectedCandidatesPerVector: Double,
-                                    degraded: Boolean)
-
-  /** Default probe-volume budget: expected probe-leg candidates per
-    * batch vector. 32768 sits between the two PROBES_r19 `sem100b`
-    * measurements that motivated the budget (round-19 verdict #1): at a
-    * 200k-row ×100 index the θ=0.8 governed (12, 1-flip) decision
-    * estimates ~6.3k candidates/vector and measured a healthy 2.1×
-    * plain cost (4.3 s vs 2.1 s — the config whose 1-flip repair holds
-    * 0.983 borderline recall), while the θ=0.4 (8, 1-flip) decision
-    * estimates ~113k/vector and measured the 37× cliff (107 s vs
-    * 2.9 s). Candidate volume, not a plain-cost ratio, is the right
-    * unit: wall-clock is fixed-cost-dominated until the verify leg
-    * explodes (the θ=0.8 config is ~130× plain in ESTIMATED candidates
-    * yet only 2× in wall), and at a recall-pinned width the governed
-    * fanout grows LINEARLY with the index while the plain decision's
-    * occupancy stays flat — an absolute per-vector bound is what holds
-    * at 10⁹ rows.
-    */
-  val SemProbeMaxCandidatesPerVector: Double = 32768.0
-
-  /** Census-estimated probe-leg fanout: expected index rows landing in
-    * the same bucket as a batch vector, summed over bands and (under
-    * 1-flip probing) over each band's `w` single-flip neighbor keys —
-    * per-plane independence over the SAME measured agreement probs the
-    * volume width rule uses ([[planeAgreeProbsFromSig]]). Flipping
-    * plane `j` turns its agreement probability `a_j` into `1 − a_j`, so
-    * each flip key contributes the exact key's occupancy scaled by
-    * `(1−a_j)/a_j` (`a_j ≥ ½` always, so the scale is ≤ 1 — flip
-    * buckets are never hotter than exact ones in expectation).
-    * Independence UNDERestimates collisions when planes correlate, same
-    * caveat (and same direction) as [[biasAwareRowsPerBand]].
-    */
-  private[graft] def expectedProbeCandidatesPerVector(
-      n: Long, agree: IndexedSeq[Double], w: Int, flips: Int): Double = {
-    val bands = Bits / w
-    (0 until bands).map { b =>
-      val probs = (b * w until (b + 1) * w).map(agree)
-      val exact = n.toDouble * probs.product
-      exact + (if (flips >= 1)
-        probs.map(a => exact * (1.0 - a) / a).sum else 0.0)
-    }.sum
-  }
-
-  /** [[recommendedSemDeltaProbe]] with a COST CEILING (round-19 verdict
-    * #1 — the round's one `weak`): the recall-governed decision picks
-    * `(rowsPerBand, flips)` from volume + recall alone, and at low
-    * thresholds the recall cap pins the width NARROW with the 1-flip
-    * probe engaged — measured 107 s vs 2.9 s plain (37×) at θ=0.4 on a
-    * ×100 index (PROBES_r19 `sem100b`), a silent deployment foot-gun
-    * that only worsens with index growth (the pinned width's fanout is
-    * linear in `n`). This variant bounds the census-estimated probe-leg
-    * fanout ([[expectedProbeCandidatesPerVector]] — computed from the
-    * same signature census the width decision already runs, zero extra
-    * Spark jobs) by `maxCandidatesPerVector` and degrades EXPLICITLY
-    * when the governed decision exceeds it: the recall target relaxes
-    * stepwise (0.05 steps, floor 0.5) until the resolved configuration
-    * fits, falling back to the plain volume-governed width
-    * (`biasAwareRowsPerBand`, no flips) if nothing does — and the
-    * returned [[SemProbeDecision]] carries the `recallShortfall` the
-    * degradation cost, so the trade is visible instead of silently
-    * paid. `maxCandidatesPerVector = ∞` reproduces
-    * [[recommendedSemDeltaProbe]] exactly.
-    */
-  def recommendedSemDeltaProbeBudgeted(
-      index: DataFrame, threshold: Double, recallTarget: Double = 0.9,
-      maxCandidatesPerVector: Double =
-        SemProbeMaxCandidatesPerVector): SemProbeDecision = {
-    val n = math.max(index.count(), 1L)
-    val agree = planeAgreeProbsFromSig(
-      index.select("id", "e_d", "sig", "n"), n)
-    decideSemProbe(n, agree, threshold, recallTarget,
-      maxCandidatesPerVector)
-  }
-
-  /** The pure decision core of [[recommendedSemDeltaProbeBudgeted]] —
-    * corpus size + measured plane-agreement census in, configuration
-    * out; separable so the budget logic is unit-testable without a
-    * Spark job and so a pipeline that persists its census can re-decide
-    * offline.
-    */
-  private[graft] def decideSemProbe(
-      n: Long, agree: IndexedSeq[Double], threshold: Double,
-      recallTarget: Double,
-      maxCandidatesPerVector: Double): SemProbeDecision = {
-    require(maxCandidatesPerVector > 0,
-      s"maxCandidatesPerVector must be positive, got $maxCandidatesPerVector")
-    val volumeW = biasAwareRowsPerBand(n, agree)
-    // the unbudgeted governed rule, parameterized by target — EXACTLY
-    // recommendedSemDeltaProbe's historical decision at `recallTarget`
-    def governedAt(target: Double): (Int, Int) = {
-      val w = math.min(volumeW, recallCapRowsPerBand(threshold, target))
-      if (w <= 8)
-        (8, if (bandingRecall(threshold, 8, flips = 0) >= target) 0 else 1)
-      else (w, 1)
-    }
-    def cost(d: (Int, Int)): Double =
-      expectedProbeCandidatesPerVector(n, agree, d._1, d._2)
-    def decision(d: (Int, Int), degraded: Boolean): SemProbeDecision = {
-      val rec = bandingRecall(threshold, d._1, d._2)
-      SemProbeDecision(d._1, d._2, rec,
-        math.max(0.0, recallTarget - rec), cost(d), degraded)
-    }
-    val governed = governedAt(recallTarget)
-    if (cost(governed) <= maxCandidatesPerVector)
-      decision(governed, degraded = false)
-    else {
-      // stepwise relaxation: each lowered target can only WIDEN the
-      // recall-cap width (or disengage the floor flip), monotonically
-      // shrinking the fanout; the first fit wins. Floor 0.5 — below
-      // coin-flip recall the governed machinery buys nothing over the
-      // plain decision, which is the terminal fallback.
-      val relaxed = Iterator.iterate(recallTarget - 0.05)(_ - 0.05)
-        .takeWhile(_ >= 0.5)
-        .map(governedAt)
-        .find(cost(_) <= maxCandidatesPerVector)
-      relaxed match {
-        case Some(d) => decision(d, degraded = true)
-        case None =>
-          decision((volumeW, 0), degraded = true)
-      }
-    }
-  }
 
   /** [[deltaSemNearDup]] from a pre-built incoming-batch
     * [[signatureFrame]] — the shared-frame entry point the semantic
@@ -1179,106 +903,12 @@ object Similarity {
                                rowsPerBand: Int, flips: Int = 0,
                                hotBucketDrop: Int = 0,
                                maxFetchBroadcastIds: Long =
-                                 Dedup.MaxFetchBroadcastIds,
+                                 IndexStore.MaxFetchBroadcastIds,
                                knownCandCount: Option[Long] = None)
-      : DataFrame = {
-    require(idCol != "status" && idCol != "dup_of",
-      s"idCol '$idCol' collides with an output column")
-    require(rowsPerBand >= 1 && rowsPerBand <= MaxRowsPerBand,
-      s"rowsPerBand must be in [1, $MaxRowsPerBand], got $rowsPerBand")
-    require(flips == 0 || flips == 1,
-      s"flips must be 0 (exact keys) or 1 (1-plane probes), got $flips")
-    require(Seq("id", "e_d", "sig", "n").forall(index.columns.contains),
-      s"index must be a signatureFrame (id, e_d, sig, n); got " +
-        index.columns.mkString(", "))
-    require(Seq("id", "e_d", "sig", "n").forall(
-        incomingIndex.columns.contains),
-      s"incomingIndex must be a signatureFrame (id, e_d, sig, n); got " +
-        incomingIndex.columns.mkString(", "))
-    val incIdx = incomingIndex
-    // with flips=1 the BATCH side probes every ≤1-flip neighbor key —
-    // the recall repair at recall-governed wide widths; the index side
-    // stays at exact keys (one-sided probing covers the pair set)
-    val incB = (if (flips >= 1) packedBandProbeKeys(incIdx, rowsPerBand)
-                else packedBandKeys(incIdx, rowsPerBand))
-      .withColumnRenamed("id", "id_i")
-    val corB0 = packedBandKeys(index, rowsPerBand)
-      .withColumnRenamed("id", "id_c")
-    // cross-leg hot-bucket relief valve (round-17 verdict #2): a
-    // template-hot STANDING bucket makes the candidate set
-    // O(hot-bucket) the moment one batch vector lands in it. When
-    // engaged, buckets whose INDEX-side occupancy exceeds the bound are
-    // dropped before candidates form — census only over the buckets the
-    // batch probes (a broadcast semi of the batch's keys, so the census
-    // job is candidate-scale, not index-scale), mirroring the
-    // within-batch dropOver contract: decisions identical whenever no
-    // bucket exceeds the bound.
-    val corB =
-      if (hotBucketDrop <= 0) corB0
-      else {
-        val hot = corB0
-          .join(broadcast(incB.select(col("key")).distinct()), "key")
-          .groupBy(col("key")).agg(count(lit(1)).as("__n"))
-          .filter(col("__n") > hotBucketDrop).select(col("key"))
-        corB0.join(broadcast(hot), Seq("key"), "left_anti")
-      }
-    // The INDEX side only ever STREAMS — never shuffles, sorts, or
-    // broadcasts (the lexical twin's round-17 lesson: the checkpointed
-    // frame's LogicalRDD size estimate is garbage-small, so the static
-    // planner broadcast the INDEX and a ×100-grown frame OOM'd; and a
-    // shuffle-hash of the index re-shuffles the whole widened-vector
-    // payload per batch — an O(index) exchange). Batch-derived frames
-    // broadcast by contract (batch ≪ index). The verify fetch is a
-    // SEMI-reduction of candidate IDS ONLY against the streamed frame:
-    // broadcast while the candidate count stays under
-    // [[Dedup.MaxFetchBroadcastIds]], else a shuffle-hash left-semi
-    // (the round-17 ADVICE: a corpus-scale candidate-id set still
-    // collects to the driver on its way into a broadcast — the
-    // fallback pays a bounded id-side exchange and a per-batch index
-    // exchange instead, degrading where the broadcast dies). ONLY
-    // candIds is materialized for that guard — one eager
-    // banding+distinct job with id-sized output; checkpointing the full
-    // candidate PAIR set (the r18 cut) measured 1.5× across the
-    // delta/store family in the round-19 same-session A/B, while the
-    // lazily re-run banding scan is one narrow index pass (the r17
-    // shape, measured flat to ×100). The fetched candidate payload
-    // then joins the pair stream via SHUFFLE_HASH, not a broadcast,
-    // for the same reason as the guard.
-    // id_i ≠ id_c: self-pairs excluded — inert normally (index and
-    // batch share no ids), load-bearing under foreachBatch replay
-    // against a store already holding the batch's rows (the lexical
-    // twin's CurationStream convergence contract)
-    val candPairs = broadcast(incB).join(corB, Seq("key"))
-      .filter(col("id_i") =!= col("id_c"))
-      .select("id_i", "id_c")
-    val candIdsPlan = candPairs.select(col("id_c")).distinct()
-    val fetched0 = index.select(col("id").as("id_c"), col("e_d").as("e_d_c"),
-      col("n").as("n_c"))
-    val fetched = Dedup.candidateFetch(fetched0, candIdsPlan, knownCandCount,
-      maxFetchBroadcastIds)
-    val corpusMatch = IndexStore.Semantic.verify(candPairs
-        .join(broadcast(incIdx.select(col("id").as("id_i"),
-          col("e_d").as("e_d_i"), col("n").as("n_i"))), "id_i")
-        .join(fetched.hint("shuffle_hash"), "id_c"), threshold)
-      .groupBy(col("id_i")).agg(min(col("id_c")).as("__graft_ck"))
-    // the within-batch leg engages the same probe repair: at flips=1
-    // its banding rule is the identical ≤1-flip set, so one oracle
-    // statement covers both legs of a graded delta query
-    val batchKeeper = (if (flips >= 1)
-        lshNearDupPairsMultiProbeFromSig(incIdx, threshold, rowsPerBand,
-          flips)
-      else lshNearDupPairsFromSig(incIdx, threshold, rowsPerBand))
-      .groupBy(col("id_b")).agg(min(col("id_a")).as("__graft_bk"))
-    incomingIds.select(col(idCol))
-      .join(corpusMatch.withColumnRenamed("id_i", idCol), Seq(idCol), "left")
-      .join(batchKeeper.withColumnRenamed("id_b", idCol), Seq(idCol), "left")
-      .select(col(idCol),
-        when(col("__graft_ck").isNotNull, lit("dup_of_corpus"))
-          .when(col("__graft_bk").isNotNull, lit("dup_in_batch"))
-          .otherwise(lit("new")).as("status"),
-        when(col("__graft_ck").isNotNull, col("__graft_ck"))
-          .otherwise(col("__graft_bk")).as("dup_of"))
-  }
+      : DataFrame =
+    IndexStore.deltaProbe(IndexStore.Semantic, index, incomingIds, incomingIndex,
+      idCol, threshold, rowsPerBand, flips, hotBucketDrop,
+      maxFetchBroadcastIds = maxFetchBroadcastIds, knownCandCount = knownCandCount)
 
   // ------------------------------------ persisted signature-frame store
 
@@ -1319,37 +949,18 @@ object Similarity {
     * just widen the probed bucket set; nothing store-sided changes,
     * since candidates still meet on the index's exact keys). The flip
     * decision is the caller's PROBE POLICY, pinned explicitly because it
-    * is part of a graded query's candidate contract
-    * ([[recommendedSemDeltaProbe]] derives one from recall). A delta
-    * takes the path [[IndexStore.probe]] picks, with
-    * [[deltaSemNearDupFromStorePruned]] as its scale path; decisions are
-    * identical to [[deltaSemNearDupFromIndex]] over the full frame at
-    * that `(width, flips)` either way.
+    * is part of a graded query's candidate contract. A delta takes the
+    * path [[IndexStore.probe]] picks; decisions are identical to
+    * [[deltaSemNearDupFromIndex]] over the full frame at that
+    * `(width, flips)` either way.
     */
   def deltaSemNearDupFromStore(spark: SparkSession, rawPath: String,
                                incomingIds: DataFrame,
                                incomingIndex: DataFrame, idCol: String,
                                threshold: Double,
-                               flips: Int = 0): DataFrame = {
-    require(flips == 0 || flips == 1,
-      s"flips must be 0 (exact keys) or 1 (1-plane probes), got $flips")
+                               flips: Int = 0): DataFrame =
     IndexStore.probe(spark, IndexStore.Semantic, rawPath, incomingIds,
-        incomingIndex, idCol, threshold, flips)(
-      deltaSemNearDupFromStorePruned(spark, rawPath, incomingIds,
-        incomingIndex, idCol, threshold, flips)).decisions
-  }
-
-  /** The scale path of [[deltaSemNearDupFromStore]] and the reference
-    * the small-delta path is tested against: the bucket-pruned
-    * [[IndexStore.fetchCandidates]] fetch, then the probe core. */
-  private[graft] def deltaSemNearDupFromStorePruned(spark: SparkSession,
-      rawPath: String, incomingIds: DataFrame, incomingIndex: DataFrame,
-      idCol: String, threshold: Double, flips: Int = 0): DataFrame = {
-    val (pruned, candCount, layout) = IndexStore.fetchCandidates(spark,
-      IndexStore.Semantic, rawPath, incomingIndex, flips)
-    deltaSemNearDupFromIndex(pruned, incomingIds, incomingIndex, idCol,
-      threshold, layout.width, flips, knownCandCount = Some(candCount))
-  }
+      incomingIndex, idCol, threshold, flips).decisions
 
   /** The recorded banding width of a persisted signature store — the
     * width [[readSignatureStore]]-then-[[deltaSemNearDupFromIndex]]
@@ -1367,22 +978,6 @@ object Similarity {
     */
   def readSignatureStore(spark: SparkSession, rawPath: String): DataFrame =
     IndexStore.read(spark, IndexStore.Semantic, rawPath)
-
-  /** The maintenance DECIDER for a persisted signature store: the
-    * bias-aware band width the store SHOULD be at for its CURRENT row
-    * count and plane-agreement bias — [[biasAwareRowsPerBand]] finally
-    * applied to a STANDING index (the r16 note), computed entirely from
-    * the stored signatures (one count + the agreement aggregate; no
-    * embedding read). A pipeline compares this against the store's
-    * recorded width after appends and calls [[IndexStore.reband]]
-    * when they diverge — the width-tracks-corpus-size rule as a closed
-    * measure→decide→reband loop.
-    */
-  def recommendedRowsPerBand(spark: SparkSession, rawPath: String): Int = {
-    val sigF = readSignatureStore(spark, rawPath)
-    val rows = math.max(sigF.count(), 1L)
-    biasAwareRowsPerBand(rows, planeAgreeProbsFromSig(sigF, rows))
-  }
 
   /** Create a managed [[IndexStore.Semantic]] root
     * ([[IndexStore.initManaged]]). */

@@ -151,9 +151,9 @@ object CurationJob {
     * stable against the store growth it itself caused. A pipeline
     * bootstraps the store once from its existing
     * corpus via [[graft.operators.IndexStore.write]] (the
-    * q183-graded write path) and periodically runs the
-    * `recommendedRowsPerBand`-style reband/compaction maintenance
-    * (q187-graded).
+    * q183-graded write path) and periodically runs the reband /
+    * compaction maintenance ([[graft.operators.IndexStore.reband]],
+    * [[graft.operators.IndexStore.compact]]; q187-graded).
     *
     * PINNED CONTRACT — shingle-less survivors (r18 verdict #1's edge):
     * a quality-surviving doc with fewer than `n` tokens has no
@@ -175,16 +175,9 @@ object CurationJob {
     * near-dup admit, and their decisions replace the fall-through
     * `new`s in the output. Shingle-BEARING docs never touch the exact
     * leg (identical long texts have J = 1.0 — the Jaccard store
-    * already catches them), so the merge is a disjoint union. NOTE:
-    * the `exact/` table has its own lifecycle under the PLAIN offline
-    * helpers — [[graft.operators.IndexStore.compact]] /
-    * [[graft.operators.IndexStore.reband]] rebuild from `payload/` and
-    * do not carry it; compact it by rewriting
-    * ([[graft.operators.Dedup.writeFingerprintStore]] over the
-    * surviving keys) when retention applies. The MANAGED maintenance
-    * path ([[graft.operators.IndexStore.maintainManaged]]) carries it
-    * into the green version as the lexical kind's side table,
-    * retention cut and catch-up included.
+    * already catches them), so the merge is a disjoint union. Every
+    * store rewrite (compaction, reband, managed maintenance) carries
+    * `exact/` along as the lexical kind's side table.
     */
   def incrementalStep(spark: SparkSession, storePath: String,
                       batch: DataFrame, benchmark: DataFrame,
@@ -232,7 +225,7 @@ object CurationJob {
         col("__graft_hs").as("hs"), col("__graft_sig").as("sig"))
     // a small delta takes the shuffle-free probe, whose decisions and
     // admitted rows come back as local frames (IndexStore.probe)
-    val probe = Dedup.nearDupStoreProbe(spark, storePath,
+    val probe = IndexStore.probe(spark, IndexStore.Lexical, storePath,
       kept.select(col(idCol)), idx, idCol, threshold)
     val decNear = probe.decisions
     // the exact-leg decisions (shortDocExact) are computed here but the

@@ -497,6 +497,44 @@ class PipelineJobSpec extends SparkSpec {
       "a replayed batch must not grow the side table")
   }
 
+  test("incrementalStep shortDocExact on a compacted or rebanded store: exact/ is carried along") {
+    import graft.operators.Dedup
+    val base = Seq((1L,
+      "alpha beta gamma delta epsilon zeta eta theta iota kappa"))
+      .toDF("doc_id", "text")
+    val bench = Seq((0L,
+      "completely unrelated benchmark prose sharing nothing with anyone"))
+      .toDF("doc_id", "text")
+    val store = freshStore(Dedup.nearDupIndex(base, "doc_id", "text", n = 3))
+    Dedup.writeFingerprintStore(spark, store,
+      Seq((5L, "standing short")).toDF("doc_id", "text")
+        .select(col("doc_id").as("id"),
+          graft.functions.TextFns.fingerprint(col("text")).as("fp")))
+    def rewritten(prefix: String)(f: String => Unit) = {
+      val p = Files.createTempDirectory(prefix).toString
+      f(p)
+      p
+    }
+    val compacted = rewritten("graft_incstep_cp")(p =>
+      IndexStore.compact(spark, IndexStore.Lexical, store, p, Seq(1L, 5L).toDF("id")))
+    val rebanded = rewritten("graft_incstep_rb")(p =>
+      IndexStore.reband(spark, IndexStore.Lexical, store, p, width = 16,
+        bandBuckets = 8, idBuckets = 8))
+    // a retention cut that drops the short doc drops its fingerprint too
+    val cut = rewritten("graft_incstep_cut")(p =>
+      IndexStore.compact(spark, IndexStore.Lexical, store, p, Seq(1L).toDF("id")))
+    def step(path: String) =
+      CurationJob.incrementalStep(spark, path,
+          Seq((101L, "Standing SHORT")).toDF("doc_id", "text"), bench,
+          rules = Seq.empty[(String, org.apache.spark.sql.Column)],
+          shortDocExact = true)
+        .select("doc_id", "status", "dup_of")
+        .as[(Long, String, Option[Long])].collect().toSeq
+    for (path <- Seq(compacted, rebanded))
+      assert(step(path) == Seq((101L, "dup_of_corpus", Some(5L))), s"$path: got ${step(path)}")
+    assert(step(cut) == Seq((101L, "new", None)), s"got ${step(cut)}")
+  }
+
   test("idempotent store append repairs a payload-committed/banded-lost crash window") {
     import graft.operators.Dedup
     // the plain append commits payload/ and banded/ as two separate

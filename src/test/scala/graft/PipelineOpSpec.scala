@@ -380,168 +380,6 @@ class PipelineOpSpec extends SparkSpec {
       idx1.count())
   }
 
-  test("recommendedRowsPerBand: the standing-store decider widens with growth") {
-    import java.nio.file.Files
-    import graft.operators.Similarity
-    val emb = graft.sources.Tables.embeddings(spark, sf)
-      .filter($"embedding".isNotNull).select("vec_id", "embedding")
-    val path = Files.createTempDirectory("graft_semstore_dec").toString
-    IndexStore.write(IndexStore.Semantic,
-      Similarity.signatureFrame(emb, "vec_id", "embedding"),
-      path, width = 8, bandBuckets = 16, idBuckets = 16)
-    val r1 = Similarity.recommendedRowsPerBand(spark, path)
-    // grow the store ×10 with dimension-rolled replicas (the ScaleProbe
-    // convention: a pure permutation keeps geometry, remapped ids) —
-    // the occupancy floor alone must move the recommendation up
-    val embDim = 64
-    val rolled = emb
-      .select(col("*"), explode(sequence(lit(1), lit(9))).as("copy"))
-      .select((col("vec_id") * 10 + col("copy")).as("vec_id"),
-        transform(sequence(lit(0), lit(embDim - 1)), i =>
-          element_at(col("embedding"),
-            (pmod(i + col("copy"), lit(embDim)) + 1).cast("int")))
-          .as("embedding"))
-    Similarity.appendSignatureStore(spark, path,
-      Similarity.signatureFrame(rolled, "vec_id", "embedding"))
-    val rK = Similarity.recommendedRowsPerBand(spark, path)
-    assert(r1 >= 8 && rK > r1,
-      s"recommendation must widen with a x10-grown store: $r1 -> $rK")
-    // closing the loop: reband to the recommendation — the store's
-    // recorded width follows the decider with no embedding rescan
-    val path2 = Files.createTempDirectory("graft_semstore_dec2").toString
-    IndexStore.reband(spark, IndexStore.Semantic, path, path2, rK, 16, 16)
-    val probe = emb.limit(3)
-      .select(($"vec_id" + 900000L).as("vec_id"), $"embedding")
-    val got = Similarity.deltaSemNearDupFromStore(spark, path2,
-      probe.select("vec_id"),
-      Similarity.signatureFrame(probe, "vec_id", "embedding")
-        .localCheckpoint(),
-      "vec_id", threshold = 0.4)
-    assert(got.count() == 3) // every probe vector gets a decision
-  }
-
-  test("deltaSemNearDupAuto: recall-governed width+flips from the index") {
-    import graft.operators.Similarity
-    val emb = graft.sources.Tables.embeddings(spark, sf)
-      .filter($"embedding".isNotNull)
-    val corpus = emb.filter($"vec_id" % 5 =!= 4)
-    val batch = emb.filter($"vec_id" % 5 === 4)
-    val idx = Similarity.signatureFrame(corpus, "vec_id", "embedding")
-      .localCheckpoint()
-    // the auto wrapper must equal the explicit call at the SEPARABLE
-    // decision (r17 #7: resolve once at maintenance, probe at the
-    // stored configuration) — and at θ=0.4 the plain 8-bit curve
-    // (0.33) misses the 0.9 target, so the decision must carry the
-    // 1-flip probe repair (the r17 `weak`: volume knob without the
-    // recall governance)
-    val (w, flips) = Similarity.recommendedSemDeltaProbe(idx,
-      threshold = 0.4)
-    assert(w >= 8 && flips == 1, s"got ($w, $flips)")
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getString(1),
-        if (r.isNullAt(2)) -1L else r.getLong(2))).sorted.toSeq
-    val auto = canon(Similarity.deltaSemNearDupAuto(idx, batch,
-      "vec_id", "embedding", threshold = 0.4))
-    val explicit = canon(Similarity.deltaSemNearDup(idx, batch,
-      "vec_id", "embedding", threshold = 0.4, rowsPerBand = w,
-      flips = flips))
-    assert(auto.nonEmpty && auto == explicit)
-    // the probe leg only ever ADDS candidates (every emitted decision
-    // stays exact-verified): flagged set ⊇ the unprobed run's
-    val plain = canon(Similarity.deltaSemNearDup(idx, batch,
-      "vec_id", "embedding", threshold = 0.4, rowsPerBand = w))
-    val dupOf = auto.filter(_._2 != "new").map(_._1).toSet
-    val dupOfPlain = plain.filter(_._2 != "new").map(_._1).toSet
-    assert(dupOfPlain.subsetOf(dupOf),
-      s"1-flip probing lost decisions: ${dupOfPlain -- dupOf}")
-    // r18 #6: the wrapper MEMOIZES the decision per standing frame —
-    // the auto call above already resolved (idx, 0.4, 0.9), so further
-    // lookups against the same frame must not re-run the two O(index)
-    // decision jobs, while a different frame must re-resolve
-    val r0 = Similarity.semProbeResolves.get()
-    val cached = Similarity.semProbeDecisionCached(idx, 0.4, 0.9)
-    assert((cached.rowsPerBand, cached.flips) == (w, flips))
-    val auto2 = canon(Similarity.deltaSemNearDupAuto(idx, batch,
-      "vec_id", "embedding", threshold = 0.4))
-    assert(auto2 == auto)
-    assert(Similarity.semProbeResolves.get() == r0,
-      "repeated probes against one frame must reuse the memoized decision")
-    val idx2 = Similarity.signatureFrame(corpus.limit(40),
-      "vec_id", "embedding").localCheckpoint()
-    Similarity.semProbeDecisionCached(idx2, 0.4, 0.9)
-    assert(Similarity.semProbeResolves.get() == r0 + 1,
-      "a new standing frame must re-resolve the decision")
-    idx2.unpersist()
-  }
-
-  test("decideSemProbe: probe-volume budget degrades explicitly (r19 #1)") {
-    import graft.operators.Similarity
-    // the sem100b shape, unit-level: unbiased planes (agree = 1/2 per
-    // plane — the sign-flip corpus decorrelates cross-copy cosines), a
-    // 200k-row ×100 index, default 32768-candidate budget
-    val agree = IndexedSeq.fill(128)(0.5)
-    val n = 200000L
-    // θ=0.8: the governed (12, 1-flip) decision — the config whose
-    // 1-flip repair holds 0.983 borderline recall — estimates ~6.3k
-    // candidates/vector and must SURVIVE the default budget
-    val hi = Similarity.decideSemProbe(n, agree, 0.8, 0.9,
-      Similarity.SemProbeMaxCandidatesPerVector)
-    assert((hi.rowsPerBand, hi.flips) == (12, 1), s"got $hi")
-    assert(!hi.degraded && hi.recallShortfall == 0.0)
-    assert(hi.expectedCandidatesPerVector <=
-      Similarity.SemProbeMaxCandidatesPerVector)
-    // θ=0.4: the governed (8, 1-flip) decision estimates ~113k
-    // candidates/vector (the measured 107 s vs 2.9 s cliff) — the
-    // budget must relax the recall target stepwise until the fanout
-    // fits, and the shortfall must be REPORTED, not silent
-    val lo = Similarity.decideSemProbe(n, agree, 0.4, 0.9,
-      Similarity.SemProbeMaxCandidatesPerVector)
-    assert(lo.degraded, s"expected a degraded decision, got $lo")
-    assert(lo.expectedCandidatesPerVector <=
-      Similarity.SemProbeMaxCandidatesPerVector,
-      s"budget not honored: $lo")
-    assert(lo.rowsPerBand > 8,
-      s"relaxation must widen past the recall-pinned 8 bits: $lo")
-    assert(lo.recallShortfall > 0.0 &&
-      math.abs(lo.recallShortfall - (0.9 - lo.predictedRecall)) < 1e-12)
-    // infinite budget reproduces the historical governed decision
-    val unb = Similarity.decideSemProbe(n, agree, 0.4, 0.9,
-      Double.PositiveInfinity)
-    assert((unb.rowsPerBand, unb.flips) == (8, 1) && !unb.degraded)
-    // a budget below even the plain decision's fanout: terminal
-    // fallback is the volume-governed width with no flips — bounded
-    // and explicit, never an error
-    val floor = Similarity.decideSemProbe(n, agree, 0.4, 0.9, 1.0)
-    assert(floor.degraded && floor.flips == 0, s"got $floor")
-  }
-
-  test("deltaSemNearDupAuto: budgeted auto ≡ explicit at the decision") {
-    import graft.operators.Similarity
-    val emb = graft.sources.Tables.embeddings(spark, sf)
-      .filter($"embedding".isNotNull)
-    val corpus = emb.filter($"vec_id" % 5 =!= 4)
-    val batch = emb.filter($"vec_id" % 5 === 4).limit(20)
-    val idx = Similarity.signatureFrame(corpus, "vec_id", "embedding")
-      .localCheckpoint()
-    // a 1-candidate budget forces the terminal plain fallback even on
-    // the small test corpus; the auto wrapper must run EXACTLY the
-    // explicit probe at the degraded configuration
-    val d = Similarity.recommendedSemDeltaProbeBudgeted(idx,
-      threshold = 0.4, recallTarget = 0.9, maxCandidatesPerVector = 1.0)
-    assert(d.degraded && d.flips == 0)
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getString(1),
-        if (r.isNullAt(2)) -1L else r.getLong(2))).sorted.toSeq
-    val auto = canon(Similarity.deltaSemNearDupAuto(idx, batch,
-      "vec_id", "embedding", threshold = 0.4,
-      maxCandidatesPerVector = 1.0))
-    val explicit = canon(Similarity.deltaSemNearDup(idx, batch,
-      "vec_id", "embedding", threshold = 0.4,
-      rowsPerBand = d.rowsPerBand, flips = d.flips))
-    assert(auto.nonEmpty && auto == explicit)
-    idx.unpersist()
-  }
-
   test("delta cross leg: hot-standing-bucket drop + fetch fallback (lexical)") {
     // a template-hot STANDING index: 20 corpus docs share one text →
     // one signature → every band is a 20-deep bucket; the moment a
@@ -556,7 +394,7 @@ class PipelineOpSpec extends SparkSpec {
       .toDF("id", "t")
     val idx = Dedup.nearDupIndex(corpus, "id", "t", n = 3).localCheckpoint()
     val idxB = Dedup.nearDupIndex(batch, "id", "t", n = 3).localCheckpoint()
-    def run(drop: Int = 0, maxB: Long = Dedup.MaxFetchBroadcastIds) =
+    def run(drop: Int = 0, maxB: Long = IndexStore.MaxFetchBroadcastIds) =
       Dedup.deltaNearDupFromIndex(idx, batch.select($"id"), idxB, "id",
           threshold = 0.6, hotBucketDrop = drop,
           maxFetchBroadcastIds = maxB)
@@ -593,7 +431,7 @@ class PipelineOpSpec extends SparkSpec {
       .localCheckpoint()
     val idxB = Similarity.signatureFrame(batch, "vec_id", "embedding")
       .localCheckpoint()
-    def run(drop: Int = 0, maxB: Long = Dedup.MaxFetchBroadcastIds) =
+    def run(drop: Int = 0, maxB: Long = IndexStore.MaxFetchBroadcastIds) =
       Similarity.deltaSemNearDupFromIndex(idx, batch.select($"vec_id"),
           idxB, "vec_id", threshold = 0.5, rowsPerBand = 8,
           hotBucketDrop = drop, maxFetchBroadcastIds = maxB)

@@ -46,12 +46,8 @@ class StoreProbeSpec extends SparkSpec {
                               threshold: Double, flips: Int = 0): Seq[String] = {
     val small = IndexStore.smallDeltaProbe(spark, kind, path, ids, idx, idCol,
       threshold, flips).getOrElse(fail(s"${kind.name}: the small path declined"))
-    val reference =
-      if (kind == IndexStore.Lexical)
-        Dedup.deltaNearDupFromStorePruned(spark, path, ids, idx, idCol, threshold)
-      else
-        Similarity.deltaSemNearDupFromStorePruned(spark, path, ids, idx, idCol,
-          threshold, flips)
+    val reference = IndexStore.prunedProbe(spark, kind, path, ids, idx, idCol,
+      threshold, flips)
     def rows(df: DataFrame) = df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
     assert(small.decisions.schema == reference.schema, kind.name)
     val got = rows(small.decisions)
@@ -143,6 +139,29 @@ class StoreProbeSpec extends SparkSpec {
       semIndex(none), "vec_id", 0.4, flips = 1).isEmpty)
   }
 
+  test("the DataFrame probe core rejects bad inputs on both kinds") {
+    val lex = lexIndex(Seq((1L, "alpha beta gamma delta"), (2L, "alpha beta gamma epsilon"))
+      .toDF("doc_id", "text"))
+    val sem = semIndex(Seq((1L, Array.fill(64)(1.0f)), (2L, Array.tabulate(64)(_.toFloat)))
+      .toDF("vec_id", "embedding"))
+    for ((kind, frame, width, badWidth) <- Seq(
+        (IndexStore.Lexical, lex, 32, 5), (IndexStore.Semantic, sem, 8, 0))) {
+      def core(idCol: String = "doc_id", w: Int = width, flips: Int = 0,
+               index: DataFrame = frame, incoming: DataFrame = frame) =
+        IndexStore.deltaProbe(kind, index, frame.select($"id".as(idCol)), incoming,
+          idCol, 0.5, w, flips)
+      assert(core().columns.toSeq == Seq("doc_id", "status", "dup_of"))
+      val missing = kind.payload.fieldNames.last
+      for ((what, call) <- Seq[(String, () => DataFrame)](
+          s"${kind.widthKey} = $badWidth" -> (() => core(w = badWidth)),
+          "flips = 2" -> (() => core(flips = 2)),
+          s"an index without $missing" -> (() => core(index = frame.drop(missing))),
+          s"an incoming index without $missing" -> (() => core(incoming = frame.drop(missing))),
+          "idCol = status" -> (() => core(idCol = "status"))))
+        withClue(s"${kind.name}, $what: ")(intercept[IllegalArgumentException](call()))
+    }
+  }
+
   test("store reads run no schema-inference job; empty and int-id stores read correctly") {
     val none = docs.filter($"doc_id" < 0L)
     val sems = emb.filter($"vec_id" < 0L)
@@ -187,7 +206,7 @@ class StoreProbeSpec extends SparkSpec {
     def rows(df: DataFrame) = df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
     val got = Similarity.deltaSemNearDupFromStore(spark, path,
       batch.select("vec_id"), idx, "vec_id", threshold = 0.9)
-    val want = Similarity.deltaSemNearDupFromStorePruned(spark, path,
+    val want = IndexStore.prunedProbe(spark, IndexStore.Semantic, path,
       batch.select("vec_id"), idx, "vec_id", threshold = 0.9)
     assert(got.schema == want.schema)
     val gotRows = rows(got)
@@ -207,17 +226,17 @@ class StoreProbeSpec extends SparkSpec {
     val got = assertSamePaths(IndexStore.Lexical, warm, ids, idx, "doc_id", 0.6)
     assert(got.size == 30 && got.forall(_.endsWith("|dup_of_corpus|0")), got)
     // a caller's hot-bucket cap below the row bound asks for the pruned path
-    assert(Dedup.nearDupStoreProbe(spark, warm, ids, idx, "doc_id", 0.6,
+    assert(IndexStore.probe(spark, IndexStore.Lexical, warm, ids, idx, "doc_id", 0.6,
       hotBucketCap = 8).admitted.isEmpty)
     // 30 × 400 pairs, each meeting on most of its 32 bands: past the bound
     val hot = store(IndexStore.Lexical, lexIndex(templated(0L, 400)), 32)
     assert(IndexStore.smallDeltaProbe(spark, IndexStore.Lexical, hot, ids, idx,
       "doc_id", 0.6).isEmpty, "a delta past the pair bound must take the pruned path")
-    val probe = Dedup.nearDupStoreProbe(spark, hot, ids, idx, "doc_id", 0.6)
+    val probe = IndexStore.probe(spark, IndexStore.Lexical, hot, ids, idx, "doc_id", 0.6)
     assert(probe.admitted.isEmpty)
     def rows(df: DataFrame) = df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
-    assert(rows(probe.decisions) == rows(Dedup.deltaNearDupFromStorePruned(spark,
-      hot, ids, idx, "doc_id", 0.6)))
+    assert(rows(probe.decisions) == rows(IndexStore.prunedProbe(spark,
+      IndexStore.Lexical, hot, ids, idx, "doc_id", 0.6)))
     assert(rows(probe.decisions) == got)
   }
 
@@ -287,12 +306,7 @@ class StoreProbeSpec extends SparkSpec {
         bandBuckets = 16, idBuckets = 16))
       // a hot-bucket cap below the row bound asks for the reference path
       val probe = named("probe")(IndexStore.probe(spark, kind, root, ids, idx, idCol,
-          threshold, hotBucketCap = 8)(
-        if (kind == IndexStore.Lexical)
-          Dedup.deltaNearDupFromStorePruned(spark, root, ids, idx, idCol, threshold,
-            hotBucketCap = 8)
-        else Similarity.deltaSemNearDupFromStorePruned(spark, root, ids, idx, idCol,
-          threshold)))
+        threshold, hotBucketCap = 8))
       assert(probe.admitted.isEmpty)
       val rows0 = IndexStore.read(spark, kind, root).count()
       val admit = idx.join(probe.decisions.filter($"status" === "new")
